@@ -42,79 +42,66 @@ def entry(spark: SparkSession) -> DataFrame:
 # Round-robin verification window (see PARITY.md "Driver verification
 # rotation"): the driver's correctness check covers the FIRST 50 entries of
 # queries(), so each round the entries most in need of a fresh signal are
-# listed first. After the r12 window (50/50 hash-green, registry 236/236
-# oracle-backed, no entry staler than r08) the r13 window is the rotation
-# output PLUS re-pins at the head for the queries this round changed.
+# listed first: the rotation output PLUS re-pins at the head for the
+# queries the latest change touched.
 VERIFY_PRIORITY: list[str] = [
-    # r13 window: RE-PINS FIRST — the 9 queries r13 touched: the four
-    # perplexity rewrites (LM folded into a per-key term table, the
-    # corpus-sized doc-keyed pre-aggregation exchange removed — kn /
-    # add-k / unigram / held-out), the two vocab-hint drops
-    # (tfidf df, contamination bench grams — sf0.1 plans unchanged,
-    # re-pinned anyway), the gated streaming enrichment dim
-    # (stream_segment_hourly_rollup), and the two delete-path entries
-    # exercising the un-hinted delete_rows victim join. Then the
-    # verbatim tools/rotate_window.py output against CORRECTNESS_r12
-    # in its printed order (queue head = the r12-displaced tail
-    # entries dedup_simhash_hamming_pairs / dedup_cluster_components /
-    # mm_payload_stats / mm_frame_samples), minus the two re-pins it
-    # already contained (text_bigram_perplexity,
-    # text_heldout_perplexity); displaced tail entries
-    # (dedup_minhash_incremental, mm_byte_histogram_features,
-    # q_events_sessionize, q_events_user_daily_activity,
-    # q_events_funnel, q_left_join_customer_order_counts,
-    # q_full_outer_nation_presence) are all hash-green r09 — inside
-    # the "no entry older than r08" staleness target.
-    "text_bigram_kn_perplexity",
-    "text_bigram_perplexity",
-    "text_unigram_perplexity",
-    "text_heldout_perplexity",
-    "text_tfidf_top_terms",
-    "text_benchmark_contamination",
-    "stream_segment_hourly_rollup",
-    "retrieval_bm25_after_delete",
-    "sim_cosine_topk_ivf_after_delete",
-    "dedup_simhash_hamming_pairs",
-    "dedup_cluster_components",
-    "mm_payload_stats",
-    "mm_frame_samples",
-    "dedup_embedding_cosine_pairs",
-    "dedup_ngram_jaccard_blocked",
-    "dedup_embedding_ivf_blocked",
-    "q01_pricing_summary",
-    "q03_top_unshipped",
-    "q04_order_priority",
-    "q05_regional_revenue",
-    "q06_forecast_revenue",
-    "q10_top_customers",
-    "q_semi_customers_with_open_orders",
-    "q_anti_customers_without_open_orders",
-    "q_window_top3_parts_per_brand",
-    "q_window_supplier_rank",
-    "q_window_running_revenue",
-    "q_rollup_revenue",
-    "q_cube_order_status",
-    "q_pivot_revenue_by_status",
-    "q_union_active_parties",
-    "q_except_only_open_customers",
-    "q_intersect_both_status_customers",
-    "q_distinct_agg",
-    "q_filter_predicates",
-    "q_topk_orders_by_value",
-    "q_scalar_string_funcs",
-    "q_scalar_date_math_funcs",
-    "q_events_hourly",
-    "q_customer_value_deciles",
-    "q_event_type_affinity",
-    "sim_cosine_topk_pq",
-    "sim_cosine_topk_ivf_pq",
-    "q_customer_rfm_segments",
-    "q_model_gains_table",
-    "stream_click_purchase_left_outer",
-    "stream_click_purchase_right_outer",
-    "stream_click_purchase_full_outer",
-    "graph_label_propagation",
-    "q_events_user_ewma",
+    # RE-PINS FIRST — the two BPE queries whose Spark side was rewritten
+    # (each word an array of symbols, merges applied by an `aggregate`
+    # fold instead of island windows, anti-joins and per-round
+    # checkpoints; oracles unchanged). Then the verbatim
+    # tools/rotate_window.py output against CORRECTNESS_r13 in its printed
+    # order; the displaced tail entries (q_segment_bitmap_overlap,
+    # dedup_sorted_neighborhood_pairs) are hash-green r10.
+    "text_bpe_learn_merges",
+    "text_bpe_apply_merges",
+    "dedup_minhash_incremental",
+    "mm_byte_histogram_features",
+    "q_events_sessionize",
+    "q_events_user_daily_activity",
+    "q_events_funnel",
+    "q_left_join_customer_order_counts",
+    "q_full_outer_nation_presence",
+    "q_window_lead_ntile",
+    "q_events_json_extract",
+    "pack_documents_greedy",
+    "pack_documents_efficiency",
+    "pack_documents_consolidated",
+    "split_documents_train_test",
+    "sample_documents_stratified",
+    "sample_documents_quality_weighted",
+    "rebalance_documents_by_lang",
+    "emb_random_projection",
+    "q_events_trailing_hour",
+    "q_unpivot_lineitem_metrics",
+    "q_null_safe_join",
+    "q_window_value_functions",
+    "q_string_agg_statuses",
+    "q_events_hourly_gapfill",
+    "q_events_weekly_retention",
+    "q_order_value_histogram",
+    "q_revenue_month_over_month",
+    "q_supplier_balance_zscore",
+    "q_priority_share_of_total",
+    "q_part_size_price_correlation",
+    "q_events_dau_wau_stickiness",
+    "q_customer_reorder_gaps",
+    "q_user_journey_paths",
+    "q_supplier_balance_mad",
+    "q_events_error_spikes",
+    "q_snapshot_diff_orders",
+    "sim_cosine_topk_ivf_trained",
+    "sim_cosine_topk_ivf_pq_from_index",
+    "sim_cosine_topk_ivf_pq_refine",
+    "sim_cosine_topk_ivf_incremental",
+    "stream_ivf_index_maintenance",
+    "pii_redact_customers",
+    "text_bpe_token_stats",
+    "q_approx_sketches",
+    "sketch_countmin_user_counts",
+    "q_open_orders_daily",
+    "q_table_content_digest",
+    "q_fk_orphan_audit",
+    "q_segment_user_bitmap_distinct",
 ]
 
 

@@ -10,25 +10,30 @@ merge list IS the tokenizer artifact.
 
 The sequential greedy-merge semantics inside a word ("aaa" + merge (a,a) →
 ["aa","a"], not ["a","aa"] or overlap) is the part engines get wrong: it
-looks like a per-word loop. It is window-expressible: within each maximal
-run of CONSECUTIVE matching positions, greedy non-overlapping = every other
-position starting from the first — i.e. odd parity of the row number inside
-the island (islands via the pos − row_number() gaps-and-islands trick). So
-the whole training loop stays declarative: no UDF, no collect; the oracle
-replays K unrolled rounds of identical SQL.
+looks like a per-word loop, and on the Spark side it IS one — each word is
+an array of symbols and a merge is one `aggregate` fold over it, whose state
+(out, prev) holds the symbols emitted so far and the one still pending; a
+pending `a` followed by `b` emits `a||b` and leaves nothing pending. The
+DuckDB oracle states the same rewrite with windows: within each maximal run
+of CONSECUTIVE match positions it takes every other position from the first
+(odd row-number parity inside the island, islands via the pos − row_number()
+gaps-and-islands trick). The two agree: for a ≠ b two matches can never be
+adjacent, so every island has one element and both take every match; for
+a = b an island is a run of a's and both take every other pair from its
+left end. No UDF, no collect; the oracle replays K unrolled rounds of
+identical SQL.
 
 Scale shape: pair counting is the only corpus-proportional step (one keyed
 aggregate per round, map-side combined; at real scale the word-frequency
-table is Zipf-truncated exactly as here). The merge rewrite touches the
-long-form symbol table — rows shrink every round — keyed by word; the top
-pair attaches via a one-row broadcast, never a collect. Lineage is
-localCheckpoint-truncated per round (house discipline for iterative plans,
-cf. components.connected_components).
+table is Zipf-truncated exactly as here). The merge rewrite is a projection
+over the word table, one row per word; the top pair attaches via a one-row
+broadcast, never a collect. Lineage is localCheckpoint-truncated per round
+(house discipline for iterative plans, cf. components.connected_components).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from csv_parquet_s3_spark.operators.registry import register
@@ -122,58 +127,54 @@ def _bpe_oracle() -> str:
     return "WITH" + ",".join(blocks) + "\n    " + finals
 
 
-def _merge_round(s: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """One BPE round over the long-form symbol table (word, wn, pos, sym):
-    returns (top-pair frame with 1 row, rewritten symbol table)."""
-    wp = W.partitionBy("word").orderBy("pos")
-    pairs = (
-        s.withColumn("nxt", F.lead("sym").over(wp))
-        .filter(F.col("nxt").isNotNull())
-        .groupBy(F.col("sym").alias("a"), F.col("nxt").alias("b"))
+def _chars(word: str) -> Column:
+    """The word column as an array of one-character symbols."""
+    return F.expr(
+        f"transform(sequence(1, length({word})), i -> substr({word}, i, 1))"
+    )
+
+
+def _top_pair(s: DataFrame) -> DataFrame:
+    """The most frequent adjacent symbol pair (a, b, cnt) over the word table
+    (wn, syms), weighted by word frequency: a 1-row frame, ties broken on
+    (a, b)."""
+    pairs = F.zip_with(
+        "syms",
+        F.slice("syms", 2, F.size("syms")),
+        lambda x, y: F.struct(x.alias("a"), y.alias("b")),
+    )
+    return (
+        s.select("wn", F.explode(pairs).alias("p"))
+        .filter(F.col("p.b").isNotNull())
+        .groupBy("p.a", "p.b")
         .agg(F.sum("wn").alias("cnt"))
+        .orderBy(F.desc("cnt"), "a", "b")
+        .limit(1)
     )
-    top = pairs.orderBy(F.desc("cnt"), "a", "b").limit(1)
-    mk = (
-        s.withColumn("nxt", F.lead("sym").over(wp))
-        .crossJoin(F.broadcast(top))
-        .withColumn(
-            "hit",
-            F.when(
-                (F.col("sym") == F.col("a")) & (F.col("nxt") == F.col("b")), 1
-            ).otherwise(0),
+
+
+def _merge_pair(syms: Column, a: Column, b: Column) -> Column:
+    """`syms` with every (a, b) pair merged greedily, left to right, without
+    overlap: a fold whose state is the output so far plus the one pending
+    symbol `prev`; a pending `a` followed by `b` emits `a||b`."""
+    none = F.lit(None).cast("string")
+
+    def flush(st: Column) -> Column:
+        return F.when(st["prev"].isNull(), st["out"]).otherwise(
+            F.concat(st["out"], F.array(st["prev"]))
         )
-    )
-    isl = mk.withColumn(
-        "grp",
-        F.col("pos")
-        - F.row_number().over(W.partitionBy("word", "hit").orderBy("pos")),
-    ).withColumn(
-        "take",
-        F.when(
-            F.col("hit") == 1,
-            F.row_number().over(W.partitionBy("word", "grp", "hit").orderBy("pos"))
-            % 2,
-        ).otherwise(0),
-    )
-    consumed = isl.filter(F.col("take") == 1).select(
-        F.col("word").alias("cw"), (F.col("pos") + 1).alias("cp")
-    )
-    rebuilt = (
-        isl.join(
-            consumed,
-            (F.col("word") == F.col("cw")) & (F.col("pos") == F.col("cp")),
-            "left_anti",
-        )
-        .select(
-            "word",
-            "wn",
-            F.row_number().over(wp).alias("pos"),
-            F.when(F.col("take") == 1, F.concat("a", "b"))
-            .otherwise(F.col("sym"))
-            .alias("sym"),
-        )
-    )
-    return top, rebuilt
+
+    def step(st: Column, x: Column) -> Column:
+        return F.when(
+            (st["prev"] == a) & (x == b),
+            F.struct(
+                F.concat(st["out"], F.array(F.concat(a, b))).alias("out"),
+                none.alias("prev"),
+            ),
+        ).otherwise(F.struct(flush(st).alias("out"), x.alias("prev")))
+
+    start = F.struct(F.array().cast("array<string>").alias("out"), none.alias("prev"))
+    return F.aggregate(syms, start, step, flush)
 
 
 @register("text_bpe_learn_merges", oracle=_bpe_oracle())
@@ -185,7 +186,7 @@ def text_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts see round r-1's merges, so learned symbols compose (e.g. 'e'+'s'
     then 'es'+'t'). Ties break by (count DESC, pair lexicographic) —
     deterministic on both engines; the oracle unrolls the same {BPE_MERGES}
-    rounds as chained CTEs with the identical island-parity greedy merge.
+    rounds as chained CTEs, stating the same greedy merge as island parity.
     """
     docs = load_table(spark, sf_dir, "documents")
     words = (
@@ -199,21 +200,10 @@ def text_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("wn"), "word")
         .limit(BPE_TOP_WORDS)
     )
-    s = words.select(
-        "word",
-        "wn",
-        F.explode(F.expr("sequence(1, length(word))")).alias("pos"),
-    ).select(
-        "word",
-        "wn",
-        F.col("pos").cast("bigint").alias("pos"),
-        F.expr("substr(word, CAST(pos AS INT), 1)").alias("sym"),
-    )
-    s = s.transform(materialize)
+    s = words.select("wn", _chars("word").alias("syms")).transform(materialize)
     merges = None
     for r in range(1, BPE_MERGES + 1):
-        top, s = _merge_round(s)
-        s = s.transform(materialize)
+        top = _top_pair(s)
         row = top.select(
             F.lit(r).alias("merge_rank"),
             F.col("a").alias("left_sym"),
@@ -221,14 +211,21 @@ def text_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cnt").cast("bigint").alias("pair_count"),
         )
         merges = row if merges is None else merges.unionByName(row)
+        if r < BPE_MERGES:  # the last round's rewrite would have no reader
+            merged = _merge_pair(F.col("syms"), F.col("a"), F.col("b"))
+            s = (
+                s.crossJoin(F.broadcast(top))
+                .select("wn", merged.alias("syms"))
+                .transform(materialize)
+            )
     return merges
 
 
 # ---------------------------------------------------------------------------
 # Apply the learned merges: encode the corpus with the trained tokenizer.
 # Real tokenizers encode per DISTINCT WORD and cache (Zipf makes the
-# vocabulary tiny next to the corpus), so the merge loop here runs over the
-# distinct-word symbol table and a final join prices every document —
+# vocabulary tiny next to the corpus), so the merges are applied to the
+# distinct-word table and a final join prices every document —
 # the corpus itself is touched exactly twice (tokenize, then join+sum).
 # ---------------------------------------------------------------------------
 
@@ -309,51 +306,6 @@ def _bpe_apply_oracle() -> str:
     )
 
 
-def _apply_merge(v: DataFrame, top: DataFrame) -> DataFrame:
-    """Apply one trained merge (1-row frame (a, b)) to the vocab symbol
-    table (word, pos, sym) — training's rewrite with the pair fixed."""
-    wp = W.partitionBy("word").orderBy("pos")
-    mk = (
-        v.withColumn("nxt", F.lead("sym").over(wp))
-        .crossJoin(F.broadcast(top))
-        .withColumn(
-            "hit",
-            F.when(
-                (F.col("sym") == F.col("a")) & (F.col("nxt") == F.col("b")), 1
-            ).otherwise(0),
-        )
-    )
-    isl = mk.withColumn(
-        "grp",
-        F.col("pos")
-        - F.row_number().over(W.partitionBy("word", "hit").orderBy("pos")),
-    ).withColumn(
-        "take",
-        F.when(
-            F.col("hit") == 1,
-            F.row_number().over(W.partitionBy("word", "grp", "hit").orderBy("pos"))
-            % 2,
-        ).otherwise(0),
-    )
-    consumed = isl.filter(F.col("take") == 1).select(
-        F.col("word").alias("cw"), (F.col("pos") + 1).alias("cp")
-    )
-    return (
-        isl.join(
-            consumed,
-            (F.col("word") == F.col("cw")) & (F.col("pos") == F.col("cp")),
-            "left_anti",
-        )
-        .select(
-            "word",
-            F.row_number().over(wp).alias("pos"),
-            F.when(F.col("take") == 1, F.concat("a", "b"))
-            .otherwise(F.col("sym"))
-            .alias("sym"),
-        )
-    )
-
-
 @register("text_bpe_apply_merges", oracle=_bpe_apply_oracle())
 def text_bpe_apply_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode every document with the merges learned by
@@ -362,39 +314,36 @@ def text_bpe_apply_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     fertility number that decides whether a tokenizer is worth shipping
     for a corpus.
 
-    Scale shape: the merge loop rewrites the DISTINCT-WORD symbol table
-    (Zipf-bounded, not corpus-bounded) — the encode-with-cache trick every
-    production tokenizer uses; the corpus appears only in the initial
-    tokenize and the final word→doc join+sum (two shuffles on word/doc).
-    Merges attach as one-row broadcasts in rank order; greedy
-    non-overlapping rewrite is the same island-parity window as training.
+    Scale shape: the merges rewrite the DISTINCT-WORD table (Zipf-bounded,
+    not corpus-bounded) — the encode-with-cache trick every production
+    tokenizer uses; the corpus appears only in the initial tokenize and the
+    final word→doc join+sum (two shuffles on word/doc). The ranked merges
+    attach as one broadcast row and all {BPE_MERGES} apply in one projection:
+    an outer fold over the merge list whose step is training's greedy fold.
+    Fewer than {BPE_MERGES} learned merges give no rows, as in the oracle.
     """
     docs = load_table(spark, sf_dir, "documents")
-    merges = text_bpe_learn_merges(spark, sf_dir).transform(materialize)
+    ms = text_bpe_learn_merges(spark, sf_dir).agg(
+        F.sort_array(
+            F.collect_list(F.struct("merge_rank", "left_sym", "right_sym"))
+        ).alias("ms")
+    )
     doc_toks = docs.select(
         "doc_id",
         F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("word"),
     )
-    v = (
+    encoded = F.aggregate(
+        "ms",
+        _chars("word"),
+        lambda syms, m: _merge_pair(syms, m["left_sym"], m["right_sym"]),
+    )
+    wlen = (
         doc_toks.select("word")
         .distinct()
-        .select(
-            "word",
-            F.explode(F.expr("sequence(1, length(word))")).alias("pos"),
-        )
-        .select(
-            "word",
-            F.col("pos").cast("bigint").alias("pos"),
-            F.expr("substr(word, CAST(pos AS INT), 1)").alias("sym"),
-        )
-        .transform(materialize)
+        .crossJoin(F.broadcast(ms))
+        .filter(F.size("ms") == BPE_MERGES)
+        .select("word", F.size(encoded).alias("n_syms"))
     )
-    for r in range(1, BPE_MERGES + 1):
-        top = merges.filter(F.col("merge_rank") == r).select(
-            F.col("left_sym").alias("a"), F.col("right_sym").alias("b")
-        )
-        v = _apply_merge(v, top).transform(materialize)
-    wlen = v.groupBy("word").agg(F.count("*").alias("n_syms"))
     return (
         doc_toks.join(wlen, "word")
         .groupBy("doc_id")

@@ -154,28 +154,42 @@ def test_heldout_scores_only_test_split(spark):
 
 def test_bpe_greedy_merge_semantics(spark):
     """'aaa' + merge (a,a) must yield ['aa','a'] (greedy left-to-right,
-    non-overlapping) — the island-parity window trick's contract."""
-    from csv_parquet_s3_spark.operators.tokenizer import _merge_round
+    non-overlapping) — the merge fold's contract — and pair counting must
+    weigh adjacent pairs by word frequency, skipping one-symbol words."""
+    from csv_parquet_s3_spark.operators.tokenizer import _merge_pair, _top_pair
 
+    words = ["aaa", "abab", "aaaa", "aba", "abcd", "a"]
     s = spark.createDataFrame(
-        [("aaa", 1, p + 1, "a") for p in range(3)]
-        + [("abab", 1, 1, "a"), ("abab", 1, 2, "b"),
-           ("abab", 1, 3, "a"), ("abab", 1, 4, "b")],
-        "word: string, wn: long, pos: long, sym: string",
+        [(w, 1, list(w)) for w in words[:2]] + [("z", 9, ["z"])],
+        "word: string, wn: long, syms: array<string>",
     )
-    top, rebuilt = _merge_round(s)
-    t = top.collect()[0]
-    # pair counts: (a,a)=2 from 'aaa'; (a,b)=2 from 'abab'; (b,a)=1.
+    t = _top_pair(s).collect()
+    # pair counts: (a,a)=2 from 'aaa'; (a,b)=2 from 'abab'; (b,a)=1; the
+    # one-symbol word 'z' (wn 9) has no pair despite outweighing the rest.
     # tie (a,a) vs (a,b) breaks lexicographically on b: 'a' < 'b'.
-    assert (t["a"], t["b"], t["cnt"]) == ("a", "a", 2)
-    got = {
-        w: [r["sym"] for r in rows]
-        for w, rows in __import__("itertools").groupby(
-            rebuilt.orderBy("word", "pos").collect(), key=lambda r: r["word"]
-        )
-    }
-    assert got["aaa"] == ["aa", "a"]
-    assert got["abab"] == ["a", "b", "a", "b"]
+    assert [(r["a"], r["b"], r["cnt"]) for r in t] == [("a", "a", 2)]
+
+    w = spark.createDataFrame(
+        [(x, list(x)) for x in words], "word: string, syms: array<string>"
+    )
+
+    def merged(a, b):
+        return {
+            r["word"]: r["m"]
+            for r in w.select(
+                "word", _merge_pair(F.col("syms"), F.lit(a), F.lit(b)).alias("m")
+            ).collect()
+        }
+
+    aa, ab = merged("a", "a"), merged("a", "b")
+    assert aa["aaa"] == ["aa", "a"]
+    assert aa["abab"] == ["a", "b", "a", "b"]
+    assert aa["aaaa"] == ["aa", "aa"]
+    assert aa["a"] == ["a"]
+    assert ab["aba"] == ["ab", "a"]
+    # symbols after a merge are kept, in order
+    assert ab["abcd"] == ["ab", "c", "d"]
+    assert ab["a"] == ["a"]
 
 
 def test_bpe_merges_compose(spark):
@@ -195,3 +209,35 @@ def test_bpe_merges_compose(spark):
         and len(r["left_sym"] + r["right_sym"]) > 2
         for r in rows
     ) or all(len(m) == 2 for m in merged)
+
+
+def test_bpe_single_char_corpus_learns_and_applies_nothing(spark, tmp_path):
+    """A corpus whose every word is one character has no pair to merge: both
+    BPE queries return no rows in Spark and in their DuckDB oracles (apply
+    needs all five ranked merges, on both engines)."""
+    import duckdb
+
+    from tests.conftest import SF_CORRECTNESS
+
+    from csv_parquet_s3_spark.operators import ORACLES, QUERIES
+
+    docs = f"{tmp_path}/documents.parquet"
+    con = duckdb.connect()
+    # DuckDB's optimizer spends about 30 s on the apply oracle's inlined CTE
+    # chain; results do not depend on it, and without it the query takes 5 s.
+    con.sql("PRAGMA disable_optimizer")
+    con.sql(
+        "COPY (SELECT * REPLACE (array_to_string(list_transform("
+        "string_split(text, ' '), x -> left(x, 1)), ' ') AS text) "
+        f"FROM '{SF_CORRECTNESS}/documents.parquet') TO '{docs}' (FORMAT parquet)"
+    )
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
+    n_words = con.sql(
+        "SELECT count(*) FROM (SELECT unnest(string_split(text, ' ')) AS w "
+        "FROM documents) WHERE w <> ''"
+    ).fetchone()[0]
+    assert n_words > 0
+    for name in ("text_bpe_learn_merges", "text_bpe_apply_merges"):
+        assert QUERIES[name](spark, str(tmp_path)).count() == 0, name
+        assert con.sql(ORACLES[name]).fetchall() == [], name
+    con.close()
