@@ -306,3 +306,162 @@ def test_control_char_only_cells_null_like_java_trim(spark, tmp_path):
     df, _ = parse_csv(spark, str(path), specs)
     got = {r.id: r.name for r in df.collect()}
     assert got == {0: None, 1: None, 2: None, 3: None, 4: None, 5: "kept\x0c"}
+
+
+def _f1_row(i: int) -> str:
+    return f"{i},n{i},1.5,2020-01-01,{i},2023-01-01 00:00:00,9.99"
+
+
+def _ids(path) -> list:
+    """The `id` column in file order (pyarrow, so no Spark partitioning)."""
+    import pyarrow.parquet as pq
+
+    return pq.read_table(str(path)).column("id").to_pylist()
+
+
+def test_hidden_named_csvs_fail_with_their_cause(spark, tmp_path, f1_specs):
+    """Spark's file source never reads a name starting with '_' or '.':
+    such a file is reported failed, never converted to an empty output."""
+    csv_dir, out_dir = tmp_path / "csv", tmp_path / "out"
+    csv_dir.mkdir()
+    _write_csv(csv_dir / "_under.csv", [_f1_row(1)])
+    _write_csv(csv_dir / ".dot.csv", [_f1_row(2)])
+    _write_csv(csv_dir / "seen.csv", [_f1_row(3)])
+    report = convert_csv_to_parquet(spark, str(csv_dir), str(out_dir), specs=f1_specs)
+    assert report.converted == [str(out_dir / "seen.parquet")]
+    assert sorted(report.failed) == [str(csv_dir / ".dot.csv"), str(csv_dir / "_under.csv")]
+    for src, msg in report.failed.items():
+        assert msg.startswith(src + ": ") and "hidden" in msg
+    assert sorted(p.name for p in out_dir.iterdir()) == ["seen.parquet"]
+
+
+def test_header_only_and_zero_byte_csvs_yield_typed_empty_files(spark, tmp_path, f1_specs):
+    csv_dir, out_dir = tmp_path / "csv", tmp_path / "out"
+    csv_dir.mkdir()
+    (csv_dir / "header_only.csv").write_text("id,name,amount,birth_date,large_count,event_timestamp,total\n")
+    (csv_dir / "zero.csv").write_bytes(b"")
+    _write_csv(csv_dir / "rows.csv", [_f1_row(1)])
+    report = convert_csv_to_parquet(spark, str(csv_dir), str(out_dir), specs=f1_specs)
+    assert report.failed == {}
+    assert [p.rsplit("/", 1)[1] for p in report.converted] == [
+        "header_only.parquet", "rows.parquet", "zero.parquet",
+    ]
+    want = to_struct_type(f1_specs)
+    for name, rows in (("header_only", 0), ("zero", 0), ("rows", 1)):
+        df = spark.read.parquet(str(out_dir / f"{name}.parquet"))
+        assert df.count() == rows
+        assert [(f.name, f.dataType) for f in df.schema] == [(f.name, f.dataType) for f in want]
+
+
+def test_special_characters_in_names_map_to_their_outputs(spark, tmp_path, f1_specs):
+    """`_metadata.file_name` is URI-encoded (`a b.csv` arrives as
+    `a%20b.csv`); each output still takes its own source's name and rows."""
+    csv_dir, out_dir = tmp_path / "csv", tmp_path / "out"
+    csv_dir.mkdir()
+    names = ["a b", "p%20q", "50%", "x+y", "a%2Bb", "é"]
+    for i, name in enumerate(names):
+        _write_csv(csv_dir / f"{name}.csv", [_f1_row(i)])
+    report = convert_csv_to_parquet(spark, str(csv_dir), str(out_dir), specs=f1_specs)
+    assert report.failed == {}
+    assert sorted(report.converted) == sorted(str(out_dir / f"{n}.parquet") for n in names)
+    for i, name in enumerate(names):
+        assert _ids(out_dir / f"{name}.parquet") == [i]
+
+
+def test_row_order_is_csv_order_even_across_splits(spark, tmp_path, f1_specs):
+    """Each output keeps its CSV's row order, also when a file is read as
+    several input splits (lowered split sizes force that here); a bad
+    cell in the last split of a file still fails that file."""
+    csv_dir, out_dir = tmp_path / "csv", tmp_path / "out"
+    csv_dir.mkdir()
+    big = [(i * 7919) % 3000 for i in range(3000)]  # a permutation: no sort key
+    _write_csv(csv_dir / "big.csv", [_f1_row(i) for i in big])
+    _write_csv(csv_dir / "small.csv", [_f1_row(i) for i in (5, 3, 9, 1)])
+    _write_csv(csv_dir / "split_bad.csv", [_f1_row(i) for i in range(900)] + ["x,y,,,,,"])
+    confs = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k in confs:
+            spark.conf.set(k, "16k")
+        splits = spark.read.text(str(csv_dir / "big.csv")).rdd.getNumPartitions()
+        assert splits > 4  # the precondition: big.csv spans several splits
+        report = convert_csv_to_parquet(spark, str(csv_dir), str(out_dir), specs=f1_specs)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    bad = str(csv_dir / "split_bad.csv")
+    assert report.failed == {bad: f"{bad}: unparseable value(s) in strict field(s) ['id']"}
+    assert _ids(out_dir / "big.parquet") == big
+    assert _ids(out_dir / "small.parquet") == [5, 3, 9, 1]
+
+
+def test_bad_file_message_lists_every_bad_strict_field(spark, tmp_path, f1_specs):
+    csv_dir, out_dir = tmp_path / "csv", tmp_path / "out"
+    csv_dir.mkdir()
+    _write_csv(csv_dir / "bad.csv", [
+        "1,x,,,,2023-13-45 99:00:00,",  # event_timestamp
+        "oops,x,junk,,,,",  # id (amount is lenient)
+        "3,x,,1990-02-30,,,",  # birth_date
+        _f1_row(4),
+    ])
+    _write_csv(csv_dir / "good.csv", [_f1_row(5)])
+    report = convert_csv_to_parquet(spark, str(csv_dir), str(out_dir), specs=f1_specs)
+    src = str(csv_dir / "bad.csv")
+    assert report.failed == {
+        src: f"{src}: unparseable value(s) in strict field(s) ['id', 'birth_date', 'event_timestamp']"
+    }
+    assert sorted(p.name for p in out_dir.iterdir()) == ["good.parquet"]
+
+
+def test_concurrent_per_file_conversions_keep_their_reports(spark, tmp_path, f1_specs):
+    """Two calls from two threads in one session: each report and output
+    belongs to its own directory."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def job(tag: str, base: int):
+        csv_dir = tmp_path / f"csv_{tag}"
+        csv_dir.mkdir()
+        for i in range(3):
+            _write_csv(csv_dir / f"{tag}{i}.csv", [_f1_row(base + i)])
+        _write_csv(csv_dir / f"{tag}_bad.csv", [f"{tag},x,,,,,"])
+        out = tmp_path / f"out_{tag}"
+        return csv_dir, out, convert_csv_to_parquet(spark, str(csv_dir), str(out), specs=f1_specs)
+
+    with ThreadPoolExecutor(2) as pool:
+        results = list(pool.map(job, ["a", "b"], [0, 100], timeout=300))
+    for (csv_dir, out, report), tag, base in zip(results, ["a", "b"], [0, 100]):
+        assert report.converted == [str(out / f"{tag}{i}.parquet") for i in range(3)]
+        assert list(report.failed) == [str(csv_dir / f"{tag}_bad.csv")]
+        assert "['id']" in report.failed[str(csv_dir / f"{tag}_bad.csv")]
+        for i in range(3):
+            assert _ids(out / f"{tag}{i}.parquet") == [base + i]
+
+
+def _tree_bytes(root) -> dict:
+    return {
+        str(p.relative_to(root)): p.read_bytes() for p in sorted(root.rglob("*")) if p.is_file()
+    }
+
+
+def test_strict_dir_failure_leaves_out_dir_untouched(spark, tmp_path, f1_specs):
+    """A strict failure discards its staging output: an existing `out_dir`
+    stays byte-identical and no `._staging-*` sibling is left. A later
+    clean conversion replaces `out_dir`."""
+    csv_dir, out_dir = tmp_path / "csv", tmp_path / "out"
+    csv_dir.mkdir()
+    _write_csv(csv_dir / "a.csv", [_f1_row(1), _f1_row(2)])
+    convert_csv_dir(spark, str(csv_dir), str(out_dir), specs=f1_specs)
+    before = _tree_bytes(out_dir)
+
+    _write_csv(csv_dir / "b.csv", [_f1_row(3), "4,x,,2020-02-31,,,"])
+    with pytest.raises(IngestError) as err:
+        convert_csv_dir(spark, str(csv_dir), str(out_dir), specs=f1_specs, strict=True)
+    glob = str(csv_dir / "*.csv")
+    assert str(err.value) == f"{glob}: unparseable value(s) in strict field(s) ['birth_date']"
+    assert _tree_bytes(out_dir) == before
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["csv", "out"]
+
+    _write_csv(csv_dir / "b.csv", [_f1_row(3)])
+    df = convert_csv_dir(spark, str(csv_dir), str(out_dir), specs=f1_specs, strict=True)
+    assert sorted(r.id for r in df.collect()) == [1, 2, 3]
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["csv", "out"]
