@@ -45,15 +45,19 @@ def entry(spark: SparkSession) -> DataFrame:
 # listed first: the rotation output PLUS re-pins at the head for the
 # queries the latest change touched.
 VERIFY_PRIORITY: list[str] = [
-    # RE-PINS FIRST — the two BPE queries whose Spark side was rewritten
-    # (each word an array of symbols, merges applied by an `aggregate`
-    # fold instead of island windows, anti-joins and per-round
-    # checkpoints; oracles unchanged). Then the verbatim
-    # tools/rotate_window.py output against CORRECTNESS_r13 in its printed
-    # order; the displaced tail entries (q_segment_bitmap_overlap,
-    # dedup_sorted_neighborhood_pairs) are hash-green r10.
-    "text_bpe_learn_merges",
-    "text_bpe_apply_merges",
+    # RE-PINS FIRST — the seven IVF queries whose serve now always restricts
+    # artifact scans to the probed lists through the broadcast-probes join
+    # (dynamic partition pruning). Then the verbatim tools/rotate_window.py
+    # output against CORRECTNESS_r13 in its printed order; the displaced
+    # tail entries (q_segment_bitmap_overlap, dedup_sorted_neighborhood_pairs)
+    # are hash-green r10.
+    "sim_cosine_topk_ivf_trained",
+    "sim_cosine_topk_ivf_pq_from_index",
+    "sim_cosine_topk_ivf_pq_refine",
+    "sim_cosine_topk_ivf_sq8_from_index",
+    "sim_cosine_topk_ivf_incremental",
+    "sim_cosine_topk_ivf_after_delete",
+    "stream_ivf_index_maintenance",
     "dedup_minhash_incremental",
     "mm_byte_histogram_features",
     "q_events_sessionize",
@@ -89,11 +93,6 @@ VERIFY_PRIORITY: list[str] = [
     "q_supplier_balance_mad",
     "q_events_error_spikes",
     "q_snapshot_diff_orders",
-    "sim_cosine_topk_ivf_trained",
-    "sim_cosine_topk_ivf_pq_from_index",
-    "sim_cosine_topk_ivf_pq_refine",
-    "sim_cosine_topk_ivf_incremental",
-    "stream_ivf_index_maintenance",
     "pii_redact_customers",
     "text_bpe_token_stats",
     "q_approx_sketches",

@@ -4,9 +4,26 @@ Key set mirrors the reference's ``application.properties``
 (`/root/reference/src/main/resources/application.properties:1-8`):
 ``bucketName``, ``prefix``, ``SourceFilePath``, ``ParquetFilePath``,
 ``s3.accessKey``, ``s3.secretKey``, ``s3.endpoint``, ``s3.region``.
+
+:func:`env_int` reads the engine's integer env knobs.
 """
 
 from __future__ import annotations
+
+import os
+
+
+def env_int(name: str, default: int | None = None) -> int | None:
+    """The integer value of env var ``name``, or ``default`` when it is
+    unset or empty. A value that is not an integer raises a ``ValueError``
+    naming the variable and the value."""
+    raw = os.environ.get(name)
+    if not raw:
+        return default
+    try:
+        return int(raw)
+    except ValueError:
+        raise ValueError(f"{name}={raw!r}: expected an integer") from None
 
 
 def load_properties(path: str) -> dict[str, str]:

@@ -81,23 +81,6 @@ def _read_lists(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _probe_mode() -> str:
-    """How serving restricts artifact scans to the probed lists.
-
-    - ``dpp`` (default): collect-free — broadcast-join the probes frame and
-      let dynamic partition pruning skip unprobed list directories inside
-      the SAME job (no driver round-trip; the r08 probe-collect cost is
-      gone).
-    - ``collect``: the bounded driver round-trip (≤ nprobe × |queries|
-      ints) → a literal ``In(list_id, …)`` static partition filter. Kept
-      A/B-able because DPP is an optimizer heuristic: on an engine build
-      where it regressed, flipping SPARK_GRAFT_IVF_PROBE restores the
-      explicit plan without a code change.
-    Read per call so a bench can interleave both modes in one session.
-    """
-    return os.environ.get("SPARK_GRAFT_IVF_PROBE", "dpp")
-
-
 def _mark_selective(df: DataFrame) -> DataFrame:
     """Re-attach an (always-true) selective predicate after materialize():
     Spark's DynamicPartitionPruning rule only inserts the pruning subquery
@@ -109,13 +92,12 @@ def _mark_selective(df: DataFrame) -> DataFrame:
 
 
 def _restrict_to_probed(tbl: DataFrame, probes: DataFrame) -> DataFrame:
-    """Restrict a list-clustered artifact scan to the probed lists, mode-
-    switched (:func:`_probe_mode`). ``probes`` must carry a ``list_id``
-    column; the returned frame has exactly ``tbl``'s columns (the DPP join
-    uses the DISTINCT probed-list set, so row multiplicity is unchanged)."""
-    if _probe_mode() == "collect":
-        ids = [r.list_id for r in probes.select("list_id").distinct().collect()]
-        return tbl.filter(F.col("list_id").isin(ids))
+    """Restrict a list-clustered artifact scan to the probed lists: the
+    broadcast join of the distinct probed-list set triggers dynamic
+    partition pruning, so unprobed list directories are never read.
+    ``probes`` must carry a ``list_id`` column; the returned frame has
+    exactly ``tbl``'s columns (the set is distinct, so row multiplicity is
+    unchanged)."""
     lists = _mark_selective(probes.select("list_id").distinct())
     return tbl.join(F.broadcast(lists), "list_id")
 
@@ -171,12 +153,9 @@ def topk_from_index(
     """nprobe-pruned cosine top-k for each query vector, from the stored
     index only. With the build's directory-per-list layout the unprobed
     lists' directories are never listed or read — at 100 TB the scan cost
-    is Σ|probed lists|, not the corpus. How the probed-list set reaches
-    the scan is mode-switched (:func:`_probe_mode`): the default joins the
-    broadcast probes frame and lets dynamic partition pruning skip
-    directories inside the same job (collect-free — no driver round-trip);
-    ``collect`` mode pays the bounded ≤ nprobe × |queries|-int round-trip
-    for an explicit static ``In(list_id, …)`` partition filter."""
+    is Σ|probed lists|, not the corpus. The scoring join against the
+    broadcast probes frame lets dynamic partition pruning skip directories
+    inside the same job, with no driver round-trip."""
     cent = spark.read.parquet(f"{index_path}/centroids")
     assign = _read_lists(spark, f"{index_path}/assign")
     q = _with_norm(queries).select(
@@ -196,14 +175,8 @@ def topk_from_index(
         .select("query_id", "qv", "qnorm", "list_id")
         .transform(materialize)
     )
-    if _probe_mode() == "collect":
-        ids = [r.list_id for r in probes.select("list_id").distinct().collect()]
-        pairs = assign.filter(F.col("list_id").isin(ids)).join(
-            F.broadcast(probes), "list_id"
-        )
-    else:
-        # the scoring join IS the DPP trigger — no separate restriction pass
-        pairs = assign.join(F.broadcast(_mark_selective(probes)), "list_id")
+    # the scoring join IS the DPP trigger — no separate restriction pass
+    pairs = assign.join(F.broadcast(_mark_selective(probes)), "list_id")
     scored = (
         pairs.filter(F.col("vec_id") != F.col("query_id"))
         .select(
@@ -1514,9 +1487,8 @@ def _stored_coarse_candidates(
     quantizer-from-index search (PQ, SQ8). The returned probes frame
     (query_id, list_id — materialized, bounded nprobe × |queries| rows) is
     what the caller hands :func:`_restrict_to_probed` so every per-list
-    artifact scan skips the unprobed lists' directories: join-triggered
-    dynamic partition pruning by default, or a collected static
-    ``In(list_id, …)`` in ``collect`` mode (:func:`_probe_mode`)."""
+    artifact scan skips the unprobed lists' directories through
+    join-triggered dynamic partition pruning."""
     cent = spark.read.parquet(f"{index_path}/centroids")
     assign = _read_lists(spark, f"{index_path}/coarse_assign")
     q = _with_norm(queries).select("vec_id", "vd", "norm")
@@ -1534,16 +1506,10 @@ def _stored_coarse_candidates(
         .select(F.col("vec_id").alias("query_id"), "list_id")
         .transform(materialize)
     )
-    if _probe_mode() == "collect":
-        probed = [r.list_id for r in probes.select("list_id").distinct().collect()]
-        cand = probes.join(
-            assign.filter(F.col("list_id").isin(probed)), "list_id"
-        ).select("query_id", "vec_id")
-    else:
-        # the candidate join itself triggers DPP on the assignment scan
-        cand = assign.join(F.broadcast(_mark_selective(probes)), "list_id").select(
-            "query_id", "vec_id"
-        )
+    # the candidate join itself triggers DPP on the assignment scan
+    cand = assign.join(F.broadcast(_mark_selective(probes)), "list_id").select(
+        "query_id", "vec_id"
+    )
     return cand, probes
 
 
@@ -1957,10 +1923,10 @@ def compact_ivf_index(spark: SparkSession, index_path: str) -> None:
     layout that `update_ivf_index`'s upsert rewrite loses (the IVF mirror
     of `compact_bm25_index`). One staged rewrite — after it, every list
     again owns its own ``list_id=N/`` directory and the serving probe's
-    partition pruning (dynamic or static — :func:`_probe_mode`) skips
-    unprobed lists at file-listing time. Correctness never depends on the
-    layout (the serve is hash-identical before and after); this is purely
-    the scan-cost property. Quantizer and search results are untouched."""
+    dynamic partition pruning skips unprobed lists at file-listing time.
+    Correctness never depends on the layout (the serve is hash-identical
+    before and after); this is purely the scan-cost property. Quantizer
+    and search results are untouched."""
     import uuid
 
     from csv_parquet_s3_spark.maintenance import _atomic_swap

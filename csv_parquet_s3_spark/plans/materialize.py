@@ -1,51 +1,38 @@
 """One choke point for "materialize this shared subframe".
 
-The registry leans on ``localCheckpoint()`` to cut replayed lineage when a
-frame feeds two or more downstream branches (ARCHITECTURE.md: the
-shared-subframe rule). ``localCheckpoint`` stores blocks NON-replicated on
-executors: on a single-JVM local[] session that is free, but on a real
-cluster an executor loss (or dynamic-allocation scale-in) makes the query
-FAIL instead of recompute, and each eager call pins storage memory until
-driver GC clears it. Routing every call site through this helper makes the
-trade-off configurable per deployment instead of baked into 100+ sites:
+The registry cuts replayed lineage with an eager checkpoint wherever a
+frame feeds two or more downstream branches or crosses an iteration
+boundary (ARCHITECTURE.md: the shared-subframe rule). Every such site
+calls :func:`materialize`, which follows one rule:
 
-``SPARK_GRAFT_MATERIALIZE`` =
-  ``local``     (default) ``localCheckpoint(eager=True)`` — fastest, fine
-                where executors are stable (local mode, on-demand nodes);
-  ``reliable``  ``checkpoint(eager=True)`` — writes to the reliable
-                checkpoint dir (set ``spark.sparkContext.setCheckpointDir``
-                to durable storage first); survives executor loss;
-  ``persist``   ``persist(MEMORY_AND_DISK)`` — keeps lineage, so lost
-                blocks RECOMPUTE instead of failing; cheapest safe option
-                under dynamic allocation (note: no lineage TRUNCATION, so
-                iterative loops should prefer local/reliable);
-  ``none``      pass-through — for plan-shape debugging only (replays
-                lineage per consumer).
+- the session has a checkpoint directory (``spark.checkpoint.dir``, or
+  ``SparkContext.setCheckpointDir``): ``checkpoint(eager=True)`` writes
+  the blocks there, so a query survives executor loss when the directory
+  is durable storage;
+- otherwise: ``localCheckpoint(eager=True)`` keeps the blocks
+  non-replicated on executors — fastest, and fine wherever executors are
+  stable (local mode, on-demand nodes), but an executor loss fails the
+  query instead of recomputing it.
 
-The mode is read per call, not at import, so tests and batch jobs can flip
-it without re-importing the package.
+Which one a deployment gets is a Spark setting, read per call.
 """
 
 from __future__ import annotations
 
 import contextlib
 import itertools
-import os
 import threading
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
-_VALID = ("local", "reliable", "persist", "none")
-
 # --------------------------------------------------------------------------
 # Pre-checkpoint plan recording. A checkpoint TRUNCATES lineage, so the plan
 # audit (tools/plan_audit.py) cannot see the shuffles/scans INSIDE an
-# iterative operator from the returned frame alone — k-core, PageRank, BPE
-# and the streaming twins used to audit as 0/0/0/0. Because every
-# materialization now flows through this choke point, recording the plan of
-# each frame AS IT IS CHECKPOINTED recovers exactly the per-iteration
-# (pre-truncation) shape the audit was blind to.
+# iterative operator (k-core, PageRank, BPE, the streaming twins) from the
+# returned frame alone. Recording the plan of each frame AS IT IS
+# CHECKPOINTED at this choke point recovers the per-iteration
+# (pre-truncation) shape.
 # --------------------------------------------------------------------------
 _RECORDER: list | None = None
 
@@ -73,59 +60,38 @@ def current_recorder() -> list | None:
 
 def materialize(df: DataFrame) -> DataFrame:
     """Materialize a frame that feeds ≥2 downstream branches (or an
-    iteration boundary), per ``SPARK_GRAFT_MATERIALIZE``."""
-    mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "local")
-    if mode not in _VALID:
-        raise ValueError(
-            f"SPARK_GRAFT_MATERIALIZE={mode!r}: expected one of {_VALID}"
-        )
+    iteration boundary): a reliable checkpoint when the session has a
+    checkpoint directory, a local one otherwise."""
     if _RECORDER is not None:
         from csv_parquet_s3_spark.plans.explain import analyze
 
         _RECORDER.append(analyze(df))
-    if mode == "none":
-        return df
-    # Invocation-scoped pin tracking (r10 advisory; attribution made EXACT
-    # r12 per the r11 advisory): only track when a released_after bracket is
-    # open on THIS thread — the unbracketed path pays nothing.
+    # only track when a released_after bracket is open on THIS thread — the
+    # unbracketed path pays nothing
     track = bool(getattr(_TLS, "stack", None))
     before = persistent_rdd_ids(df.sparkSession) if track else None
-    if mode == "local":
-        out = df.localCheckpoint(eager=True)
-    elif mode == "reliable":
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         out = df.checkpoint(eager=True)
-    else:  # persist
-        from pyspark.storagelevel import StorageLevel
-
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()  # eager, matching the checkpoint modes
+    else:
+        out = df.localCheckpoint(eager=True)
     if track:
         with _BRACKET_LOCK:
             # record into the INNERMOST bracket only: when it exits and
             # releases these pins, an enclosing bracket must not try to
             # release (or be credited with) them again
-            rec = _BRACKETS.get(_TLS.stack[-1])
-            if rec is not None:
-                if mode == "persist":
-                    # exact: CacheManager keys the entry by the frame; exit
-                    # calls out.unpersist(). The registry diff is kept only
-                    # as a SHIELD set (protects this pin from other
-                    # brackets' global sweeps; never used to release).
-                    rec.frames.append(out)
-                    rec.shield.update(persistent_rdd_ids(df.sparkSession) - before)
+            ids = _BRACKETS.get(_TLS.stack[-1])
+            if ids is not None:
+                rid = _pinned_rdd_id(out)
+                if rid is not None:
+                    # exact: the id read from OUT's own LogicalRDD node — a
+                    # concurrent thread's pin landing inside this window
+                    # cannot be mis-attributed to (and freed by) this bracket
+                    ids.add(rid)
                 else:
-                    rid = _pinned_rdd_id(out)
-                    if rid is not None:
-                        # exact: the id read from OUT's own LogicalRDD node
-                        # — a concurrent thread's pin landing inside this
-                        # window can no longer be mis-attributed to (and
-                        # freed by) this bracket.
-                        rec.ids.add(rid)
-                    else:
-                        # plan-introspection fallback (internal API moved):
-                        # registry diff, which can over-attribute a
-                        # concurrent unbracketed pin — documented residual.
-                        rec.ids.update(persistent_rdd_ids(df.sparkSession) - before)
+                    # plan-introspection fallback (internal API moved):
+                    # registry diff, which can over-attribute a concurrent
+                    # unbracketed pin — documented residual
+                    ids.update(persistent_rdd_ids(df.sparkSession) - before)
     return out
 
 
@@ -147,53 +113,34 @@ def _pinned_rdd_id(out: DataFrame) -> int | None:
 # Releasing what materialize() pins. ``localCheckpoint`` persists its blocks
 # at the RDD level (not through the SQL CacheManager), so ``df.unpersist()``
 # never frees them — they linger until driver GC + ContextCleaner get around
-# to it. In a long-lived session (a standing bench, the driver's 236-query
-# sweep, a streaming maintenance loop) that is unbounded block-manager
-# growth: the r09 driver bench showed a monotonic per-rep slowdown signature
-# consistent with exactly this. The helpers below let a harness bracket each
-# query invocation and explicitly unpersist every RDD the invocation pinned,
-# once its terminal action has completed.
+# to it. In a long-lived session (a standing bench, a 236-query sweep, a
+# streaming maintenance loop) that is unbounded block-manager growth. The
+# helpers below let a harness bracket each query invocation and explicitly
+# unpersist every RDD the invocation pinned, once its terminal action has
+# completed. (A reliable checkpoint pins nothing RDD-side; its files stay
+# in the checkpoint directory unless the session sets
+# ``spark.cleaner.referenceTracking.cleanCheckpoints``.)
 #
-# IMPORTANT ordering constraint: a localCheckpointed frame CANNOT recompute
-# (its lineage is truncated) — release only after ALL actions on frames
-# derived from the invocation have run, never between an operator returning
-# a DataFrame and the caller's collect/write of it.
+# IMPORTANT ordering constraint: a checkpointed frame CANNOT recompute (its
+# lineage is truncated) — release only after ALL actions on frames derived
+# from the invocation have run, never between an operator returning a
+# DataFrame and the caller's collect/write of it.
 #
-# Scoping (r10 advisory; attribution made exact r12 per the r11 advisory):
-# release is INVOCATION-scoped. ``materialize()`` attributes each pin FROM
-# THE RETURNED FRAME ITSELF — checkpoint modes read the pinned RDD id off
-# the returned Dataset's LogicalRDD node, persist mode records the frame
-# and exits via ``DataFrame.unpersist`` — into the innermost
-# ``released_after`` bracket open on the calling thread; bracket exit frees
-# exactly its own recorded pins. Because attribution no longer diffs the
-# session-global registry, a concurrent thread's pin landing inside this
-# call's window can NOT be credited to (and later freed by) this bracket —
-# the r11-advisory race. The registry diff survives only as (a) a fallback
-# if the internal plan introspection ever breaks, and (b) a shield set
-# protecting persist-mode pins from ``keep_preexisting=False`` sweeps.
-# Pins created WITHOUT going through materialize()/pin() are not tracked
-# (in-package there are none that outlive their operator: the few direct
-# .persist() calls keep lineage and unpersist locally).
+# Release is INVOCATION-scoped. ``materialize()`` reads the pinned RDD id
+# off the returned Dataset's LogicalRDD node and records it into the
+# innermost ``released_after`` bracket open on the calling thread; bracket
+# exit frees exactly its own recorded pins. Because attribution does not
+# diff the session-global registry, a concurrent thread's pin landing inside
+# this call's window can NOT be credited to (and later freed by) this
+# bracket. The registry diff survives only as a fallback if the internal
+# plan introspection ever breaks. Pins created WITHOUT going through
+# materialize() are not tracked (in-package there are none that outlive
+# their operator: the few direct .persist() calls keep lineage and
+# unpersist locally).
 # --------------------------------------------------------------------------
 
-class _BracketPins:
-    """What one released_after bracket pinned. ``ids``: RDD ids attributed
-    exactly from the checkpoint-returned frames (released by id at exit).
-    ``frames``: persist-mode frames (released via ``DataFrame.unpersist``,
-    which the SQL CacheManager resolves exactly). ``shield``: registry-diff
-    ids recorded ONLY to protect persist-mode pins from another bracket's
-    ``keep_preexisting=False`` global sweep — never released from."""
-
-    __slots__ = ("ids", "frames", "shield")
-
-    def __init__(self) -> None:
-        self.ids: set[int] = set()
-        self.frames: list[DataFrame] = []
-        self.shield: set[int] = set()
-
-
 _BRACKET_LOCK = threading.Lock()
-_BRACKETS: dict[int, _BracketPins] = {}  # bracket id -> its pins
+_BRACKETS: dict[int, set[int]] = {}  # bracket id -> the RDD ids it pinned
 _BRACKET_IDS = itertools.count(1)
 _TLS = threading.local()  # per-thread stack of open bracket ids
 
@@ -231,22 +178,18 @@ def release_persistents(spark, keep: set[int] | None = None) -> int:
 
 
 @contextlib.contextmanager
-def released_after(spark, keep_preexisting: bool = True) -> Iterator[None]:
+def released_after(spark) -> Iterator[None]:
     """Context manager: on exit, unpersist exactly the RDDs that
-    ``materialize()``/``pin()`` calls on THIS thread pinned inside the
-    block (see the release-ordering constraint above — the block must
-    contain the terminal action, not just the plan construction).
-    Concurrent brackets on other threads are untouched.
-
-    ``keep_preexisting=False`` additionally sweeps every pin no OTHER open
-    bracket claims (the old global-diff behavior, for harnesses that want
-    leftover-draining exits)."""
+    ``materialize()`` calls on THIS thread pinned inside the block (see the
+    release-ordering constraint above — the block must contain the
+    terminal action, not just the plan construction). Concurrent brackets
+    on other threads are untouched."""
     bid = next(_BRACKET_IDS)
     stack = getattr(_TLS, "stack", None)
     if stack is None:
         stack = _TLS.stack = []
     with _BRACKET_LOCK:
-        _BRACKETS[bid] = _BracketPins()
+        _BRACKETS[bid] = set()
     stack.append(bid)
     try:
         yield
@@ -254,36 +197,5 @@ def released_after(spark, keep_preexisting: bool = True) -> Iterator[None]:
         stack.pop()
         with _BRACKET_LOCK:
             mine = _BRACKETS.pop(bid)
-            others: set[int] = set()
-            for rec in _BRACKETS.values():
-                others |= rec.ids
-                others |= rec.shield
-        for frame in mine.frames:
-            try:
-                frame.unpersist(False)
-            except Exception:
-                pass  # session already stopped — nothing left to free
-        if keep_preexisting:
-            release_ids(spark, mine.ids - others)
-        else:
-            release_ids(spark, persistent_rdd_ids(spark) - others)
-
-
-def pin(df: DataFrame) -> DataFrame:
-    """Like :func:`materialize`, but NEVER a pass-through: mode ``none``
-    falls back to ``local``.
-
-    For frames whose VALUES are only well-defined if the physical result is
-    computed once — e.g. ``monotonically_increasing_id`` after a sampled
-    range shuffle (plans/ranking.py), where re-execution re-samples the
-    boundaries and a second action would read DIFFERENT ids than the first.
-    Under plain ``materialize`` the debug mode ``none`` replays lineage per
-    action and silently corrupts such values, not just plan shapes."""
-    mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "local")
-    if mode == "none":
-        os.environ["SPARK_GRAFT_MATERIALIZE"] = "local"
-        try:
-            return materialize(df)
-        finally:
-            os.environ["SPARK_GRAFT_MATERIALIZE"] = "none"
-    return materialize(df)
+            others: set[int] = set().union(*_BRACKETS.values())
+        release_ids(spark, mine - others)

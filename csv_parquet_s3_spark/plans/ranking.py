@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from csv_parquet_s3_spark.plans.materialize import pin
+from csv_parquet_s3_spark.plans.materialize import materialize
 
 # monotonically_increasing_id(): partition id << 33 | record number
 _MID_RECORD_BITS = 33
@@ -84,10 +84,9 @@ def _ranked_with_boundaries(
         sorted_df.sortWithinPartitions(*order_cols)
         .withColumn("__mid", F.monotonically_increasing_id())
         # two consumers below (the per-partition counts and the ranked
-        # output) — pin() (never pass-through, even under
-        # SPARK_GRAFT_MATERIALIZE=none) so the range shuffle is not
-        # re-sampled per action and the mids are stable across both reads
-        .transform(pin)
+        # output) — materialized so the range shuffle is not re-sampled per
+        # action and the mids are stable across both reads
+        .transform(materialize)
     )
     pid = F.shiftright("__mid", _MID_RECORD_BITS).cast("int")
     loc = (F.col("__mid").bitwiseAND(F.lit(_MID_RECORD_MASK))).cast("bigint")

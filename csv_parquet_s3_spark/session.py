@@ -17,6 +17,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from csv_parquet_s3_spark.config import env_int
+
 # The reference writes Snappy Parquet with 128 MiB row groups (Main.java:44).
 # Applied as a per-write option by every Parquet writer; a session conf of
 # this name is not a Spark property and Spark drops it.
@@ -24,10 +26,7 @@ PARQUET_BLOCK_SIZE = 128 * 1024 * 1024
 
 
 def default_parallelism() -> int:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    if cpus:
-        return int(cpus)
-    return os.cpu_count() or 8
+    return env_int("SPARK_GRAFT_CPUS") or os.cpu_count() or 8
 
 
 def get_spark(

@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from csv_parquet_s3_spark.config import env_int
+
 TABLES = (
     "region",
     "nation",
@@ -53,7 +55,7 @@ def table_path(sf_dir: str, name: str) -> str:
 # Production knob: SPARK_GRAFT_GATE_BYTES overrides the default (read once
 # at import, like every deployment env knob here) — size it to the
 # cluster's broadcast budget per DEPLOYMENT.md; 0 disables all gated hints.
-BROADCAST_GATE_BYTES = int(os.environ.get("SPARK_GRAFT_GATE_BYTES", 64 << 20))
+BROADCAST_GATE_BYTES = env_int("SPARK_GRAFT_GATE_BYTES", 64 << 20)
 
 _TABLE_BYTES_CACHE: dict[tuple[str, str], int] = {}
 

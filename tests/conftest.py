@@ -14,7 +14,16 @@ SF_CORRECTNESS = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 # heavy property tests) are SKIPPED unless SPARK_GRAFT_SLOW_TESTS=1; total
 # coverage is intact — CI/round-close runs set the env var. The skip is
 # visible in the tail (`N passed, M skipped`), never a silent deselection.
-RUN_SLOW = os.environ.get("SPARK_GRAFT_SLOW_TESTS", "") not in ("", "0")
+# Any other value (say "false") is a usage error rather than a guess.
+SLOW_TESTS = os.environ.get("SPARK_GRAFT_SLOW_TESTS", "")
+RUN_SLOW = SLOW_TESTS == "1"
+
+
+def pytest_configure(config):
+    if SLOW_TESTS not in ("", "0", "1"):
+        raise pytest.UsageError(
+            f"SPARK_GRAFT_SLOW_TESTS={SLOW_TESTS!r}: expected unset, '', '0' or '1'"
+        )
 
 
 def pytest_collection_modifyitems(config, items):

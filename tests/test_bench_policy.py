@@ -227,28 +227,6 @@ def test_bracket_attribution_is_exact_under_concurrent_unbracketed_pin(
     M.release_persistents(spark)
 
 
-def test_released_after_persist_mode_releases_via_frame(spark, monkeypatch):
-    """persist-mode pins go through the SQL CacheManager, so the bracket
-    releases them via ``DataFrame.unpersist`` on the recorded frame (exact),
-    not by registry-id diff; the cache entry must be gone after exit and the
-    lineage-keeping frame must still recompute."""
-    from pyspark.sql import functions as F
-
-    from csv_parquet_s3_spark.plans import materialize as M
-
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "persist")
-    M.release_persistents(spark)
-    base = M.persistent_rdd_ids(spark)
-    with M.released_after(spark):
-        df = M.materialize(spark.range(5_000).select((F.col("id") + 7).alias("v")))
-        assert df.count() == 5_000
-        assert M.persistent_rdd_ids(spark) - base, "persist should register"
-    assert not (M.persistent_rdd_ids(spark) - base), (
-        "bracket exit must drop the persist-mode cache entry"
-    )
-    assert df.count() == 5_000  # persist keeps lineage: recompute works
-
-
 def test_released_after_nested_brackets(spark):
     """Nesting: materialize records into the INNERMOST bracket only, so the
     inner exit releases its own pins and the outer exit releases the rest —

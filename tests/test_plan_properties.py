@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from csv_parquet_s3_spark.operators import QUERIES
 from csv_parquet_s3_spark.plans.explain import analyze
 
@@ -80,22 +82,48 @@ def test_broadcast_gate_hints_only_measured_small_tables(spark):
     assert "ResolvedHint" in always._jdf.queryExecution().analyzed().toString()
 
 
-def test_broadcast_gate_env_override(monkeypatch):
+def _import_tables_with_gate(value: str):
+    """Import ``sources.tables`` in a fresh interpreter with
+    ``SPARK_GRAFT_GATE_BYTES=value`` (the knob is read once, at import) and
+    print the module constant and ``broadcast_if_small``'s bound default."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "from csv_parquet_s3_spark.sources import tables as T; "
+        "print(T.BROADCAST_GATE_BYTES, (T.broadcast_if_small.__defaults__ or ())[-1])"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_GATE_BYTES=value)
+    return subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+
+
+def test_broadcast_gate_env_override():
     """`SPARK_GRAFT_GATE_BYTES` is the production broadcast-budget knob
     (DEPLOYMENT.md): it must override both the module constant AND the
-    def-time default of ``broadcast_if_small`` (which binds the constant)."""
-    import importlib
+    def-time default of ``broadcast_if_small`` (which binds the constant),
+    and a malformed value must fail at import with an error naming it."""
+    ok = _import_tables_with_gate("12345")
+    assert ok.returncode == 0, ok.stderr
+    assert ok.stdout.split() == ["12345", "12345"]
 
-    from csv_parquet_s3_spark.sources import tables as T
+    bad = _import_tables_with_gate("64M")
+    assert bad.returncode != 0
+    assert "ValueError: SPARK_GRAFT_GATE_BYTES='64M'" in bad.stderr, bad.stderr
 
-    monkeypatch.setenv("SPARK_GRAFT_GATE_BYTES", "12345")
-    try:
-        mod = importlib.reload(T)
-        assert mod.BROADCAST_GATE_BYTES == 12345
-        assert (mod.broadcast_if_small.__defaults__ or ())[-1] == 12345
-    finally:
-        monkeypatch.delenv("SPARK_GRAFT_GATE_BYTES")
-        importlib.reload(T)
+
+def test_malformed_cpus_knob_names_itself(monkeypatch):
+    from csv_parquet_s3_spark.session import default_parallelism
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "four")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS='four'"):
+        default_parallelism()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_parallelism() == 3
 
 
 def test_broadcast_gate_unstattable_root_never_claims_small(tmp_path):

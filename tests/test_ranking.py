@@ -139,64 +139,75 @@ def test_no_single_partition_exchange_in_converted_queries(spark):
         )
 
 
-class TestMaterializeModes:
-    def test_local_truncates_lineage(self, spark):
-        from csv_parquet_s3_spark.plans.materialize import materialize
+def _unset_checkpoint_dir(spark) -> None:
+    """PySpark has no public way back to "no checkpoint directory"; clear
+    the JVM context's field so later tests see the session default."""
+    sc = spark.sparkContext
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
 
+
+class TestMaterializeModes:
+    """No checkpoint directory: a local checkpoint, pinned RDD-side and
+    writing no files. With one set: a reliable checkpoint, whose files land
+    in that directory and which pins nothing RDD-side."""
+
+    def test_local_truncates_lineage(self, spark):
+        from csv_parquet_s3_spark.plans.materialize import (
+            _pinned_rdd_id,
+            materialize,
+            persistent_rdd_ids,
+        )
+
+        assert spark.sparkContext.getCheckpointDir() is None
         df = materialize(spark.range(10).withColumn("x", F.col("id") * 2))
         assert df.count() == 10
         assert "LogicalRDD" in df._jdf.queryExecution().logical().toString()
+        assert _pinned_rdd_id(df) in persistent_rdd_ids(spark)
 
-    def test_persist_keeps_lineage(self, spark, monkeypatch):
-        from csv_parquet_s3_spark.plans.materialize import materialize
+    def test_reliable_mode_checkpoints_durably(self, spark, tmp_path):
+        from csv_parquet_s3_spark.plans.materialize import (
+            _pinned_rdd_id,
+            materialize,
+            persistent_rdd_ids,
+        )
 
-        monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "persist")
-        df = materialize(spark.range(10).withColumn("x", F.col("id") * 2))
-        assert df.count() == 10
-        assert "LogicalRDD" not in df._jdf.queryExecution().logical().toString()
-        df.unpersist()
-
-    def test_none_is_passthrough(self, spark, monkeypatch):
-        from csv_parquet_s3_spark.plans.materialize import materialize
-
-        monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "none")
-        base = spark.range(10)
-        assert materialize(base) is base
-
-    def test_invalid_mode_raises(self, spark, monkeypatch):
-        from csv_parquet_s3_spark.plans.materialize import materialize
-
-        monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "bogus")
-        with pytest.raises(ValueError, match="bogus"):
-            materialize(spark.range(1))
-
-    def test_reliable_mode_checkpoints_durably(self, spark, monkeypatch, tmp_path):
-        from csv_parquet_s3_spark.plans.materialize import materialize
-
-        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-        monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "reliable")
-        df = materialize(spark.range(10).withColumn("x", F.col("id") * 2))
-        assert df.count() == 10
-        assert any((tmp_path / "ckpt").rglob("*")), "no checkpoint files written"
+        sc = spark.sparkContext
+        ckpt = tmp_path / "ckpt"
+        sc.setCheckpointDir(str(ckpt))
+        try:
+            df = materialize(spark.range(10).withColumn("x", F.col("id") * 2))
+            assert df.count() == 10
+            assert "LogicalRDD" in df._jdf.queryExecution().logical().toString()
+            assert _pinned_rdd_id(df) not in persistent_rdd_ids(spark)
+            assert any(ckpt.rglob("part-*")), "no checkpoint files written"
+        finally:
+            _unset_checkpoint_dir(spark)
+        assert sc.getCheckpointDir() is None
 
     @pytest.mark.slow
     def test_modes_are_result_equivalent_on_an_iterative_operator(
-        self, spark, monkeypatch
+        self, spark, tmp_path
     ):
-        """The config switch must not change ANY answer: run a
+        """The checkpoint directory must not change ANY answer: run a
         checkpoint-heavy iterative operator (PageRank — 7 recorded
-        subplans per audit) under local and persist modes and require
-        identical rows. This is the claim DEPLOYMENT.md makes when it
-        says one env var flips the whole registry's checkpoint mode."""
+        subplans per audit) with no directory and with one set, and require
+        identical rows. This is the claim DEPLOYMENT.md makes when it says
+        setting ``spark.checkpoint.dir`` makes every materialization site in
+        the registry durable."""
         from csv_parquet_s3_spark.operators.components import (
             graph_pagerank_nation_trade,
         )
 
         sf = "/root/testdata/sf0.001"
-        monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "local")
         base = sorted(map(tuple, graph_pagerank_nation_trade(spark, sf).collect()))
-        monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "persist")
-        alt = sorted(map(tuple, graph_pagerank_nation_trade(spark, sf).collect()))
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+        try:
+            alt = sorted(
+                map(tuple, graph_pagerank_nation_trade(spark, sf).collect())
+            )
+        finally:
+            _unset_checkpoint_dir(spark)
+        assert any((tmp_path / "ckpt").rglob("part-*"))
         assert base == alt
 
     def test_recorder_captures_pre_checkpoint_plan(self, spark):
@@ -212,20 +223,6 @@ class TestMaterializeModes:
             )
         assert len(recorded) == 1
         assert recorded[0].n_exchanges >= 1, "pre-truncation shuffle not seen"
-
-
-def test_rank_correct_under_materialize_none(spark, frame, monkeypatch):
-    """r07-advisor item: with SPARK_GRAFT_MATERIALIZE=none the range sort
-    used to re-execute per action with fresh boundary sampling, so the
-    P-row counts and the returned mids could diverge — 'plan-shape
-    debugging' silently corrupted VALUES. ranking now pins via
-    materialize.pin(), which never passes through."""
-    from csv_parquet_s3_spark.plans.ranking import with_global_row_number
-
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "none")
-    got = with_global_row_number(frame, _order(), "rn", num_partitions=7)
-    ref = frame.select("*", F.row_number().over(W.orderBy(*_order())).alias("rn"))
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
 
 
 def test_ntile_exact_beyond_double_precision(spark):

@@ -483,10 +483,9 @@ class TestIvfIndexLayout:
     """The inverted lists must BE inverted on disk: post-build (and
     post-compaction after a merge) each list owns its own ``list_id=N/``
     directory (format 4), and the serving plan prunes unprobed lists'
-    directories at FILE-LISTING time — join-triggered dynamic partition
-    pruning by default, a static ``In(list_id, …)`` partition filter in
-    collect mode — together these make probe cost Σ|probed lists|, not
-    corpus."""
+    directories at FILE-LISTING time through join-triggered dynamic
+    partition pruning — together these make probe cost Σ|probed lists|,
+    not corpus."""
 
     @staticmethod
     def _list_dirs(root: str) -> dict[str, int]:
@@ -533,7 +532,7 @@ class TestIvfIndexLayout:
         assert len(dirs2) > 1 and all(n == 1 for n in dirs2.values()), dirs2
         assert _rows(_serve_plain_ivf(spark, emb, idx)) == before
 
-    def test_probe_prunes_unprobed_list_dirs(self, spark, tmp_path, monkeypatch):
+    def test_probe_prunes_unprobed_list_dirs(self, spark, tmp_path):
         from csv_parquet_s3_spark.operators.similarity import N_PROBE, N_QUERIES
         from csv_parquet_s3_spark.operators.similarity_index import (
             _SEEDS,
@@ -555,23 +554,14 @@ class TestIvfIndexLayout:
                 .toString()
             )
 
-        monkeypatch.setenv("SPARK_GRAFT_IVF_PROBE", "dpp")
         p = plan()
         assert "dynamicpruningexpression" in p, p[:2000]
-        rows_dpp = _rows(topk_from_index(spark, queries, idx, N_PROBE))
 
-        monkeypatch.setenv("SPARK_GRAFT_IVF_PROBE", "collect")
-        p = plan()
-        assert "PartitionFilters: [list_id" in p and " IN (" in p, p[:2000]
-        # the modes differ only in HOW the probed-list set reaches the scan
-        assert _rows(topk_from_index(spark, queries, idx, N_PROBE)) == rows_dpp
-
-    def test_unprobed_list_files_are_never_read(self, spark, tmp_path, monkeypatch):
+    def test_unprobed_list_files_are_never_read(self, spark, tmp_path):
         """RUNTIME proof of list pruning, stronger than any plan string:
         overwrite every parquet file of the lists the probe does NOT touch
         with garbage bytes — serving must still return the exact same
-        rows in BOTH modes, because those directories' contents are never
-        opened. The control corrupts a probed list too and expects the
+        rows, because those directories' contents are never opened. The control corrupts a probed list too and expects the
         scan to blow up (so the test cannot pass vacuously)."""
         import glob
         import math
@@ -622,9 +612,7 @@ class TestIvfIndexLayout:
 
         for lid in unprobed:
             corrupt(lid)
-        for mode in ("dpp", "collect"):
-            monkeypatch.setenv("SPARK_GRAFT_IVF_PROBE", mode)
-            assert _rows(topk_from_index(spark, queries, idx, N_PROBE)) == before
+        assert _rows(topk_from_index(spark, queries, idx, N_PROBE)) == before
 
         corrupt(next(iter(probed)))  # control: a PROBED list must be read
         with pytest.raises(Exception):
@@ -637,7 +625,7 @@ class TestIvfPqIndexLayout:
     scan to the probed lists — codes live INSIDE the inverted lists."""
 
     @pytest.mark.slow
-    def test_codes_clustered_and_probe_pruning(self, spark, tmp_path, monkeypatch):
+    def test_codes_clustered_and_probe_pruning(self, spark, tmp_path):
         from csv_parquet_s3_spark.operators.similarity import N_QUERIES
         from csv_parquet_s3_spark.operators.similarity_index import (
             build_ivf_pq_index,
@@ -659,7 +647,6 @@ class TestIvfPqIndexLayout:
 
         queries = emb.filter(F.col("vec_id") < N_QUERIES)
         for fn in (ivf_pq_topk_from_index, sq8_topk_from_index):
-            monkeypatch.setenv("SPARK_GRAFT_IVF_PROBE", "dpp")
             p = (
                 fn(spark, queries, idx)
                 ._jdf.queryExecution()
@@ -667,14 +654,6 @@ class TestIvfPqIndexLayout:
                 .toString()
             )
             assert p.count("dynamicpruningexpression") >= 2, (fn.__name__, p[:1500])
-            monkeypatch.setenv("SPARK_GRAFT_IVF_PROBE", "collect")
-            p = (
-                fn(spark, queries, idx)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-            assert p.count("PartitionFilters: [list_id") >= 2, (fn.__name__, p[:1500])
 
 
 class TestDeleteRowsEdges:
