@@ -52,7 +52,7 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from csv_parquet_s3_spark.maintenance import _atomic_swap
+from csv_parquet_s3_spark.maintenance import staged
 from csv_parquet_s3_spark.schema import FieldSpec, load_schema, raw_struct_type
 from csv_parquet_s3_spark.session import PARQUET_BLOCK_SIZE
 
@@ -373,18 +373,11 @@ def convert_csv_dir(
         .observe(obs, F.collect_set(F.when(F.size("_bad") > 0, F.col("_bad"))).alias("bad"))
         .drop("_bad")
     )
-    staging = out_dir.rstrip("/") + "._staging-" + uuid.uuid4().hex[:8]
-    try:
+    with staged(out_dir, "._staging-") as staging:
         _write_parquet(df, staging)
         bad = {f for fields in obs.get["bad"] for f in fields}
-        if strict and bad:
+        if strict and bad:  # raising inside `staged` discards the staging output
             raise _strict_error(glob, specs, bad)
-        if os.path.exists(out_dir):
-            _atomic_swap(staging, out_dir)
-        else:
-            os.rename(staging, out_dir)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
     return spark.read.parquet(out_dir)
 
 

@@ -7,8 +7,9 @@ reference's only maintenance op is the purge (SURVEY.md O13-O22,
 `src/SQL/AutoPurge.sql`); compaction is its natural sibling for an engine
 whose ingest (streaming especially) produces per-trigger files.
 
-Both ops follow the purge module's atomicity pattern: write to a staging
-directory, then swap — readers never observe a half-compacted dataset.
+Every rewrite of a live path in the package commits through
+:func:`staged`: write to a staging sibling, then swap — readers never
+observe a half-compacted dataset.
 
 Scale notes: compaction is one distributed read → repartition → write; the
 file-count target derives from dataset bytes, not row counts, so the same
@@ -19,9 +20,11 @@ object-store-native stand-in for indexes.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import uuid
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,31 +63,67 @@ def _rm_any(path: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
 
 
+# Every staging and backup sibling a commit can leave beside a live path.
+# ``staged`` accepts only these markers, so ``vacuum`` recognises every
+# leftover; ``._old-`` is the swap's own backup of the replaced root.
+_STAGING_MARKERS = (
+    "._compact-", "._upsert-", "._zorder-", "._hilbert-", "._delete-",
+    "._refresh-", "._truncate-", "._staging-", "._old-",
+)
+
+
 def _atomic_swap(staging: str, final: str) -> None:
     """Rename-aside swap: the old root moves aside in one rename, the new
-    one renames in, then the backup is removed. NOT fully atomic — between
-    the two renames the final path is briefly absent (true atomicity needs
-    a symlink/manifest indirection); the missing-root window is two renames
-    instead of a whole rmtree, and a crash leaves a recoverable ``._old-*``
-    sibling (see :func:`vacuum`)."""
+    one renames in, then the backup is removed. A missing ``final``
+    (bootstrap) is one plain rename. NOT fully atomic — between the two
+    renames the final path is briefly absent (true atomicity needs a
+    symlink/manifest indirection, see :func:`publish_version`). If the
+    rename in fails, the backup is renamed back; a process that dies
+    between the renames leaves a ``._old-*`` sibling that :func:`vacuum`
+    renames back."""
+    if not os.path.exists(final):
+        os.rename(staging, final)
+        return
     backup = final + "._old-" + uuid.uuid4().hex[:8]
     os.rename(final, backup)
-    os.rename(staging, final)
+    try:
+        os.rename(staging, final)
+    except BaseException:
+        os.rename(backup, final)
+        raise
     _rm_any(backup)
 
 
+@contextlib.contextmanager
+def staged(path: str, marker: str) -> Iterator[str]:
+    """The one commit protocol for rewriting a live path: yield a fresh
+    ``<path><marker><hex8>`` staging sibling to write into; on a clean exit
+    swap it over ``path`` (:func:`_atomic_swap`), on an exception remove
+    it and re-raise, so ``path`` keeps its old content. The temp-file +
+    rename commit of the reference converter
+    (CsvToParquetConverter.java:147, :219) at directory granularity."""
+    if marker not in _STAGING_MARKERS:
+        raise ValueError(f"staging marker {marker!r} is not in _STAGING_MARKERS")
+    path = path.rstrip("/")
+    staging = path + marker + uuid.uuid4().hex[:8]
+    try:
+        yield staging
+        _atomic_swap(staging, path)
+    except BaseException:
+        _rm_any(staging)
+        raise
+
+
 def _staged_overwrite(df: DataFrame, path: str, marker: str) -> None:
-    """Write ``df`` to a ``<path>.<marker>-<uuid>`` staging sibling and
-    rename-aside-swap it over ``path`` (snappy, one 128 MiB row group per
-    file) — the shared commit step of every rewrite in this module."""
-    staging = path.rstrip("/") + marker + uuid.uuid4().hex[:8]
-    (
-        df.write.mode("overwrite")
-        .option("compression", "snappy")
-        .option("parquet.block.size", str(PARQUET_BLOCK_SIZE))
-        .parquet(staging)
-    )
-    _atomic_swap(staging, path)
+    """Commit ``df`` over ``path`` through :func:`staged` (snappy, one
+    128 MiB row group per file) — the DataFrame form of the commit."""
+    with staged(path, marker) as staging:
+        (
+            df.write.mode("overwrite")
+            .option("compression", "snappy")
+            .option("parquet.block.size", str(PARQUET_BLOCK_SIZE))
+            .parquet(staging)
+        )
 
 
 CURRENT_MARKER = "_CURRENT"
@@ -376,23 +415,28 @@ def compact_zorder(
 
 
 def vacuum(path: str) -> list[str]:
-    """Remove orphaned staging/backup directories left by a compact/upsert/
-    zorder run that crashed between write and swap. The staged-swap protocol
-    guarantees readers never see partial data, but a crash can leak a
-    ``._compact-*`` / ``._upsert-*`` / ``._zorder-*`` / ``._old-*`` sibling;
-    this is the janitor. Returns the removed paths."""
-    parent = os.path.dirname(path.rstrip("/")) or "."
-    base = os.path.basename(path.rstrip("/"))
-    removed = []
-    for name in os.listdir(parent):
-        if name.startswith(base + "._") and any(
-            marker in name
-            for marker in ("._compact-", "._upsert-", "._zorder-", "._hilbert-", "._delete-", "._old-")
-        ):
-            full = os.path.join(parent, name)
-            shutil.rmtree(full, ignore_errors=True)
-            removed.append(full)
-    return removed
+    """Remove the staging and backup siblings (:data:`_STAGING_MARKERS`)
+    that a commit through :func:`staged` leaves when its process dies
+    mid-commit. If ``path`` itself is missing — a death between the swap's
+    two renames — the newest ``._old-*`` backup is renamed back first, so
+    readers get the old version. Run it while no writer is committing to
+    ``path``. Returns the removed paths."""
+    path = path.rstrip("/")
+    parent = os.path.dirname(path) or "."
+    base = os.path.basename(path)
+    leftovers = [
+        os.path.join(parent, name)
+        for name in os.listdir(parent)
+        if any(name.startswith(base + marker) for marker in _STAGING_MARKERS)
+    ]
+    backups = [p for p in leftovers if p.startswith(path + "._old-")]
+    if backups and not os.path.exists(path):
+        newest = max(backups, key=os.path.getmtime)
+        os.rename(newest, path)
+        leftovers.remove(newest)
+    for full in leftovers:
+        _rm_any(full)
+    return leftovers
 
 
 # ---------------------------------------------------------------------------

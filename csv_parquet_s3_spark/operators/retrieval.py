@@ -21,6 +21,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from csv_parquet_s3_spark.maintenance import (
+    _staged_overwrite,
+    compact,
+    ensure_published,
+    upsert,
+)
 from csv_parquet_s3_spark.operators.registry import ORACLES, register
 from csv_parquet_s3_spark.operators.similarity import (
     _ORACLE_DOT,
@@ -515,7 +521,6 @@ def ensure_bm25_index(spark: SparkSession, sf_dir: str) -> str:
     pointer rename — a concurrent reader always resolves a complete index,
     old or new; the root is never missing (the rename-aside two-rename gap
     the r08 advisory flagged is gone)."""
-    from csv_parquet_s3_spark.maintenance import ensure_published
     from csv_parquet_s3_spark.operators.minhash_index import _documents_fingerprint
 
     # layout version 4: doc_tf carries a denormalized dl column (serving
@@ -606,20 +611,6 @@ def retrieval_bm25_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bm25_serve_from(spark, root)
 
 
-def _staged_overwrite(df: DataFrame, path: str) -> None:
-    """Write ``df`` to a staging sibling and rename-aside-swap it over
-    ``path`` — concurrent readers of a served index never observe a
-    missing/partial table (the r07-advisor hole of plain
-    ``mode('overwrite')``: Spark deletes the target before writing)."""
-    import uuid
-
-    from csv_parquet_s3_spark.maintenance import _atomic_swap
-
-    staging = path.rstrip("/") + "._refresh-" + uuid.uuid4().hex[:8]
-    df.write.mode("overwrite").parquet(staging)
-    _atomic_swap(staging, path)
-
-
 def update_bm25_index(
     spark: SparkSession, new_docs: DataFrame, index_path: str
 ) -> tuple[int, int]:
@@ -649,8 +640,6 @@ def update_bm25_index(
     unaffected (the serving plan never assumes order).
     Returns (n_docs_updated, n_docs_inserted)."""
     import os
-
-    from csv_parquet_s3_spark.maintenance import upsert
 
     stats_path = f"{index_path}/stats"
     old_stats = spark.read.parquet(stats_path)
@@ -722,7 +711,7 @@ def update_bm25_index(
         )
         .filter(F.col("df") > 0)
     )
-    _staged_overwrite(df_new, f"{index_path}/df")
+    _staged_overwrite(df_new, f"{index_path}/df", "._refresh-")
 
     new_n = int(st["n_docs"]) - n_replaced + n_batch
     new_sum = int(st["sum_dl"]) - sum_replaced + sum_batch
@@ -733,7 +722,7 @@ def update_bm25_index(
         "sum_dl",
         (F.expr("CAST(sum_dl AS DOUBLE)") / F.col("n_docs")).alias("avgdl"),
     )
-    _staged_overwrite(stats_new, stats_path)
+    _staged_overwrite(stats_new, stats_path, "._refresh-")
 
     os.remove(pending)
     return n_replaced, n_batch - n_replaced
@@ -789,7 +778,7 @@ def delete_from_bm25_index(
         kept = spark.read.parquet(f"{index_path}/{table}").join(
             F.broadcast(victims), "doc_id", "left_anti"
         )
-        _staged_overwrite(kept, f"{index_path}/{table}")
+        _staged_overwrite(kept, f"{index_path}/{table}", "._refresh-")
 
     df_new = (
         spark.read.parquet(f"{index_path}/df")
@@ -800,7 +789,7 @@ def delete_from_bm25_index(
         )
         .filter(F.col("df") > 0)
     )
-    _staged_overwrite(df_new, f"{index_path}/df")
+    _staged_overwrite(df_new, f"{index_path}/df", "._refresh-")
 
     new_n = int(st["n_docs"]) - n_gone
     new_sum = int(st["sum_dl"]) - sum_gone
@@ -811,7 +800,7 @@ def delete_from_bm25_index(
         "sum_dl",
         (F.expr("CAST(sum_dl AS DOUBLE)") / F.col("n_docs")).alias("avgdl"),
     )
-    _staged_overwrite(stats_new, stats_path)
+    _staged_overwrite(stats_new, stats_path, "._refresh-")
 
     os.remove(pending)
     return n_gone
@@ -900,16 +889,16 @@ def compact_bm25_index(spark: SparkSession, index_path: str) -> None:
     update path; readers of a served index never see a partial table."""
     import os
 
-    from csv_parquet_s3_spark.maintenance import compact
-
     compact(spark, f"{index_path}/doc_tf", sort_by=["doc_id", "token"])
     compact(spark, f"{index_path}/dl", sort_by=["doc_id"])
     doc_tf = spark.read.parquet(f"{index_path}/doc_tf")
     _staged_overwrite(
-        doc_tf.groupBy("token").agg(F.count("*").alias("df")), f"{index_path}/df"
+        doc_tf.groupBy("token").agg(F.count("*").alias("df")),
+        f"{index_path}/df",
+        "._refresh-",
     )
     dl = spark.read.parquet(f"{index_path}/dl")
-    _staged_overwrite(_bm25_stats(dl), f"{index_path}/stats")
+    _staged_overwrite(_bm25_stats(dl), f"{index_path}/stats", "._refresh-")
     pending = os.path.join(index_path, _BM25_PENDING)
     if os.path.exists(pending):
         os.remove(pending)

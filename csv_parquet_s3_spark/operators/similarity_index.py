@@ -1927,12 +1927,9 @@ def compact_ivf_index(spark: SparkSession, index_path: str) -> None:
     Correctness never depends on the layout (the serve is hash-identical
     before and after); this is purely the scan-cost property. Quantizer
     and search results are untouched."""
-    import uuid
-
-    from csv_parquet_s3_spark.maintenance import _atomic_swap
+    from csv_parquet_s3_spark.maintenance import staged
 
     path = f"{index_path}/assign"
     k = spark.read.parquet(f"{index_path}/centroids").count()
-    staging = path + "._compact-" + uuid.uuid4().hex[:8]
-    _write_list_clustered(_read_lists(spark, path), int(k), staging)
-    _atomic_swap(staging, path)
+    with staged(path, "._compact-") as staging:
+        _write_list_clustered(_read_lists(spark, path), int(k), staging)

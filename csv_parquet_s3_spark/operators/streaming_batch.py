@@ -17,11 +17,15 @@ is precisely what the oracle pins.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from csv_parquet_s3_spark.maintenance import _staged_overwrite
 from csv_parquet_s3_spark.operators.registry import register
 from csv_parquet_s3_spark.sources.tables import load_table, table_path
 from csv_parquet_s3_spark.streaming.events_stream import (
@@ -29,6 +33,21 @@ from csv_parquet_s3_spark.streaming.events_stream import (
     session_window_counts,
     sliding_event_rollup,
 )
+
+
+def _stage_file(df: DataFrame, directory: str, name: str, mtime: int) -> None:
+    """Write ``df`` as the single parquet file ``directory/name`` with
+    modification time ``mtime``: FileStreamSource reads oldest-first, so the
+    mtimes fix the micro-batch order of a staged stream source."""
+    tmp = os.path.join(directory, f"_{name}")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    part = next(
+        f for f in os.listdir(tmp) if f.endswith(".parquet") and not f.startswith("_")
+    )
+    dst = os.path.join(directory, name)
+    shutil.move(os.path.join(tmp, part), dst)
+    shutil.rmtree(tmp)
+    os.utime(dst, (mtime, mtime))
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -240,9 +259,6 @@ def stream_bm25_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Idempotence: the per-batch merge is an upsert keyed by doc_id, so a
     checkpoint replay of a micro-batch cannot duplicate tf rows."""
-    import os
-    import shutil
-    import tempfile
 
     from csv_parquet_s3_spark.operators.retrieval import (
         _bm25_serve_from,
@@ -258,21 +274,13 @@ def stream_bm25_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     staging = tempfile.mkdtemp(prefix="bm25_stream_src_")
     ckpt = tempfile.mkdtemp(prefix="bm25_stream_ckpt_")
     try:
-        def _stage(df: DataFrame, name: str, mtime: int) -> None:
-            tmp = os.path.join(staging, f"_{name}")
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                f for f in os.listdir(tmp)
-                if f.endswith(".parquet") and not f.startswith("_")
-            )
-            dst = os.path.join(staging, name)
-            shutil.move(os.path.join(tmp, part), dst)
-            shutil.rmtree(tmp)
-            os.utime(dst, (mtime, mtime))
-
         odd = docs.filter(F.col("doc_id") % 2 == 1)
-        _stage(odd.filter(F.col("doc_id") % 4 == 1), "00_batch.parquet", 1_000_000_000)
-        _stage(odd.filter(F.col("doc_id") % 4 == 3), "01_batch.parquet", 1_000_000_100)
+        _stage_file(
+            odd.filter(F.col("doc_id") % 4 == 1), staging, "00_batch.parquet", 1_000_000_000
+        )
+        _stage_file(
+            odd.filter(F.col("doc_id") % 4 == 3), staging, "01_batch.parquet", 1_000_000_100
+        )
 
         schema = spark.read.parquet(os.path.join(staging, "00_batch.parquet")).schema
         stream = (
@@ -323,9 +331,6 @@ def stream_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirror; both are now driver-checked). Idempotence: the per-batch
     merge is an upsert keyed by vec_id, so a checkpoint replay cannot
     duplicate vectors."""
-    import os
-    import shutil
-    import tempfile
 
     from csv_parquet_s3_spark.operators.similarity_index import (
         _SEEDS,
@@ -344,21 +349,13 @@ def stream_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     staging = tempfile.mkdtemp(prefix="ivf_stream_src_")
     ckpt = tempfile.mkdtemp(prefix="ivf_stream_ckpt_")
     try:
-        def _stage(df: DataFrame, name: str, mtime: int) -> None:
-            tmp = os.path.join(staging, f"_{name}")
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                f for f in os.listdir(tmp)
-                if f.endswith(".parquet") and not f.startswith("_")
-            )
-            dst = os.path.join(staging, name)
-            shutil.move(os.path.join(tmp, part), dst)
-            shutil.rmtree(tmp)
-            os.utime(dst, (mtime, mtime))
-
         late = emb.filter(tail)
-        _stage(late.filter(F.col("vec_id") % 4 == 1), "00_batch.parquet", 1_000_000_000)
-        _stage(late.filter(F.col("vec_id") % 4 == 3), "01_batch.parquet", 1_000_000_100)
+        _stage_file(
+            late.filter(F.col("vec_id") % 4 == 1), staging, "00_batch.parquet", 1_000_000_000
+        )
+        _stage_file(
+            late.filter(F.col("vec_id") % 4 == 3), staging, "01_batch.parquet", 1_000_000_100
+        )
 
         schema = spark.read.parquet(os.path.join(staging, "00_batch.parquet")).schema
         stream = (
@@ -462,9 +459,6 @@ def _staged_outer_join_drain(spark: SparkSession, sf_dir: str, join_fn) -> DataF
     negative ids; their own eviction bounds sit above the final watermark
     so they never emit NULL rows, and the ``user_id >= 0`` filter keeps the
     contract explicit."""
-    import os
-    import shutil
-    import tempfile
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -477,32 +471,22 @@ def _staged_outer_join_drain(spark: SparkSession, sf_dir: str, join_fn) -> DataF
         )
     staging = tempfile.mkdtemp(prefix="spark_graft_outer_")
     try:
-        def _stage(df: DataFrame, name: str, mtime: int) -> None:
-            tmp = os.path.join(staging, f"_{name}")
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                f for f in os.listdir(tmp)
-                if f.endswith(".parquet") and not f.startswith("_")
-            )
-            dst = os.path.join(staging, name)
-            shutil.move(os.path.join(tmp, part), dst)
-            shutil.rmtree(tmp)
-            os.utime(dst, (mtime, mtime))
-
-        _stage(ev, "00_main.parquet", 1_000_000_000)
-        _stage(
+        _stage_file(ev, staging, "00_main.parquet", 1_000_000_000)
+        _stage_file(
             spark.createDataFrame(
                 [(-2, hi, -2, "click", 0.0), (-3, hi, -3, "purchase", 0.0)],
                 schema=ev.schema,
             ),
+            staging,
             "01_carrier.parquet",
             1_000_000_100,
         )
-        _stage(
+        _stage_file(
             spark.createDataFrame(
                 [(-4, hi, -4, "click", 0.0), (-5, hi, -5, "purchase", 0.0)],
                 schema=ev.schema,
             ),
+            staging,
             "02_kick.parquet",
             1_000_000_200,
         )
@@ -770,9 +754,6 @@ def stream_scd1_upsert_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     CDC stream; the staged-swap parquet write stands in for a table
     format's transactional commit.
     """
-    import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import Window as W
 
@@ -804,12 +785,9 @@ def stream_scd1_upsert_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         latest = _latest(batch_df)
         if os.path.exists(target):
             latest = _latest(s.read.parquet(target).unionByName(latest))
-        # staged swap: write beside the live state, then rename — a reader
-        # (or a failed batch) never sees a half-written state.
-        latest.write.mode("overwrite").parquet(target + ".next")
-        if os.path.exists(target):
-            shutil.rmtree(target)
-        os.rename(target + ".next", target)
+        # staged swap: a reader (or a failed batch) never sees a
+        # half-written or missing state
+        _staged_overwrite(latest, target, "._upsert-")
 
     q = (
         stream.writeStream.foreachBatch(_merge)
@@ -1028,9 +1006,6 @@ def stream_events_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to ``stream_events_hourly_rollup`` — state is
     (window × event_type)-sized and watermark-bounded; the planted-row
     machinery adds nothing to the steady-state plan."""
-    import os
-    import shutil
-    import tempfile
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -1046,36 +1021,19 @@ def stream_events_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     staging = tempfile.mkdtemp(prefix="spark_graft_late_")
     try:
-        main_tmp = os.path.join(staging, "_main")
-        carrier_tmp = os.path.join(staging, "_carrier")
-        late_tmp = os.path.join(staging, "_late")
-        ev.coalesce(1).write.mode("overwrite").parquet(main_tmp)
+        _stage_file(ev, staging, "00_main.parquet", 1_000_000_000)
         # Watermark carrier: event time = corpus max, so it advances nothing
         # and its window (end > final watermark by construction) is never
         # emitted in append mode — sink content is unaffected.
         carrier = spark.createDataFrame(
             [(-2, max_ts, -2, "wm_carrier", 0.0)], schema=ev.schema
         )
-        carrier.coalesce(1).write.mode("overwrite").parquet(carrier_tmp)
+        _stage_file(carrier, staging, "01_carrier.parquet", 1_000_000_100)
         late = spark.createDataFrame(
             [(-1, min_ts, -1, "late_probe", 0.0)],
             schema=ev.schema,
         )
-        late.coalesce(1).write.mode("overwrite").parquet(late_tmp)
-
-        def _promote(tmp_dir: str, name: str, mtime: int) -> None:
-            part = next(
-                f for f in os.listdir(tmp_dir)
-                if f.endswith(".parquet") and not f.startswith("_")
-            )
-            dst = os.path.join(staging, name)
-            shutil.move(os.path.join(tmp_dir, part), dst)
-            shutil.rmtree(tmp_dir)
-            os.utime(dst, (mtime, mtime))
-
-        _promote(main_tmp, "00_main.parquet", 1_000_000_000)
-        _promote(carrier_tmp, "01_carrier.parquet", 1_000_000_100)
-        _promote(late_tmp, "02_late.parquet", 1_000_000_200)
+        _stage_file(late, staging, "02_late.parquet", 1_000_000_200)
 
         schema = spark.read.parquet(os.path.join(staging, "00_main.parquet")).schema
         stream = (

@@ -66,32 +66,25 @@ def materialize(df: DataFrame) -> DataFrame:
         from csv_parquet_s3_spark.plans.explain import analyze
 
         _RECORDER.append(analyze(df))
-    # only track when a released_after bracket is open on THIS thread — the
-    # unbracketed path pays nothing
-    track = bool(getattr(_TLS, "stack", None))
-    before = persistent_rdd_ids(df.sparkSession) if track else None
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         out = df.checkpoint(eager=True)
     else:
         out = df.localCheckpoint(eager=True)
-    if track:
+    # only track when a released_after bracket is open on THIS thread — the
+    # unbracketed path pays nothing
+    if getattr(_TLS, "stack", None):
+        # exact: the id read from OUT's own LogicalRDD node, so a concurrent
+        # thread's pin cannot be mis-attributed to (and freed by) this
+        # bracket; if introspection fails the pin stays untracked, as if
+        # unbracketed
+        rid = _pinned_rdd_id(out)
         with _BRACKET_LOCK:
             # record into the INNERMOST bracket only: when it exits and
             # releases these pins, an enclosing bracket must not try to
             # release (or be credited with) them again
             ids = _BRACKETS.get(_TLS.stack[-1])
-            if ids is not None:
-                rid = _pinned_rdd_id(out)
-                if rid is not None:
-                    # exact: the id read from OUT's own LogicalRDD node — a
-                    # concurrent thread's pin landing inside this window
-                    # cannot be mis-attributed to (and freed by) this bracket
-                    ids.add(rid)
-                else:
-                    # plan-introspection fallback (internal API moved):
-                    # registry diff, which can over-attribute a concurrent
-                    # unbracketed pin — documented residual
-                    ids.update(persistent_rdd_ids(df.sparkSession) - before)
+            if ids is not None and rid is not None:
+                ids.add(rid)
     return out
 
 
@@ -132,10 +125,9 @@ def _pinned_rdd_id(out: DataFrame) -> int | None:
 # exit frees exactly its own recorded pins. Because attribution does not
 # diff the session-global registry, a concurrent thread's pin landing inside
 # this call's window can NOT be credited to (and later freed by) this
-# bracket. The registry diff survives only as a fallback if the internal
-# plan introspection ever breaks. Pins created WITHOUT going through
-# materialize() are not tracked (in-package there are none that outlive
-# their operator: the few direct .persist() calls keep lineage and
+# bracket. A pin whose id cannot be read, and any pin created WITHOUT going
+# through materialize(), is not tracked (in-package there are none that
+# outlive their operator: the few direct .persist() calls keep lineage and
 # unpersist locally).
 # --------------------------------------------------------------------------
 

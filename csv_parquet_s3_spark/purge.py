@@ -12,7 +12,8 @@ Parity map (SURVEY.md §2.1 O13-O22):
 - table-list dispatch ``'all' | 't1,t2'`` (:216-255) → ``table_list`` param
 - existence check (:44-57, :101-105) → path check, skip + audit
 - COUNT(*) guard vs max_record_count (:139-149) → ``filter(pred).count()``
-- TRUNCATE fast path (:129-138) → overwrite with empty same-schema dataset
+- TRUNCATE fast path (:129-138) → staged overwrite with an empty
+  same-schema dataset (``maintenance.staged``)
 - ``action='SQL'`` verbatim statement (:74-95) → ``spark.sql`` on a temp
   view (SELECT/maintenance) or DELETE-translation to anti-filter
 - DELETE with PARALLEL hint (:170-174) → anti-filter rewrite; parallel
@@ -31,8 +32,8 @@ where it evaluates NULL survive. The anti-filter is therefore
 shares with the BM25/IVF index delete paths.
 
 Scale: guard count and rewrite are single distributed passes; the swap is
-O(1) directory metadata. On object stores the same staged-prefix swap
-applies (write to ``_staging``, then repoint/rename).
+O(1) directory metadata (``maintenance.staged``). On object stores the same
+staged-prefix swap applies (write to a staging prefix, then repoint/rename).
 """
 
 from __future__ import annotations
@@ -41,11 +42,12 @@ import datetime
 import logging
 import os
 import re
-import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from csv_parquet_s3_spark.maintenance import _staged_overwrite, delete_where
 
 logger = logging.getLogger(__name__)
 
@@ -123,35 +125,11 @@ class Purger:
     def _load(self, table: str) -> DataFrame:
         return self.spark.read.parquet(self._table_path(table))
 
-    @staticmethod
-    def _rm(path: str) -> None:
-        """Remove a table artifact whether it is a single file or a directory."""
-        if os.path.isfile(path):
-            os.remove(path)
-        else:
-            shutil.rmtree(path, ignore_errors=True)
-
-    def _overwrite(self, table: str, df: DataFrame) -> None:
-        """Atomic-ish rewrite: stage next to the table, then swap.
-
-        Mirrors the converter's temp-file + rename commit
-        (CsvToParquetConverter.java:147, :219) at table granularity. Works
-        for both directory tables and single-file tables (the per-file
-        ingest mode produces the latter).
-        """
-        path = self._table_path(table)
-        staging, backup = path + "._staging", path + "._old"
-        df.write.mode("overwrite").parquet(staging)
-        self._rm(backup)
-        os.rename(path, backup)
-        os.rename(staging, path)
-        self._rm(backup)
-
     # -- actions -----------------------------------------------------------
     def _truncate(self, cfg: PurgeConfig) -> PurgeOutcome:
         df = self._load(cfg.table_name)
         if not self.dry_run:
-            self._overwrite(cfg.table_name, df.limit(0))
+            _staged_overwrite(df.limit(0), self._table_path(cfg.table_name), "._truncate-")
         self._log(f"Truncated table {cfg.table_name}", cfg.user_name, cfg.table_name)
         return PurgeOutcome(cfg.table_name, "dry_run" if self.dry_run else "truncated")
 
@@ -164,8 +142,6 @@ class Purger:
         engine behind the BM25/IVF index deletes); this method only maps
         its outcome onto the purge audit log.
         """
-        from csv_parquet_s3_spark.maintenance import delete_where
-
         where = re.sub(r"^\s*WHERE\s+", "", cfg.sqlstatement or "", flags=re.IGNORECASE)
         status, matched, kept = delete_where(
             self.spark,

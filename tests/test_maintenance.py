@@ -5,9 +5,10 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from csv_parquet_s3_spark.maintenance import compact, parquet_file_count
+from csv_parquet_s3_spark.maintenance import _STAGING_MARKERS, compact, parquet_file_count
 
 
 def _fragmented_dataset(spark, path, n_files=24, rows=6000):
@@ -500,3 +501,92 @@ def test_ensure_published_failure_and_fastpath_hygiene(tmp_path):
     assert ensure_published(root, fp, build) == v1
     assert not os.path.exists(crashed), "crashed build not reaped on fast path"
     assert os.path.exists(v1)
+
+
+# ---------------------------------------------------------------------------
+# The one staged-commit primitive: a crash at any step of `staged()` leaves
+# readers on the complete old or the complete new rows, and `vacuum` heals
+# every leftover it can leave.
+# ---------------------------------------------------------------------------
+OLD_IDS, NEW_IDS = list(range(10)), list(range(100, 120))
+
+
+def _crash_at(mp, owner, name, crash_at):
+    """Make the ``crash_at`` (1-based) calls of ``owner.name`` raise, as a
+    crash at that call would."""
+    real, calls = getattr(owner, name), []
+
+    def crashing(*args):
+        calls.append(args)
+        if len(calls) in crash_at:
+            raise OSError(f"injected crash at {name} call {len(calls)}")
+        return real(*args)
+
+    mp.setattr(owner, name, crashing)
+
+
+# step -> (function to crash, its 1-based calls that raise): os.rename's
+# calls are staged()'s rename aside, rename in and rollback rename; the
+# first `_rm_any` is the swap's removal of the replaced root
+_CRASHES = {
+    "rename_aside": ("rename", {1}),
+    "rename_in": ("rename", {2}),
+    "rename_in_and_rollback": ("rename", {2, 3}),  # the process dies between renames
+    "backup_removal": ("_rm_any", {1}),
+}
+
+
+@pytest.mark.parametrize("step", ["write", *_CRASHES])
+def test_staged_crash_points_leave_a_complete_version(spark, tmp_path, monkeypatch, step):
+    import csv_parquet_s3_spark.maintenance as m
+
+    path = str(tmp_path / "ds")
+    spark.createDataFrame([(i,) for i in OLD_IDS], "id bigint").write.parquet(path)
+    new = spark.createDataFrame([(i,) for i in NEW_IDS], "id bigint")
+    if step == "write":  # the job fails after some tasks wrote their parts
+        new = new.repartition(4).select(
+            F.when(F.col("id") == 113, F.raise_error(F.lit("injected crash in write")))
+            .otherwise(F.col("id"))
+            .alias("id")
+        )
+    with monkeypatch.context() as mp:
+        if step in _CRASHES:
+            name, crash_at = _CRASHES[step]
+            _crash_at(mp, m.os if name == "rename" else m, name, crash_at)
+        with pytest.raises(Exception, match="injected crash"):
+            m._staged_overwrite(new, path, "._compact-")
+
+    want = NEW_IDS if step == "backup_removal" else OLD_IDS
+    if step != "rename_in_and_rollback":  # the process lived to roll back
+        assert sorted(r.id for r in spark.read.parquet(path).collect()) == want
+    m.vacuum(path)
+    assert [d for d in os.listdir(tmp_path) if "._" in d] == []
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == want
+
+
+@pytest.mark.parametrize("marker", _STAGING_MARKERS)
+def test_vacuum_removes_an_orphan_with_every_staging_marker(tmp_path, marker):
+    from csv_parquet_s3_spark.maintenance import vacuum
+
+    path = tmp_path / "ds"
+    path.mkdir()
+    (path / "part-0.parquet").write_text("live")
+    orphan = tmp_path / f"ds{marker}deadbeef"
+    orphan.mkdir()
+    (orphan / "part-0.parquet").write_text("junk")
+
+    assert vacuum(str(path)) == [str(orphan)]
+    assert sorted(os.listdir(tmp_path)) == ["ds"]
+    assert (path / "part-0.parquet").read_text() == "live"
+
+
+def test_staged_bootstraps_a_missing_path_and_rejects_unknown_markers(spark, tmp_path):
+    from csv_parquet_s3_spark.maintenance import _staged_overwrite, staged
+
+    path = str(tmp_path / "fresh")
+    _staged_overwrite(spark.range(3), path, "._compact-")
+    assert spark.read.parquet(path).count() == 3
+    assert os.listdir(tmp_path) == ["fresh"]
+    with pytest.raises(ValueError, match=r"\._bogus-"):
+        with staged(path, "._bogus-"):
+            pass

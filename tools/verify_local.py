@@ -12,12 +12,13 @@ from __future__ import annotations
 
 import hashlib
 import importlib.util
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()

@@ -19,11 +19,12 @@ side alone is constant-memory; the exact side exists only for the pin.
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 
 import duckdb
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
