@@ -45,24 +45,20 @@ def entry(spark: SparkSession) -> DataFrame:
 # listed first: the rotation output PLUS re-pins at the head for the
 # queries the latest change touched.
 VERIFY_PRIORITY: list[str] = [
-    # RE-PINS FIRST — the ten queries whose commit path now goes through
-    # maintenance.staged (BM25 index refreshes, the streamed index
-    # maintenance twins, the SCD1 state merge) or whose staged stream
-    # source is written by the shared _stage_file helper. Then the verbatim
-    # tools/rotate_window.py output against CORRECTNESS_r13 in its printed
-    # order. The nine displaced tail entries (text_bpe_token_stats through
-    # dedup_sorted_neighborhood_pairs) are hash-green r9 or r10.
+    # RE-PINS FIRST — the seven queries that read a path again after
+    # rewriting it in the same call (BM25 and IVF index update, delete and
+    # compaction, the MinHash incremental index, the streaming SCD1 state),
+    # so they exercise read_parquet's schema-memo invalidation. Then the
+    # verbatim tools/rotate_window.py output against CORRECTNESS_r13 in its
+    # printed order. The five displaced tail entries (q_table_content_digest
+    # through dedup_sorted_neighborhood_pairs) are hash-green r10.
     "retrieval_bm25_incremental",
     "retrieval_bm25_after_delete",
     "retrieval_bm25_compacted",
-    "stream_bm25_index_maintenance",
-    "stream_ivf_index_maintenance",
-    "stream_scd1_upsert_priority",
-    "stream_click_purchase_left_outer",
-    "stream_click_purchase_right_outer",
-    "stream_click_purchase_full_outer",
-    "stream_events_late_data_drop",
+    "sim_cosine_topk_ivf_incremental",
+    "sim_cosine_topk_ivf_after_delete",
     "dedup_minhash_incremental",
+    "stream_scd1_upsert_priority",
     "mm_byte_histogram_features",
     "q_events_sessionize",
     "q_events_user_daily_activity",
@@ -100,8 +96,12 @@ VERIFY_PRIORITY: list[str] = [
     "sim_cosine_topk_ivf_trained",
     "sim_cosine_topk_ivf_pq_from_index",
     "sim_cosine_topk_ivf_pq_refine",
-    "sim_cosine_topk_ivf_incremental",
+    "stream_ivf_index_maintenance",
     "pii_redact_customers",
+    "text_bpe_token_stats",
+    "q_approx_sketches",
+    "sketch_countmin_user_counts",
+    "q_open_orders_daily",
 ]
 
 

@@ -99,6 +99,7 @@ def _corpus(args: argparse.Namespace) -> int:
     )
     from csv_parquet_s3_spark.operators.sampling import hash_split
     from csv_parquet_s3_spark.session import get_spark
+    from csv_parquet_s3_spark.sources.tables import read_parquet
 
     spark = get_spark(app_name="csv_parquet_s3_corpus")
     typed = convert_csv_dir(
@@ -118,7 +119,7 @@ def _corpus(args: argparse.Namespace) -> int:
     hash_split(keep, "doc_id").write.mode("overwrite").parquet(final_path)
     n_files = compact(spark, final_path)
 
-    n_kept = spark.read.parquet(final_path).count()
+    n_kept = read_parquet(spark, final_path).count()
     logger.info(
         "corpus pipeline: %d raw docs -> %d kept (%d near-dups removed), %d file(s) at %s",
         n_raw, n_kept, n_raw - n_kept, n_files, final_path,
@@ -132,6 +133,7 @@ def _query(args: argparse.Namespace) -> int:
     parquet sink — the ad-hoc front door to the 100+ operator surface."""
     from csv_parquet_s3_spark.operators import QUERIES
     from csv_parquet_s3_spark.session import get_spark
+    from csv_parquet_s3_spark.sources.tables import read_parquet
 
     if args.list:
         for name in sorted(QUERIES):
@@ -144,7 +146,7 @@ def _query(args: argparse.Namespace) -> int:
     df = QUERIES[args.name](spark, args.sf_dir)
     if args.out:
         df.write.mode("overwrite").parquet(args.out)
-        n = spark.read.parquet(args.out).count()
+        n = read_parquet(spark, args.out).count()
         logger.info("%s: %d row(s) written to %s", args.name, n, args.out)
     else:
         rows = df.limit(args.show).collect()

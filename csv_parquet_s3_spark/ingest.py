@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from csv_parquet_s3_spark.maintenance import staged
 from csv_parquet_s3_spark.schema import FieldSpec, load_schema, raw_struct_type
 from csv_parquet_s3_spark.session import PARQUET_BLOCK_SIZE
+from csv_parquet_s3_spark.sources.tables import read_parquet
 
 logger = logging.getLogger(__name__)
 
@@ -378,7 +379,7 @@ def convert_csv_dir(
         bad = {f for fields in obs.get["bad"] for f in fields}
         if strict and bad:  # raising inside `staged` discards the staging output
             raise _strict_error(glob, specs, bad)
-    return spark.read.parquet(out_dir)
+    return read_parquet(spark, out_dir)
 
 
 def convert_with_quarantine(

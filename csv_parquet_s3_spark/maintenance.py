@@ -20,9 +20,12 @@ object-store-native stand-in for indexes.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import os
 import shutil
+import tempfile
+import threading
 import uuid
 from collections.abc import Iterator
 
@@ -30,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from csv_parquet_s3_spark.session import PARQUET_BLOCK_SIZE
+from csv_parquet_s3_spark.sources.tables import read_parquet
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024  # one row group per file
 
@@ -52,6 +56,24 @@ def parquet_file_count(path: str) -> int:
         for f in files
         if f.endswith(".parquet") and not f.startswith(".")
     )
+
+
+_SCRATCH_ROOT: str | None = None
+_SCRATCH_LOCK = threading.Lock()
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new empty directory for one call's index, staging or checkpoint
+    files. The frame a query returns reads these files lazily, so they
+    cannot go when the call returns; every one lives under a single
+    per-process root in the system temp directory, removed at interpreter
+    exit."""
+    global _SCRATCH_ROOT
+    with _SCRATCH_LOCK:
+        if _SCRATCH_ROOT is None:
+            _SCRATCH_ROOT = tempfile.mkdtemp(prefix="csv_parquet_s3_spark_")
+            atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
 def _rm_any(path: str) -> None:
@@ -275,7 +297,7 @@ def delete_rows(
     a shuffled semi/anti join above that (r12 verdict #3)."""
     keys = [key] if isinstance(key, str) else list(key)
     vic = victims.select(*keys).distinct()
-    target = spark.read.parquet(path)
+    target = read_parquet(spark, path)
     n_gone = target.join(vic, keys, "left_semi").count()
     if n_gone == 0:
         return 0
@@ -308,7 +330,7 @@ def delete_where(
     delete ran to completion (the 0-match case reports status 'purged'
     with the dataset's full row count kept, without rewriting it).
     """
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     pred = F.coalesce(F.expr(where), F.lit(False))
     matched = df.filter(pred).count()
     if guard_max is not None and matched > guard_max:
@@ -318,7 +340,7 @@ def delete_where(
     if matched == 0:
         return "purged", 0, df.count()
     _staged_overwrite(df.filter(~pred), path, "._delete-")
-    return "purged", matched, spark.read.parquet(path).count()
+    return "purged", matched, read_parquet(spark, path).count()
 
 
 def compact(
@@ -334,7 +356,7 @@ def compact(
     footer min/max stats prune file scans for key predicates.
     """
     n_files = max(1, -(-dataset_bytes(path) // target_file_bytes))
-    df: DataFrame = spark.read.parquet(path)
+    df: DataFrame = read_parquet(spark, path)
     if sort_by:
         df = df.repartitionByRange(n_files, *[F.col(c) for c in sort_by])
         df = df.sortWithinPartitions(*sort_by)
@@ -362,7 +384,7 @@ def upsert(
     (`AutoPurge.sql:171-174`); this is the UPSERT.
     """
     keys = [key] if isinstance(key, str) else list(key)
-    target = spark.read.parquet(path)
+    target = read_parquet(spark, path)
     n_updated = target.join(updates.select(*keys).distinct(), keys, "left_semi").count()
     n_inserted = updates.count() - updates.join(
         target.select(*keys).distinct(), keys, "left_semi"
@@ -408,7 +430,7 @@ def compact_zorder(
     one-off cost that buys stats-based pruning on every subsequent scan
     (same trade as any Z-order OPTIMIZE). Returns the new file count."""
     n_files = max(1, -(-dataset_bytes(path) // target_file_bytes))
-    df = spark.read.parquet(path).withColumn("_z", _zorder_col(zorder_by))
+    df = read_parquet(spark, path).withColumn("_z", _zorder_col(zorder_by))
     df = df.repartitionByRange(n_files, F.col("_z")).sortWithinPartitions("_z").drop("_z")
     _staged_overwrite(df, path, "._zorder-")
     return parquet_file_count(path)
@@ -520,7 +542,7 @@ def compact_hilbert(
     count."""
     bits = min(bits, 63 // max(1, len(hilbert_by)))
     n_files = max(1, -(-dataset_bytes(path) // target_file_bytes))
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     buckets = []
     for j, c in enumerate(hilbert_by):
         df = df.withColumn(

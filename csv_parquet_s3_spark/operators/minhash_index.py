@@ -12,18 +12,17 @@ update / query) expressed as three dataframe functions.
 
 from __future__ import annotations
 
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from csv_parquet_s3_spark.maintenance import upsert
+from csv_parquet_s3_spark.maintenance import scratch_dir, upsert
 from csv_parquet_s3_spark.operators.dedup import (
     signature_table,
     verified_pairs_from_signatures,
 )
 from csv_parquet_s3_spark.operators.registry import ORACLES, register
-from csv_parquet_s3_spark.sources.tables import load_table
+from csv_parquet_s3_spark.sources.tables import load_table, read_parquet
 from csv_parquet_s3_spark.plans.materialize import materialize
 
 
@@ -57,7 +56,7 @@ def update_index(spark: SparkSession, new_docs: DataFrame, index_path: str) -> t
 
 def pairs_from_index(spark: SparkSession, index_path: str) -> DataFrame:
     """Jaccard-verified near-dup pairs straight from the stored index."""
-    return verified_pairs_from_signatures(spark.read.parquet(index_path))
+    return verified_pairs_from_signatures(read_parquet(spark, index_path))
 
 
 def pairs_against_index(
@@ -79,7 +78,7 @@ def pairs_against_index(
     # ContextCleaner on GC (a bare persist() here leaked cache — there is no
     # in-function point where the lazy result has materialized).
     new_sigs = signature_table(_shingles_of(new_docs)).transform(materialize)
-    idx_sigs = spark.read.parquet(index_path)
+    idx_sigs = read_parquet(spark, index_path)
     nb = bands_from_signatures(new_sigs).alias("n")
     ib = bands_from_signatures(idx_sigs).alias("i")
     candidates = (
@@ -135,7 +134,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus oracle pins incremental ≡ full build through the driver.
     """
     docs = load_table(spark, sf_dir, "documents")
-    idx = tempfile.mkdtemp(prefix="minhash_idx_")
+    idx = scratch_dir("minhash_idx_")
     build_index(spark, docs.filter(F.col("doc_id") % 2 == 0), idx)
     update_index(spark, docs.filter(F.col("doc_id") % 2 == 1), idx)
     return pairs_from_index(spark, idx)
@@ -223,10 +222,8 @@ def dedup_minhash_batch_vs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixed-parity pairs, so a green hash pins that probing the stored index
     finds exactly the cross-corpus pairs a monolithic run would.
     """
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
-    idx = tempfile.mkdtemp(prefix="minhash_probe_idx_")
+    idx = scratch_dir("minhash_probe_idx_")
     build_index(spark, docs.filter(F.col("doc_id") % 2 == 0), idx)
     return pairs_against_index(spark, docs.filter(F.col("doc_id") % 2 == 1), idx)
 

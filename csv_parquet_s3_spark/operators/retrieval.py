@@ -25,6 +25,7 @@ from csv_parquet_s3_spark.maintenance import (
     _staged_overwrite,
     compact,
     ensure_published,
+    scratch_dir,
     upsert,
 )
 from csv_parquet_s3_spark.operators.registry import ORACLES, register
@@ -34,7 +35,7 @@ from csv_parquet_s3_spark.operators.similarity import (
     _dot,
     _with_norm,
 )
-from csv_parquet_s3_spark.sources.tables import load_table
+from csv_parquet_s3_spark.sources.tables import load_table, read_parquet
 from csv_parquet_s3_spark.plans.materialize import materialize
 
 N_QUERIES = 5   # doc_id < 5 are the probe queries (same convention as similarity)
@@ -560,7 +561,7 @@ def _bm25_stats_scalars(spark: SparkSession, index_path: str) -> tuple[int, floa
             )
         except (ImportError, OSError, ValueError):
             pass
-    row = spark.read.parquet(path).select("n_docs", "avgdl").collect()[0]
+    row = read_parquet(spark, path).select("n_docs", "avgdl").collect()[0]
     return int(row["n_docs"]), float(row["avgdl"])
 
 
@@ -572,13 +573,13 @@ def _bm25_serve_from(spark: SparkSession, index_path: str) -> DataFrame:
     literals (no stats scan, no cross-join) — the scoring pass reads
     doc_tf once, probes it once for query terms, and broadcast-joins the
     vocabulary-sized df table."""
-    doc_tf = spark.read.parquet(f"{index_path}/doc_tf")
+    doc_tf = read_parquet(spark, f"{index_path}/doc_tf")
     if "dl" not in doc_tf.columns:
         raise ValueError(
             f"{index_path}/doc_tf: no dl column — index predates bm25_layout"
             " 4; run a full build (ensure_bm25_index rebuilds on the bump)"
         )
-    df = spark.read.parquet(f"{index_path}/df")
+    df = read_parquet(spark, f"{index_path}/df")
     n_docs, avgdl = _bm25_stats_scalars(spark, index_path)
     qterms = doc_tf.filter(F.col("doc_id") < N_QUERIES).select(
         F.col("doc_id").alias("query_id"), "token"
@@ -642,7 +643,7 @@ def update_bm25_index(
     import os
 
     stats_path = f"{index_path}/stats"
-    old_stats = spark.read.parquet(stats_path)
+    old_stats = read_parquet(spark, stats_path)
     if "sum_dl" not in old_stats.columns:
         raise ValueError(
             f"{stats_path}: no sum_dl column — index predates bm25_layout 3; "
@@ -650,7 +651,7 @@ def update_bm25_index(
         )
     st = old_stats.collect()[0]
 
-    old_tf = spark.read.parquet(f"{index_path}/doc_tf")
+    old_tf = read_parquet(spark, f"{index_path}/doc_tf")
     if "dl" not in old_tf.columns:
         raise ValueError(
             f"{index_path}/doc_tf: no dl column — index predates bm25_layout"
@@ -672,7 +673,7 @@ def update_bm25_index(
         .transform(materialize)
     )
     repl = (
-        spark.read.parquet(f"{index_path}/dl")
+        read_parquet(spark, f"{index_path}/dl")
         .join(F.broadcast(new_ids), "doc_id", "left_semi")
         .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
         .collect()[0]
@@ -703,7 +704,7 @@ def update_bm25_index(
         .filter(F.col("net") != 0)
     )
     df_new = (
-        spark.read.parquet(f"{index_path}/df")
+        read_parquet(spark, f"{index_path}/df")
         .join(net, "token", "full_outer")
         .select(
             "token",
@@ -746,7 +747,7 @@ def delete_from_bm25_index(
     import os
 
     stats_path = f"{index_path}/stats"
-    old_stats = spark.read.parquet(stats_path)
+    old_stats = read_parquet(spark, stats_path)
     if "sum_dl" not in old_stats.columns:
         raise ValueError(
             f"{stats_path}: no sum_dl column — index predates bm25_layout 3; "
@@ -756,14 +757,14 @@ def delete_from_bm25_index(
     victims = doc_ids.select("doc_id").distinct().transform(materialize)
 
     df_sub = (
-        spark.read.parquet(f"{index_path}/doc_tf")
+        read_parquet(spark, f"{index_path}/doc_tf")
         .join(F.broadcast(victims), "doc_id", "left_semi")
         .groupBy("token")
         .agg(F.count("*").alias("sub"))
         .transform(materialize)
     )
     gone = (
-        spark.read.parquet(f"{index_path}/dl")
+        read_parquet(spark, f"{index_path}/dl")
         .join(F.broadcast(victims), "doc_id", "left_semi")
         .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
         .collect()[0]
@@ -775,13 +776,13 @@ def delete_from_bm25_index(
         fh.write("delete in flight — see bm25_index_consistent()\n")
 
     for table in ("doc_tf", "dl"):
-        kept = spark.read.parquet(f"{index_path}/{table}").join(
+        kept = read_parquet(spark, f"{index_path}/{table}").join(
             F.broadcast(victims), "doc_id", "left_anti"
         )
         _staged_overwrite(kept, f"{index_path}/{table}", "._refresh-")
 
     df_new = (
-        spark.read.parquet(f"{index_path}/df")
+        read_parquet(spark, f"{index_path}/df")
         .join(df_sub, "token", "full_outer")
         .select(
             "token",
@@ -860,10 +861,8 @@ def retrieval_bm25_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     DELETE, applied to a served index). Completes the index CRUD story:
     build (full), update (merge batch), delete (purge docs), compact
     (restore layout), serve (probe stored parquet)."""
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
-    idx = tempfile.mkdtemp(prefix="bm25_idx_")
+    idx = scratch_dir("bm25_idx_")
     build_bm25_index(spark, docs, idx)
     delete_from_bm25_index(
         spark, docs.filter(F.col("doc_id") % 2 == 1).select("doc_id"), idx
@@ -891,13 +890,13 @@ def compact_bm25_index(spark: SparkSession, index_path: str) -> None:
 
     compact(spark, f"{index_path}/doc_tf", sort_by=["doc_id", "token"])
     compact(spark, f"{index_path}/dl", sort_by=["doc_id"])
-    doc_tf = spark.read.parquet(f"{index_path}/doc_tf")
+    doc_tf = read_parquet(spark, f"{index_path}/doc_tf")
     _staged_overwrite(
         doc_tf.groupBy("token").agg(F.count("*").alias("df")),
         f"{index_path}/df",
         "._refresh-",
     )
-    dl = spark.read.parquet(f"{index_path}/dl")
+    dl = read_parquet(spark, f"{index_path}/dl")
     _staged_overwrite(_bm25_stats(dl), f"{index_path}/stats", "._refresh-")
     pending = os.path.join(index_path, _BM25_PENDING)
     if os.path.exists(pending):
@@ -919,10 +918,8 @@ def retrieval_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     build/update/query index lifecycle (MinHash: minhash_index.py; IVF×PQ:
     similarity_index.py) extended to the lexical ranker.
     """
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
-    idx = tempfile.mkdtemp(prefix="bm25_idx_")
+    idx = scratch_dir("bm25_idx_")
     build_bm25_index(spark, docs.filter(F.col("doc_id") % 2 == 0), idx)
     update_bm25_index(spark, docs.filter(F.col("doc_id") % 2 == 1), idx)
     return _bm25_serve_from(spark, idx)
@@ -945,10 +942,8 @@ def retrieval_bm25_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     changed the bytes' layout, never the answer. The layout property itself
     (range-disjoint doc_id files → probe pruning) is test-pinned via
     parquet footer min/max stats."""
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
-    idx = tempfile.mkdtemp(prefix="bm25_idx_")
+    idx = scratch_dir("bm25_idx_")
     build_bm25_index(spark, docs.filter(F.col("doc_id") % 2 == 0), idx)
     update_bm25_index(spark, docs.filter(F.col("doc_id") % 2 == 1), idx)
     compact_bm25_index(spark, idx)

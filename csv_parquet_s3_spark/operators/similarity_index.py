@@ -17,12 +17,11 @@ tracks the batch, never the corpus.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from csv_parquet_s3_spark.maintenance import upsert
+from csv_parquet_s3_spark.maintenance import scratch_dir, upsert
 from csv_parquet_s3_spark.operators.registry import register
 from csv_parquet_s3_spark.operators.similarity import (
     _ORACLE_DOT,
@@ -34,7 +33,7 @@ from csv_parquet_s3_spark.operators.similarity import (
     _dot,
     _with_norm,
 )
-from csv_parquet_s3_spark.sources.tables import load_table
+from csv_parquet_s3_spark.sources.tables import load_table, read_parquet
 from csv_parquet_s3_spark.plans.materialize import materialize
 
 
@@ -76,7 +75,7 @@ def _read_lists(spark: SparkSession, path: str) -> DataFrame:
     before pruning (UnwrapCastInBinaryComparison), so partition filters
     still reach the directory listing (plan-pinned in
     tests/test_round8_wave.py)."""
-    return spark.read.parquet(path).withColumn(
+    return read_parquet(spark, path).withColumn(
         "list_id", F.col("list_id").cast("bigint")
     )
 
@@ -128,7 +127,7 @@ def build_ivf_index(
             )
         )
     cent.write.mode("overwrite").parquet(f"{index_path}/centroids")
-    stored_cent = spark.read.parquet(f"{index_path}/centroids")
+    stored_cent = read_parquet(spark, f"{index_path}/centroids")
     assign = _assign(emb.select("vec_id", "vd", "norm"), stored_cent)
     # Physically cluster the inverted lists: hive-partition by list_id so
     # each list IS a directory (see _write_list_clustered). The per-query
@@ -142,7 +141,7 @@ def update_ivf_index(spark: SparkSession, new_vectors: DataFrame, index_path: st
     """Incremental: assign the new batch against the STORED quantizer and
     merge by vec_id (re-ingested vectors get reassigned). Returns
     (n_updated, n_inserted)."""
-    cent = spark.read.parquet(f"{index_path}/centroids")
+    cent = read_parquet(spark, f"{index_path}/centroids")
     assign = _assign(_with_norm(new_vectors).select("vec_id", "vd", "norm"), cent)
     return upsert(spark, f"{index_path}/assign", assign, key="vec_id")
 
@@ -156,7 +155,7 @@ def topk_from_index(
     is Σ|probed lists|, not the corpus. The scoring join against the
     broadcast probes frame lets dynamic partition pruning skip directories
     inside the same job, with no driver round-trip."""
-    cent = spark.read.parquet(f"{index_path}/centroids")
+    cent = read_parquet(spark, f"{index_path}/centroids")
     assign = _read_lists(spark, f"{index_path}/assign")
     q = _with_norm(queries).select(
         F.col("vec_id").alias("query_id"),
@@ -384,7 +383,7 @@ def sim_cosine_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked rather than rows-only.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    idx = tempfile.mkdtemp(prefix="ivf_trained_")
+    idx = scratch_dir("ivf_trained_")
     build_ivf_index(spark, emb, _SEEDS, idx, train_iters=TRAIN_ITERS)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     return topk_from_index(spark, queries, idx, N_PROBE)
@@ -1424,7 +1423,7 @@ def build_ivf_pq_index(spark: SparkSession, emb: DataFrame, index_path: str) -> 
         )
     )
     cent.write.mode("overwrite").parquet(f"{index_path}/centroids")
-    cent_s = spark.read.parquet(f"{index_path}/centroids")
+    cent_s = read_parquet(spark, f"{index_path}/centroids")
     k = cent_s.count()
     _write_list_clustered(
         _assign(vec, cent_s).select("vec_id", "list_id"),
@@ -1435,7 +1434,7 @@ def build_ivf_pq_index(spark: SparkSession, emb: DataFrame, index_path: str) -> 
 
     books = train_pq_codebooks(spark, emb)
     books.write.mode("overwrite").parquet(f"{index_path}/codebooks")
-    books_s = spark.read.parquet(f"{index_path}/codebooks")
+    books_s = read_parquet(spark, f"{index_path}/codebooks")
     _write_list_clustered(
         pq_encode(emb, books_s).join(assign_s, "vec_id"), k, f"{index_path}/codes"
     )
@@ -1470,7 +1469,7 @@ def ivf_pq_topk_from_index(
     assignment, and ADC-ranks their codes. Per-query cost is
     (nprobe/K)·corpus code lookups; the raw embedding column is never read
     at query time."""
-    books = spark.read.parquet(f"{index_path}/codebooks")
+    books = read_parquet(spark, f"{index_path}/codebooks")
     candidates, probes = _stored_coarse_candidates(spark, queries, index_path, nprobe)
     codes = _restrict_to_probed(
         _read_lists(spark, f"{index_path}/codes"), probes
@@ -1489,7 +1488,7 @@ def _stored_coarse_candidates(
     what the caller hands :func:`_restrict_to_probed` so every per-list
     artifact scan skips the unprobed lists' directories through
     join-triggered dynamic partition pruning."""
-    cent = spark.read.parquet(f"{index_path}/centroids")
+    cent = read_parquet(spark, f"{index_path}/centroids")
     assign = _read_lists(spark, f"{index_path}/coarse_assign")
     q = _with_norm(queries).select("vec_id", "vd", "norm")
     wq = W.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("list_id"))
@@ -1567,7 +1566,7 @@ def _sq8_stats_vectors(
             return [t["mn"][i] for i in order], [t["mx"][i] for i in order]
         except (ImportError, OSError, ValueError):
             pass
-    rows = spark.read.parquet(path).orderBy("dim").collect()
+    rows = read_parquet(spark, path).orderBy("dim").collect()
     return [r["mn"] for r in rows], [r["mx"] for r in rows]
 
 
@@ -1886,7 +1885,7 @@ def sim_cosine_topk_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFra
     BM25 index lifecycles meet (`dedup_minhash_incremental`,
     `retrieval_bm25_incremental`)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    idx = tempfile.mkdtemp(prefix="ivf_inc_reg_")
+    idx = scratch_dir("ivf_inc_reg_")
     tail = (F.col("vec_id") % 2 == 1) & (F.col("vec_id") >= _TAIL_START)
     build_ivf_index(spark, emb.filter(~tail), _SEEDS, idx)
     update_ivf_index(spark, emb.filter(tail), idx)
@@ -1911,7 +1910,7 @@ def sim_cosine_topk_ivf_after_delete(spark: SparkSession, sf_dir: str) -> DataFr
     completes the plain-IVF index CRUD story to the same standard as BM25
     (`retrieval_bm25_after_delete`)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    idx = tempfile.mkdtemp(prefix="ivf_del_reg_")
+    idx = scratch_dir("ivf_del_reg_")
     build_ivf_index(spark, emb, _SEEDS, idx)
     tail = (F.col("vec_id") % 2 == 1) & (F.col("vec_id") >= _TAIL_START)
     delete_from_ivf_index(spark, emb.filter(tail), idx)
@@ -1930,6 +1929,6 @@ def compact_ivf_index(spark: SparkSession, index_path: str) -> None:
     from csv_parquet_s3_spark.maintenance import staged
 
     path = f"{index_path}/assign"
-    k = spark.read.parquet(f"{index_path}/centroids").count()
+    k = read_parquet(spark, f"{index_path}/centroids").count()
     with staged(path, "._compact-") as staging:
         _write_list_clustered(_read_lists(spark, path), int(k), staging)

@@ -19,15 +19,14 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from csv_parquet_s3_spark.maintenance import _staged_overwrite
+from csv_parquet_s3_spark.maintenance import _staged_overwrite, scratch_dir
 from csv_parquet_s3_spark.operators.registry import register
-from csv_parquet_s3_spark.sources.tables import load_table, table_path
+from csv_parquet_s3_spark.sources.tables import load_table, read_parquet, table_path
 from csv_parquet_s3_spark.streaming.events_stream import (
     hourly_event_rollup,
     session_window_counts,
@@ -55,7 +54,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the batch loader (nanos-int64 and timestamp_ntz vintages both → LTZ)."""
     path = table_path(sf_dir, "events")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     # FileStreamSource wants a DIRECTORY; select just the events file from
     # the shared sf dir with a glob filter.
     stream = (
@@ -268,11 +267,11 @@ def stream_bm25_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     from csv_parquet_s3_spark.streaming.index_stream import stream_update_bm25_index
 
     docs = _lt(spark, sf_dir, "documents")
-    idx = tempfile.mkdtemp(prefix="bm25_stream_idx_")
+    idx = scratch_dir("bm25_stream_idx_")
     build_bm25_index(spark, docs.filter(F.col("doc_id") % 2 == 0), idx)
 
-    staging = tempfile.mkdtemp(prefix="bm25_stream_src_")
-    ckpt = tempfile.mkdtemp(prefix="bm25_stream_ckpt_")
+    staging = scratch_dir("bm25_stream_src_")
+    ckpt = scratch_dir("bm25_stream_ckpt_")
     try:
         odd = docs.filter(F.col("doc_id") % 2 == 1)
         _stage_file(
@@ -282,7 +281,7 @@ def stream_bm25_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
             odd.filter(F.col("doc_id") % 4 == 3), staging, "01_batch.parquet", 1_000_000_100
         )
 
-        schema = spark.read.parquet(os.path.join(staging, "00_batch.parquet")).schema
+        schema = read_parquet(spark, os.path.join(staging, "00_batch.parquet")).schema
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
@@ -343,11 +342,11 @@ def stream_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _lt(spark, sf_dir, "embeddings")
     tail = (F.col("vec_id") % 2 == 1) & (F.col("vec_id") >= _TAIL_START)
-    idx = tempfile.mkdtemp(prefix="ivf_stream_idx_")
+    idx = scratch_dir("ivf_stream_idx_")
     build_ivf_index(spark, emb.filter(~tail), _SEEDS, idx)
 
-    staging = tempfile.mkdtemp(prefix="ivf_stream_src_")
-    ckpt = tempfile.mkdtemp(prefix="ivf_stream_ckpt_")
+    staging = scratch_dir("ivf_stream_src_")
+    ckpt = scratch_dir("ivf_stream_ckpt_")
     try:
         late = emb.filter(tail)
         _stage_file(
@@ -357,7 +356,7 @@ def stream_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             late.filter(F.col("vec_id") % 4 == 3), staging, "01_batch.parquet", 1_000_000_100
         )
 
-        schema = spark.read.parquet(os.path.join(staging, "00_batch.parquet")).schema
+        schema = read_parquet(spark, os.path.join(staging, "00_batch.parquet")).schema
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
@@ -469,7 +468,7 @@ def _staged_outer_join_drain(spark: SparkSession, sf_dir: str, join_fn) -> DataF
             f"events table at {sf_dir} is empty — the outer-join drain needs "
             "a real corpus to anchor its watermark carriers"
         )
-    staging = tempfile.mkdtemp(prefix="spark_graft_outer_")
+    staging = scratch_dir("spark_graft_outer_")
     try:
         _stage_file(ev, staging, "00_main.parquet", 1_000_000_000)
         _stage_file(
@@ -491,7 +490,7 @@ def _staged_outer_join_drain(spark: SparkSession, sf_dir: str, join_fn) -> DataF
             1_000_000_200,
         )
 
-        schema = spark.read.parquet(os.path.join(staging, "00_main.parquet")).schema
+        schema = read_parquet(spark, os.path.join(staging, "00_main.parquet")).schema
 
         def _src() -> DataFrame:
             return (
@@ -758,7 +757,7 @@ def stream_scd1_upsert_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     path = table_path(sf_dir, "orders")
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "orders.parquet")
@@ -766,7 +765,7 @@ def stream_scd1_upsert_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
         .select("o_custkey", "o_orderpriority", "o_orderdate", "o_orderkey")
     )
-    target = os.path.join(tempfile.mkdtemp(prefix="scd1_stream_"), "current")
+    target = os.path.join(scratch_dir("scd1_stream_"), "current")
 
     def _latest(df: DataFrame) -> DataFrame:
         wk = W.partitionBy("o_custkey").orderBy(
@@ -784,7 +783,7 @@ def stream_scd1_upsert_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         s = batch_df.sparkSession
         latest = _latest(batch_df)
         if os.path.exists(target):
-            latest = _latest(s.read.parquet(target).unionByName(latest))
+            latest = _latest(read_parquet(s, target).unionByName(latest))
         # staged swap: a reader (or a failed batch) never sees a
         # half-written or missing state
         _staged_overwrite(latest, target, "._upsert-")
@@ -793,13 +792,13 @@ def stream_scd1_upsert_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.writeStream.foreachBatch(_merge)
         .option(
             "checkpointLocation",
-            os.path.join(tempfile.mkdtemp(prefix="scd1_stream_ck_"), "ck"),
+            os.path.join(scratch_dir("scd1_stream_ck_"), "ck"),
         )
         .trigger(availableNow=True)
         .start()
     )
     assert q.awaitTermination(420), "streaming upsert did not finish"
-    return spark.read.parquet(target).select(
+    return read_parquet(spark, target).select(
         "o_custkey",
         F.col("o_orderpriority").alias("current_priority"),
         F.col("o_orderdate").alias("last_change"),
@@ -1019,7 +1018,7 @@ def stream_events_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"events table at {sf_dir} is empty — the late-data probe needs "
             "a real corpus to anchor its watermark carrier and probe rows"
         )
-    staging = tempfile.mkdtemp(prefix="spark_graft_late_")
+    staging = scratch_dir("spark_graft_late_")
     try:
         _stage_file(ev, staging, "00_main.parquet", 1_000_000_000)
         # Watermark carrier: event time = corpus max, so it advances nothing
@@ -1035,7 +1034,7 @@ def stream_events_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _stage_file(late, staging, "02_late.parquet", 1_000_000_200)
 
-        schema = spark.read.parquet(os.path.join(staging, "00_main.parquet")).schema
+        schema = read_parquet(spark, os.path.join(staging, "00_main.parquet")).schema
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")

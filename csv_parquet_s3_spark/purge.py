@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from csv_parquet_s3_spark.maintenance import _staged_overwrite, delete_where
+from csv_parquet_s3_spark.sources.tables import read_parquet
 
 logger = logging.getLogger(__name__)
 
@@ -123,7 +124,7 @@ class Purger:
             df.write.mode("append").parquet(self.audit_path)
 
     def _load(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self._table_path(table))
+        return read_parquet(self.spark, self._table_path(table))
 
     # -- actions -----------------------------------------------------------
     def _truncate(self, cfg: PurgeConfig) -> PurgeOutcome:

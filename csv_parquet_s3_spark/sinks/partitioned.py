@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from csv_parquet_s3_spark.sources.tables import read_parquet
+
 PARTITION_COL = "event_date"
 
 
@@ -43,6 +45,6 @@ def read_day_range(
 ) -> DataFrame:
     """Scan only the partitions in [start_day, end_day] — the filter is on
     the partition column, so it prunes directories, not rows."""
-    return spark.read.parquet(path).filter(
+    return read_parquet(spark, path).filter(
         (F.col(PARTITION_COL) >= start_day) & (F.col(PARTITION_COL) <= end_day)
     )

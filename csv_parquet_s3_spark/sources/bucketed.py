@@ -87,6 +87,7 @@ def materialize_bucketed_facts(
     import os
 
     from csv_parquet_s3_spark.sources.tables import (
+        read_parquet,
         set_bucketed_override,
         table_path,
     )
@@ -108,7 +109,7 @@ def materialize_bucketed_facts(
             # repartition on the bucket key first: each task then holds a
             # hash-slice of keys, so the writer emits ~one file per bucket
             # instead of n_tasks × n_buckets fragments.
-            df = spark.read.parquet(table_path(sf_dir, name)).repartition(
+            df = read_parquet(spark, table_path(sf_dir, name)).repartition(
                 n_buckets, key
             )
             write_bucketed(df, catalog_table, [key], n_buckets)

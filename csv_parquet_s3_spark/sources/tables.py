@@ -1,18 +1,30 @@
-"""Parquet table catalog for the driver's synthetic star schema.
+"""Parquet table catalog for the driver's synthetic star schema, and the
+package's one Parquet reader.
 
 A "table" is a directory-or-file of Parquet, mirroring the reference's
 dataset-as-directory-of-files model (SURVEY.md §1.1, ``Main.java:34-37``).
-Reads go through ``spark.read.parquet`` so Catalyst gets filter pushdown and
-column pruning for free; at 100 TB each table is just a bigger directory with
-the same code path.
+Every single-path Parquet read in the package goes through
+:func:`read_parquet`, so Catalyst gets filter pushdown and column pruning for
+free; at 100 TB each table is just a bigger directory with the same code path.
+
+A Parquet read given no schema runs a one-task Spark job that reads a footer
+to infer the schema, on every call. :func:`read_parquet` keeps
+the inferred schema per path, keyed on the identity of every file under it
+and on the session confs that change inference, so a dataset that has not
+changed since it was last read is opened with no job. This is metadata read
+once per file version, never a result: the rows are read on every execution.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from csv_parquet_s3_spark.config import env_int
 
@@ -38,6 +50,79 @@ BROADCAST_TABLES = frozenset({"region", "nation"})
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+# Session confs whose values change the schema Spark infers from the same
+# files; each is part of the memo key.
+INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+# Paths whose schema is kept; the least recently read is dropped first.
+SCHEMA_MEMO_PATHS = 256
+
+# abspath -> (key, inferred schema); one entry per path, replaced when the key
+# changes. Shared by every session in the process, hence the lock.
+_SCHEMAS: OrderedDict[str, tuple[tuple, StructType]] = OrderedDict()
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _file_identity(path: str) -> tuple | None:
+    """``(relative path, size, st_mtime_ns)`` of every file under ``path``
+    (the rule ``_embeddings_fingerprint`` uses for one file), or None when
+    ``path`` cannot be statted locally: a remote URI such as ``s3a://...``,
+    a missing path, or a file removed while it was walked."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_size, st.st_mtime_ns),)
+        files = []
+        for root, _dirs, names in os.walk(path):
+            for name in names:
+                full = os.path.join(root, name)
+                fst = os.stat(full)
+                files.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(sorted(files))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    version.
+
+    On a hit (same files, sizes and mtimes under ``path``, same
+    :data:`INFERENCE_CONFS` values) the stored schema is handed to the reader
+    and no Spark job runs. On a miss the read is exactly
+    ``spark.read.parquet(path)``: a first read, a rewritten dataset, an empty
+    directory or a missing path behaves and errors as it always has, and the
+    inferred schema is stored only when the files did not change during
+    inference. Paths that cannot be statted locally are inferred on every
+    read."""
+    files = _file_identity(path)
+    if files is None:
+        return spark.read.parquet(path)
+    key = (files, tuple(spark.conf.get(c) for c in INFERENCE_CONFS))
+    apath = os.path.abspath(path)
+    with _SCHEMAS_LOCK:
+        hit = _SCHEMAS.get(apath)
+        schema = hit[1] if hit is not None and hit[0] == key else None
+        if schema is not None:
+            _SCHEMAS.move_to_end(apath)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if _file_identity(path) == files:
+        with _SCHEMAS_LOCK:
+            _SCHEMAS[apath] = (key, df.schema)
+            _SCHEMAS.move_to_end(apath)
+            while len(_SCHEMAS) > SCHEMA_MEMO_PATHS:
+                _SCHEMAS.popitem(last=False)
+    return df
 
 
 # Size gate for broadcast hints on SF-scaling tables (supplier/part/customer
@@ -130,7 +215,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # (LTZ): with the session timezone pinned to UTC the NTZ→LTZ cast is
         # wall-clock-identity and matches DuckDB's naive read exactly.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = read_parquet(spark, table_path(sf_dir, name))
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn(
@@ -139,7 +224,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:

@@ -5,12 +5,14 @@ query out of coverage."""
 from __future__ import annotations
 
 import importlib.util
+import os
 
 WINDOW = 50
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _entry_module():
-    spec = importlib.util.spec_from_file_location("e", "/root/repo/__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("e", os.path.join(REPO, "__spark_entry__.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
@@ -56,7 +58,7 @@ def test_rotation_tool_prioritizes_unverified_queries():
     hash-green ones, so each round's window buys maximum new signal."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(REPO, "tools"))
     import rotate_window
 
     state = rotate_window.classify()

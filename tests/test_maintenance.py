@@ -4,6 +4,8 @@ rewrite with selective row-group stats."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -590,3 +592,26 @@ def test_staged_bootstraps_a_missing_path_and_rejects_unknown_markers(spark, tmp
     with pytest.raises(ValueError, match=r"\._bogus-"):
         with staged(path, "._bogus-"):
             pass
+
+
+def test_scratch_dirs_exist_while_the_process_runs_and_go_at_exit(tmp_path):
+    """Every per-call index, staging and checkpoint directory comes from
+    ``scratch_dir``: one per-process root in the temp directory, removed at
+    interpreter exit, so a long sweep leaves nothing behind. No Spark."""
+    code = (
+        "import os\n"
+        "from csv_parquet_s3_spark.maintenance import scratch_dir\n"
+        "a, b = scratch_dir('idx_'), scratch_dir('ckpt_')\n"
+        "assert a != b and os.path.isdir(a) and os.path.isdir(b)\n"
+        "assert os.path.dirname(a) == os.path.dirname(b)\n"
+        "open(os.path.join(a, 'part-0.parquet'), 'w').write('x')\n"
+        "print(os.path.dirname(a))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": repo}
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True, timeout=120
+    )
+    assert out.returncode == 0, out.stderr
+    assert os.path.dirname(out.stdout.strip()) == str(tmp_path)
+    assert os.listdir(tmp_path) == []
