@@ -45,13 +45,18 @@ def entry(spark: SparkSession) -> DataFrame:
 # listed first: the rotation output PLUS re-pins at the head for the
 # queries the latest change touched.
 VERIFY_PRIORITY: list[str] = [
-    # RE-PINS FIRST — the seven queries that read a path again after
-    # rewriting it in the same call (BM25 and IVF index update, delete and
-    # compaction, the MinHash incremental index, the streaming SCD1 state),
-    # so they exercise read_parquet's schema-memo invalidation. Then the
-    # verbatim tools/rotate_window.py output against CORRECTNESS_r13 in its
-    # printed order. The five displaced tail entries (q_table_content_digest
-    # through dedup_sorted_neighborhood_pairs) are hash-green r10.
+    # RE-PINS FIRST — the BM25 and SQ8 stored-index serves, whose stats
+    # readout now goes through sources.tables.read_small_table; then the
+    # seven queries that read a path again after rewriting it in the same
+    # call (BM25 and IVF index update, delete and compaction, the MinHash
+    # incremental index, the streaming SCD1 state), so they exercise
+    # read_parquet's schema-memo invalidation. Then the verbatim
+    # tools/rotate_window.py output against CORRECTNESS_r13 in its printed
+    # order. The seven displaced tail entries (q_table_content_digest
+    # through dedup_sorted_neighborhood_pairs, then
+    # sketch_countmin_user_counts and q_open_orders_daily) are hash-green.
+    "retrieval_bm25_from_index",
+    "sim_cosine_topk_ivf_sq8_from_index",
     "retrieval_bm25_incremental",
     "retrieval_bm25_after_delete",
     "retrieval_bm25_compacted",
@@ -100,8 +105,6 @@ VERIFY_PRIORITY: list[str] = [
     "pii_redact_customers",
     "text_bpe_token_stats",
     "q_approx_sketches",
-    "sketch_countmin_user_counts",
-    "q_open_orders_daily",
 ]
 
 

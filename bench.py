@@ -181,12 +181,12 @@ def main() -> None:
     # (a) a pure-JVM whole-stage-codegen loop (no IO), (b) a raw full scan
     # of the largest table. Run BEFORE and AFTER the query loop: delivered
     # host CPU throughput fluctuates ±15% on minute timescales with zero
-    # guest-visible steal (measured r06 — two identical back-to-back bench
-    # runs differed ×1.45 with no code change; r04→r05/r06 moved ALL
-    # unchanged queries ×1.25 in lockstep). Query medians divided by the
-    # calibration decompose round-over-round drift into machine speed vs
-    # plan regressions; pre/post disagreement flags a run that straddled a
-    # speed shift. See NOTES_NEXT_ROUND.md.
+    # guest-visible steal (two identical back-to-back bench runs differed
+    # ×1.45 with no code change; between rounds ALL unchanged queries moved
+    # ×1.25 in lockstep). Query medians divided by the calibration
+    # decompose round-over-round drift into machine speed vs plan
+    # regressions; pre/post disagreement flags a run that straddled a speed
+    # shift.
     def calibrate(tag: str) -> dict[str, float]:
         out: dict[str, float] = {}
         for cname, thunk in (

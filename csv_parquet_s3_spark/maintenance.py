@@ -190,7 +190,7 @@ def publish_version(root: str, staged: str) -> str:
 
     Versioned-root layout — the manifest indirection that closes the
     rename-aside gap (its two-rename swap left an instant with no root at
-    all; the r08 advisory called it out twice):
+    all):
 
         <root>/_CURRENT     line 1: the active version's directory name;
                             line 2 (optional): the version it superseded
@@ -199,7 +199,7 @@ def publish_version(root: str, staged: str) -> str:
     The flip is ONE ``os.replace`` of the pointer file — POSIX rename(2)
     atomicity — so a concurrent reader always resolves either the previous
     complete version or the new one; the root is never missing and never
-    partial. Vacuum policy (r09 advisory: an immediate unlink of the
+    partial. Vacuum policy (an immediate unlink of the
     superseded version races a reader that resolved it just before the
     flip — Spark plans are lazy, files open at job execution, so "the OS
     keeps unlinked files readable" does NOT protect a resolved-but-not-yet-
@@ -238,7 +238,7 @@ def ensure_published(
     ensure_* (BM25 / MinHash / IVF×PQ): fingerprint guard, crash-marker
     validity hook, staged build, one-atomic-rename publication.
 
-    Hygiene (r09 advisory): a build that THROWS removes its partial
+    Hygiene: a build that THROWS removes its partial
     staging dir before re-raising, and the fingerprint-match fast path
     vacuums anything that is neither the active version nor the pointer-
     recorded previous generation — so a hard-crashed build's ``v-<uuid>``
@@ -257,8 +257,8 @@ def ensure_published(
             cur_name, prev_name = _read_pointer(root)
             # cur_name can be None if the pointer vanished between
             # resolve_published and this re-read; vacuuming with keep={None}
-            # would reap EVERY version including the active one (r10
-            # advisory) — skip the fast-path vacuum in that window.
+            # would reap EVERY version including the active one — skip the
+            # fast-path vacuum in that window.
             if cur_name:
                 _vacuum_root(root, {cur_name} | ({prev_name} if prev_name else set()))
             return cur
@@ -294,7 +294,7 @@ def delete_rows(
     purge can pass millions of keys — so it is never force-broadcast (a
     hint has no AQE size fallback and would OOM the driver); CBO/AQE pick
     broadcast whenever the distinct key set genuinely fits, and degrade to
-    a shuffled semi/anti join above that (r12 verdict #3)."""
+    a shuffled semi/anti join above that."""
     keys = [key] if isinstance(key, str) else list(key)
     vic = victims.select(*keys).distinct()
     target = read_parquet(spark, path)
@@ -462,7 +462,7 @@ def vacuum(path: str) -> list[str]:
 
 
 # ---------------------------------------------------------------------------
-# Hilbert-curve clustering (NOTES #4): better multi-column locality than
+# Hilbert-curve clustering: better multi-column locality than
 # Morton order at the same bit budget — consecutive Hilbert keys are ALWAYS
 # grid-adjacent cells, so per-file min/max ranges stay tight on every
 # clustered column even at 3-4 dimensions, where Z-order's diagonal jumps

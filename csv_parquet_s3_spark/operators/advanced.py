@@ -149,7 +149,7 @@ def q_order_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # facts: HLL++ at rsd=0.02 is within a few σ of exact, and percentile_approx
 # at accuracy=10000 has rank error ≤ n/10000. Emitting the EXACT quantities
 # plus booleans asserting the estimates sit inside those bounds turns the
-# registry's last rows-only entry into a hash-checked one (r09 verdict #6):
+# registry's last rows-only entry into a hash-checked one:
 # the oracle recomputes the exact quantities and pins every flag TRUE.
 # ---------------------------------------------------------------------------
 # |estimate/exact − 1| bound for HLL++ at rsd=0.02: 4σ = 8% (observed ≤2.5%
@@ -408,8 +408,8 @@ def q_kmv_cohort_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # localCheckpoint: each cohort feeds both the KMV union frame and the
     # exact-intersection accuracy reference — un-checkpointed, each
-    # reference replays the events scan + cohort aggregation (4 scans in
-    # the r06 audit for 2 cohort builds).
+    # reference replays the events scan + cohort aggregation (a plan audit
+    # measured 4 scans for 2 cohort builds).
     a = cohort("error").withColumn("in_a", F.lit(True)).transform(materialize)
     b = cohort("purchase").withColumn("in_b", F.lit(True)).transform(materialize)
     u = (
@@ -596,7 +596,7 @@ def q_open_orders_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Both delta rows emit from ONE pass over bounds (map-side explode) —
     # a two-leg union would reference bounds twice and replay the
-    # orders⋈lineitem join per leg (4 scans in the r06 audit).
+    # orders⋈lineitem join per leg (4 scans in a plan audit).
     deltas = bounds.select(
         F.explode(
             F.array(
@@ -717,7 +717,7 @@ def q_fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     SINGLE aggregation over a LEFT join against the DISTINCT parent keys
     (distinct-first preserves exact NOT EXISTS semantics if a parent key
     ever duplicates) — the earlier anti-join + separate count read each
-    child twice (15 scans in the r06 audit; the lineitem edge paid the
+    child twice (15 scans in a plan audit; the lineitem edge paid the
     biggest table's scan twice)."""
     out = None
     for label, child, ckey, parent, pkey in _FK_EDGES:
@@ -889,7 +889,7 @@ def q_customer_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame
     overflows 64-bit at ~10⁹ customers — Spark would wrap silently where
     DuckDB widens), one double division at the end. The global rank runs
     over the per-customer aggregate, |customers| rows, not orders — and is
-    TWO-PHASE since r07 (plans/ranking.py: distributed range sort +
+    TWO-PHASE (plans/ranking.py: distributed range sort +
     broadcast per-partition offsets), so no single-partition window remains
     even when |customers| outgrows one executor."""
     from csv_parquet_s3_spark.plans.ranking import with_global_row_number
@@ -1011,7 +1011,7 @@ def q_bloom_semijoin_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint the two shared frames: keys feeds the Bloom build, the
     # exact semi-join truth arm, and the key count; probe feeds both the
     # Bloom probe and the truth arm — un-checkpointed, each reference
-    # replays the orders filter / lineitem distinct (5 scans in the r06
+    # replays the orders filter / lineitem distinct (5 scans in a plan
     # audit). Consistency also matters here: both measurement arms must see
     # the SAME materialized probe set.
     keys = orders.filter(F.expr(RF_PRED)).select("o_orderkey").transform(materialize)

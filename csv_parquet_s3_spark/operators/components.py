@@ -170,7 +170,7 @@ def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: clusters from min-label propagation (bounded by |edges|);
     survivor pick AND assignment happen in ONE cluster-partitioned window
-    pass (r12; guide §2.4) — the former ``max_by`` aggregate + join-back
+    pass (guide §2.4) — the former ``max_by`` aggregate + join-back
     consumed the corpus-sized ``all_docs`` frame twice, re-deriving its
     lineage (two ``documents`` scans, two doc_id-keyed joins against the
     checkpointed closure) and shuffling the corpus by cluster_id twice.
@@ -431,7 +431,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # All three members emit from ONE pass over tri (map-side explode) —
     # a three-leg union references tri three times and replays the two
-    # triangle joins per leg (6 sort-merge joins in the r06 audit).
+    # triangle joins per leg (6 sort-merge joins in a plan audit).
     members = tri.select(
         F.explode(F.array(F.col("a"), F.col("b"), F.col("c"))).alias("doc_id")
     )

@@ -415,7 +415,7 @@ def dedup_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SimHash dedup shape.
     """
     # One scan, no cache: explode each signature into its band keys instead
-    # of unioning three scans (r02 used persist() here and leaked the cache).
+    # of unioning three scans (a persist() here leaked the cache).
     sigs = dedup_simhash_signatures(spark, sf_dir)
     band_structs = F.array(*[
         F.struct(
@@ -1047,7 +1047,7 @@ def dedup_eval_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice (the intersection join and its own count), so both are
     localCheckpointed — each shingle/signature pipeline executes exactly
     once, the Spark-side mirror of the oracle's ``AS MATERIALIZED`` CTEs
-    (the r05 plan audit measured 16 scans from the un-checkpointed replay).
+    (a plan audit measured 16 scans from the un-checkpointed replay).
     """
     lsh = (
         dedup_minhash_lsh_pairs(spark, sf_dir)

@@ -376,8 +376,8 @@ def dedup_modality_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     side the LSH band join, the embedding side the multi-probe IVF-cell
     candidate generator (`ivf_blocked_pairs`, shared with
     `dedup_embedding_ivf_blocked` and mirrored CTE-for-CTE in the oracle).
-    Nothing in this operator is n² on the corpus: the r04 version's
-    all-pairs `id_a < id_b` theta join (a BroadcastNestedLoopJoin) is gone,
+    Nothing in this operator is n² on the corpus: there is no all-pairs
+    `id_a < id_b` theta join (a BroadcastNestedLoopJoin),
     so the agreement numbers are computed over exactly the candidate sets a
     100 TB pipeline would actually score.
     """
@@ -390,7 +390,7 @@ def dedup_modality_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint before the pair generator — it references the
     # signature table three times (band join legs + Jaccard verify), and
     # un-checkpointed each reference replays the shingle pipeline (the
-    # same discipline dedup_minhash_lsh_pairs applies; the r06 audit
+    # same discipline dedup_minhash_lsh_pairs applies; a plan audit
     # measured 10 scans here without it).
     shingle_sets = signature_table(_shingles(spark, sf_dir)).transform(materialize)
     tpairs = (

@@ -75,15 +75,13 @@ DP_EPSILON = 1.0  # privacy budget; counting query sensitivity = 1
 # Seed for the derandomized Laplace draw. With the default (public) seed the
 # noise is a recomputable function of the released group key, so the release
 # demonstrates the MECHANISM but carries no real privacy guarantee — which is
-# why the output column is ``nominal_epsilon``, not ``epsilon`` (r05 advisor
-# finding). In production, set SPARK_GRAFT_DP_SEED to a secret held by the
+# why the output column is ``nominal_epsilon``, not ``epsilon``. In production, set SPARK_GRAFT_DP_SEED to a secret held by the
 # release authority: the mechanism, sensitivity bound, and plan shape are
 # unchanged, and the ε guarantee then holds against anyone without the seed.
 #
 # The seed is interpolated into BOTH engines' SQL, so it is validated to a
-# quote-free charset (r06 advisor finding: a seed containing a quote or
-# backslash would break — or inject into — both queries). And because the
-# ORACLE string is baked into the registry at import, the operator re-reads
+# quote-free charset (a seed containing a quote or backslash would break —
+# or inject into — both queries). And because the ORACLE string is baked into the registry at import, the operator re-reads
 # the env at call time and fails LOUDLY if the seed changed after import
 # (the two sides would otherwise silently diverge into a hash mismatch).
 _DP_SEED_RE = re.compile(r"^[A-Za-z0-9_.:-]{1,128}$")

@@ -219,7 +219,7 @@ def _pca_power(xc: DataFrame, iters: int) -> tuple[DataFrame, DataFrame]:
     Every per-iteration intermediate is localCheckpointed so the lazy plan
     never compounds: without this, computing v_t replays v_{t-1} which
     replays v_{t-2} — quadratic lineage growth that PLAN_AUDIT measured as
-    222 exchanges / 56 parquet scans for 3 iterations (r05 verdict). The
+    222 exchanges / 56 parquet scans for 3 iterations. The
     checkpoints are tiny (v, u are dim-sized = 64 rows; s is one row per
     vector — the standard power-iteration intermediate, 1/dim of the cell
     table), so each iteration is exactly two passes over the checkpointed
@@ -442,7 +442,7 @@ def emb_remove_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus and subtract each vector's projection onto the dominant PC —
     the cheap fix for the anisotropy that makes raw embedding cosines
     crowd together. Reuses the ONE localCheckpointed centered cell table
-    for both the power iterations and the removal projection (the r05 plan
+    for both the power iterations and the removal projection (a plan
     audit showed the un-checkpointed second copy replaying the whole PCA
     lineage per reference — 222 exchanges); the removal itself is one
     broadcast join against the 64-row vector plus a DECIMAL-exact

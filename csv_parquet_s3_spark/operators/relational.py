@@ -393,7 +393,7 @@ def q_window_supplier_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     previous supplier over the GLOBAL revenue order.
 
     Scale shape: the window runs over the per-supplier aggregate
-    (|suppliers| rows), never the fact table — and since r07 the global
+    (|suppliers| rows), never the fact table — and the global
     ordering is TWO-PHASE (plans/ranking.py): a distributed range sort
     assigns per-partition row numbers, broadcast per-partition offsets
     assemble the global rank, and LAG crosses partition boundaries via a
@@ -849,7 +849,7 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # localCheckpoint: each stage frame feeds BOTH the next stage's join and
     # the final count — un-checkpointed, the p-count replays the v and c
-    # chains from the events scan (6 scans in the r06 audit for 3 stages).
+    # chains from the events scan (6 scans in a plan audit for 3 stages).
     v = (
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")

@@ -466,7 +466,7 @@ def q_customer_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (over |customers| rows, not the fact), re-aggregate per
     decile — the segmentation double-aggregate.
 
-    The NTILE is TWO-PHASE since r07 (plans/ranking.py): a distributed
+    The NTILE is TWO-PHASE (plans/ranking.py): a distributed
     range sort + broadcast offsets assemble the global row_number, and
     NTILE(10) derives from (row_number, total count) with the exact SQL
     NTILE fill — no single-partition window, so the segmentation survives
@@ -774,7 +774,7 @@ def q_event_type_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     users². Single-division doubles keep the oracle exact. The basket
     relation is localCheckpointed: the singles counts, both self-join legs
     and the user total all reference it, and un-checkpointed each replays
-    the corpus-wide distinct (5 scans / 9 exchanges in the r06 audit).
+    the corpus-wide distinct (5 scans / 9 exchanges in a plan audit).
     """
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.select("user_id", "event_type").distinct().transform(materialize)
@@ -1276,7 +1276,7 @@ def q_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     wp = W.partitionBy("pe")
     # localCheckpoint: the ranked frame feeds all three model branches —
     # un-checkpointed, each branch replays the purchase×touch join and the
-    # three windows (6 scans in the r06 audit).
+    # three windows (6 scans in a plan audit).
     j = j.select(
         "pe",
         "value",
@@ -1471,7 +1471,7 @@ def q_item_cf_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # localCheckpoint: the capped basket relation feeds the popularity
     # counts and BOTH self-join legs — un-checkpointed, each of the three
-    # replays the join+distinct+cap-window pipeline (8 scans in the r06
+    # replays the join+distinct+cap-window pipeline (8 scans in a plan
     # audit). The materialized frame is the distinct interaction matrix,
     # the standard CF intermediate.
     ui = (

@@ -35,7 +35,11 @@ from csv_parquet_s3_spark.operators.similarity import (
     _dot,
     _with_norm,
 )
-from csv_parquet_s3_spark.sources.tables import load_table, read_parquet
+from csv_parquet_s3_spark.sources.tables import (
+    load_table,
+    read_parquet,
+    read_small_table,
+)
 from csv_parquet_s3_spark.plans.materialize import materialize
 
 N_QUERIES = 5   # doc_id < 5 are the probe queries (same convention as similarity)
@@ -421,8 +425,8 @@ def retrieval_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Every statistic chains off doc_tf (dl = Σtf per doc, df = row count
     # per token, stats from dl), and doc_tf is localCheckpointed: four
     # consumers reference it (dl, df, qterms, the scoring join) — without
-    # the checkpoint each replays the tokenize + partial aggregate (the r06
-    # plan audit measured 5 scans / 11 exchanges).
+    # the checkpoint each replays the tokenize + partial aggregate (a plan
+    # audit measured 5 scans / 11 exchanges).
     doc_tf = _bm25_doc_tf(docs).transform(materialize)
     dl = doc_tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = dl.agg(
@@ -520,8 +524,8 @@ def ensure_bm25_index(spark: SparkSession, sf_dir: str) -> str:
     fingerprint matches (and no crashed update left it inconsistent), else
     build a fresh ``v-<uuid>`` version and publish it with one atomic
     pointer rename — a concurrent reader always resolves a complete index,
-    old or new; the root is never missing (the rename-aside two-rename gap
-    the r08 advisory flagged is gone)."""
+    old or new; the root is never missing (no rename-aside two-rename
+    gap)."""
     from csv_parquet_s3_spark.operators.minhash_index import _documents_fingerprint
 
     # layout version 4: doc_tf carries a denormalized dl column (serving
@@ -540,29 +544,14 @@ def ensure_bm25_index(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _bm25_stats_scalars(spark: SparkSession, index_path: str) -> tuple[int, float]:
-    """``(n_docs, avgdl)`` off the 1-row stats artifact — a bounded
-    driver-side readout. Local roots read the parquet footer directly
-    (pyarrow — no Spark job at all); non-local roots fall back to one
-    tiny Spark collect. Folding these scalars into the serving expression
-    as literals removes the per-query stats scan + broadcast cross-join
-    (r09 verdict #4); the stored ``avgdl`` double is read exactly, so the
-    literal plan is bit-identical to the frame plan."""
-    path = f"{index_path}/stats"
-    # pyarrow only for plain local paths: an s3a://... root raises
-    # ArrowInvalid (a ValueError), not OSError, so gating beats guessing
-    # the exception taxonomy (r10 advisory); ValueError stays caught too.
-    if "://" not in path or path.startswith("file:"):
-        try:
-            import pyarrow.parquet as papq
-
-            t = papq.read_table(path, columns=["n_docs", "avgdl"])
-            return int(t.column("n_docs")[0].as_py()), float(
-                t.column("avgdl")[0].as_py()
-            )
-        except (ImportError, OSError, ValueError):
-            pass
-    row = read_parquet(spark, path).select("n_docs", "avgdl").collect()[0]
-    return int(row["n_docs"]), float(row["avgdl"])
+    """``(n_docs, avgdl)`` off the 1-row stats artifact
+    (``sources.tables.read_small_table``: no Spark job on a local root).
+    Folding these scalars into the serving expression as literals removes
+    the per-query stats scan + broadcast cross-join; the stored ``avgdl``
+    double is read exactly, so the literal plan is bit-identical to the
+    frame plan."""
+    t = read_small_table(spark, f"{index_path}/stats", ["n_docs", "avgdl"])
+    return int(t["n_docs"][0]), float(t["avgdl"][0])
 
 
 def _bm25_serve_from(spark: SparkSession, index_path: str) -> DataFrame:

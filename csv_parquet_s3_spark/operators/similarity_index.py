@@ -33,7 +33,11 @@ from csv_parquet_s3_spark.operators.similarity import (
     _dot,
     _with_norm,
 )
-from csv_parquet_s3_spark.sources.tables import load_table, read_parquet
+from csv_parquet_s3_spark.sources.tables import (
+    load_table,
+    read_parquet,
+    read_small_table,
+)
 from csv_parquet_s3_spark.plans.materialize import materialize
 
 
@@ -1518,8 +1522,8 @@ def ensure_ivf_pq_index(spark: SparkSession, sf_dir: str) -> str:
     of a versioned root (``maintenance.ensure_published``): the build
     lands in a fresh ``v-<uuid>`` version, published with one atomic
     pointer rename — a concurrent reader always resolves a complete
-    index, old or new; the root is never missing or partial (the
-    rename-aside two-rename gap the r08 advisory flagged is gone)."""
+    index, old or new; the root is never missing or partial (no
+    rename-aside two-rename gap)."""
     from csv_parquet_s3_spark.maintenance import ensure_published
 
     return ensure_published(
@@ -1550,24 +1554,11 @@ def _sq8_stats_vectors(
 ) -> tuple[list[float], list[float]]:
     """``(mn, mx)`` per-dimension range off the stored ``sq8_stats`` table,
     dim order — a bounded DIMENSION-sized driver readout (64 rows here,
-    thousands at most in production; the bm25 `_bm25_stats_scalars`
-    discipline). pyarrow reads the footer directly when local (no Spark
-    job); non-local roots fall back to one tiny collect."""
-    path = f"{index_path}/sq8_stats"
-    # pyarrow only for plain local paths: an s3a://... root raises
-    # ArrowInvalid (a ValueError), not OSError, so gating beats guessing
-    # the exception taxonomy (r10 advisory); ValueError stays caught too.
-    if "://" not in path or path.startswith("file:"):
-        try:
-            import pyarrow.parquet as papq
-
-            t = papq.read_table(path, columns=["dim", "mn", "mx"]).to_pydict()
-            order = sorted(range(len(t["dim"])), key=lambda i: t["dim"][i])
-            return [t["mn"][i] for i in order], [t["mx"][i] for i in order]
-        except (ImportError, OSError, ValueError):
-            pass
-    rows = read_parquet(spark, path).orderBy("dim").collect()
-    return [r["mn"] for r in rows], [r["mx"] for r in rows]
+    thousands at most in production) through
+    ``sources.tables.read_small_table`` (no Spark job on a local root)."""
+    t = read_small_table(spark, f"{index_path}/sq8_stats", ["dim", "mn", "mx"])
+    order = sorted(range(len(t["dim"])), key=t["dim"].__getitem__)
+    return [t["mn"][i] for i in order], [t["mx"][i] for i in order]
 
 
 def _with_range_arrays(df: DataFrame, mn: list[float], mx: list[float]) -> DataFrame:

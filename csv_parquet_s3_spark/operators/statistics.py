@@ -387,8 +387,8 @@ def q_chi_square_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     |langs|×|sources| cells frame — association testing costs one aggregation
     regardless of corpus size. The cells frame is localCheckpointed because
     every marginal (rows_, cols_, tot, dims) references it: without the
-    checkpoint each reference replays the corpus scan+aggregate (the r06
-    plan audit measured 8 scans / 16 exchanges for what is one pass).
+    checkpoint each reference replays the corpus scan+aggregate (a plan
+    audit measured 8 scans / 16 exchanges for what is one pass).
     """
     docs = load_table(spark, sf_dir, "documents")
     cells = (
@@ -476,7 +476,7 @@ def q_mutual_information_lang_source(spark: SparkSession, sf_dir: str) -> DataFr
 
     The cells frame is localCheckpointed — the MI sum, both entropies and
     the total each reference it, and without the checkpoint each reference
-    replays the corpus aggregate (9 scans / 20 exchanges in the r06 audit).
+    replays the corpus aggregate (9 scans / 20 exchanges in a plan audit).
     """
     docs = load_table(spark, sf_dir, "documents")
     cells = (
@@ -645,7 +645,7 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale note: the three NTILEs are global sorts over the CUSTOMER
     aggregate (one row per customer, not per order) and are TWO-PHASE
-    since r07 (plans/ranking.py): each is a distributed range sort +
+    (plans/ranking.py): each is a distributed range sort +
     broadcast offsets + the exact NTILE fill derived from (row_number,
     total) — no single-partition window. The three coded frames join back
     on custkey (each side is the pre-reduced customer frame). If even the
@@ -974,8 +974,8 @@ BOOT_B = 32  # replicas
 
 # Poisson(1) inverse-CDF breakpoints: P(W<=k) for k=0..5; the residual tail
 # above P(W<=5) (≈ 5.9e-4) maps to multiplicity 6. The table must run
-# through k=5 — the r05 advisor caught that stopping at k=4 with a catch-all
-# of 6 skipped multiplicity 5 entirely, biasing E[w] to ~1.003.
+# through k=5 — stopping at k=4 with a catch-all of 6 would skip
+# multiplicity 5 entirely, biasing E[w] to ~1.003.
 _POIS_CDF = (0.36787944117144233, 0.7357588823428847, 0.9196986029286058,
              0.9810118431238462, 0.9963401531726563, 0.9994058151824183)
 
@@ -1053,7 +1053,7 @@ def q_revenue_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # One MIN/MAX aggregate over the B replica means — the earlier global
     # row_number window was referenced twice (lo, hi) and replayed the full
-    # corpus × B expansion per reference (3 scans in the r06 audit).
+    # corpus × B expansion per reference (3 scans in a plan audit).
     ext = means.agg(
         F.min("m").alias("ci_lo"), F.max("m").alias("ci_hi")
     )
@@ -1282,7 +1282,7 @@ def q_model_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the label is one semi-join-shaped EXISTS against the
     orders feed (Spark side: left-semi + coalesce); the decile NTILE is
-    TWO-PHASE since r07 (plans/ranking.py: distributed range sort +
+    TWO-PHASE (plans/ranking.py: distributed range sort +
     broadcast offsets + exact NTILE fill) so no customer-sized frame ever
     crosses an Exchange SinglePartition; the decile aggregate and the
     cumulative window over 10 rows are free."""

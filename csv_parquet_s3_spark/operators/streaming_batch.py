@@ -91,7 +91,7 @@ def _drain(
     SPARK-40925 one-batch-lag watermark filter engages). If a future Spark
     build reorders files or stops honoring maxFilesPerTrigger under
     availableNow, this fails as a clear sequencing error instead of a
-    confusing downstream hash mismatch (r06 advisor finding)."""
+    confusing downstream hash mismatch."""
     name = "stream_drain_" + uuid.uuid4().hex
     q = (
         df.writeStream.format("memory")
@@ -745,9 +745,9 @@ def stream_scd1_upsert_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     state (newest (o_orderdate, o_orderkey) wins, never batch arrival
     order). The drained state must equal the batch latest-per-key query —
     pinned by the oracle — REGARDLESS of how the source splits into
-    micro-batches, the r04 lesson about availableNow single-batch
-    assumptions made structural: the merge is an order-insensitive
-    max-reduce, so any batch partitioning folds to the same state.
+    micro-batches (no availableNow single-batch assumption): the merge is
+    an order-insensitive max-reduce, so any batch partitioning folds to
+    the same state.
 
     At scale this is the MERGE loop every warehouse dimension runs off a
     CDC stream; the staged-swap parquet write stands in for a table
@@ -1013,7 +1013,7 @@ def stream_events_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     min_ts, max_ts = b["lo"], b["hi"]  # bounded: 2 scalars
     if min_ts is None or max_ts is None:
         # an empty events table would otherwise surface as an opaque
-        # createDataFrame/stream failure on a None timestamp (r06 advisor)
+        # createDataFrame/stream failure on a None timestamp
         raise ValueError(
             f"events table at {sf_dir} is empty — the late-data probe needs "
             "a real corpus to anchor its watermark carrier and probe rows"

@@ -332,7 +332,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: tf is one aggregate keyed (doc, token); df is one keyed
     (token); the df table is vocabulary-sized and joins back onto tf with
     no forced hint (AQE broadcasts while it fits, so scoring is map-side
-    at any realistic vocab; r13 vocab audit). The doc count is a one-row
+    at any realistic vocab). The doc count is a one-row
     broadcast. The final per-doc window shuffles only the scored tf rows.
     """
     docs = load_table(spark, sf_dir, "documents")
@@ -352,9 +352,11 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = tf.groupBy("token").agg(F.count("*").alias("df"))
     n = docs.agg(F.count("*").alias("n_docs"))
     scored = (
-        # No broadcast hint on df (r13 vocab audit, tools/vocab_audit_r13.json):
-        # "vocabulary-sized" is not a constant on an unnormalized web corpus,
-        # and a hint has no AQE size fallback. CBO/AQE still pick broadcast
+        # No broadcast hint on df: "vocabulary-sized" is not a constant on an
+        # unnormalized web corpus (Heaps' law: unbounded sublinear growth;
+        # the test corpora draw from a fixed 31-token alphabet, so df is 31
+        # rows at sf0.001, sf0.01 and sf0.1 alike), and a hint has no AQE
+        # size fallback. CBO/AQE still pick broadcast
         # at any realistic vocab size (df derives from the materialized tf,
         # so runtime sizes are exact); at the pathological tail the join
         # degrades to a shuffle instead of an OOM.
@@ -422,7 +424,7 @@ def text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same document. High ratio → boilerplate/spam → filtered before
     training.
 
-    MAP-ONLY (r12): a document's n-grams all live in its own token array, so
+    MAP-ONLY: a document's n-grams all live in its own token array, so
     total and distinct counts fold inside the array (``size`` /
     ``size(array_distinct(...))``) with no explode, no shuffle — the former
     explode + doc_id-keyed distinct aggregation shuffled the per-partition-
@@ -481,7 +483,7 @@ def text_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The benchmark n-gram set is bounded (real benchmarks are small), so
     the membership probe broadcasts in practice — but the frame is not
-    hinted (r13 vocab audit): AQE picks broadcast while it fits and the
+    hinted: AQE picks broadcast while it fits and the
     corpus streams map-side, nothing shuffling but the per-doc counts; an
     oversized gram set degrades to a shuffled join instead of an OOM.
     """
@@ -500,10 +502,10 @@ def text_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = doc_grams.filter(is_bench).select("g").distinct()
     train = doc_grams.filter(~is_bench)
     hits = (
-        # No broadcast hint on bench (r13 vocab audit): a REAL benchmark
-        # suite is MB-bounded, but this stand-in derives from the corpus's
-        # own gram space — measured 362→2397 distinct grams for a 100×
-        # corpus (tools/vocab_audit_r13.json). AQE picks broadcast while it
+        # No broadcast hint on bench: a REAL benchmark suite is MB-bounded,
+        # but this stand-in derives from the corpus's own gram space —
+        # measured with DuckDB at 362 distinct grams at sf0.001 and 2397 at
+        # sf0.1, a 100× corpus. AQE picks broadcast while it
         # fits (bench derives from the materialized doc_grams, so runtime
         # sizes are exact) and degrades to a shuffled semi-join above.
         train.join(bench, "g")
@@ -655,7 +657,7 @@ def text_unigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok_nll = F.round(
         F.log(F.col("n_total").cast("double") / F.col("cnt")), 6
     ).cast("decimal(20,6)")
-    # r13: same term-table restructure as the bigram family — fold the LM
+    # Same term-table restructure as the bigram family — fold the LM
     # into a vocabulary-sized (token, __term) table and score each token
     # occurrence map-side, so the former corpus-sized (doc_id, token) doc_tf
     # exchange disappears; sum(tf·term) == sum(term per occurrence) exactly
@@ -1303,8 +1305,8 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule, see the unigram twin at :func:`text_unigram_perplexity`).
 
     Scale shape: bigrams assemble MAP-SIDE (`_doc_bigrams` zips adjacent
-    pairs inside the token array — the r07-era (doc_id, ord) positional
-    self-join and its corpus-sized shuffle are gone), then two keyed
+    pairs inside the token array — no (doc_id, ord) positional self-join
+    and no corpus-sized shuffle), then two keyed
     aggregations (bigram + context counts — LM-sized, not corpus-sized) and
     a per-doc join against the LM tables with no broadcast hint (a
     web-scale bigram table is not broadcastable; AQE picks broadcast while
@@ -1327,7 +1329,7 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         6,
     ).cast("decimal(20,6)")
-    # r13: same term-table restructure as the KN sibling — the LM folds into
+    # Same term-table restructure as the KN sibling — the LM folds into
     # a vocab²-bounded (w1, w2, term) table and the corpus pass is one join
     # + one doc_id fold; sum(tf·term) == sum(term per occurrence) exactly
     # (DECIMAL), count(*) == sum(tf), so values are bit-identical while the
@@ -1525,33 +1527,33 @@ def text_bigram_kn_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     is identical so evaluation order is too).
 
     Scale shape: identical to :func:`text_bigram_perplexity` — the LM
-    tables (bigram; context+fan-out fused into one w1-keyed aggregate, r12;
+    tables (bigram; context+fan-out fused into one w1-keyed aggregate;
     continuation) are vocabulary²-bounded aggregates with map-side combine,
-    pre-joined into ONE per-bigram term table (r13) so the corpus-sized
+    pre-joined into ONE per-bigram term table so the corpus-sized
     scoring pass is a single (w1,w2)-keyed join (no broadcast hint — AQE
     decides while the LM fits) feeding the per-doc fold, whose exchange
     carries only (doc_id, partial count, partial DECIMAL sum) after
-    map-side combine. Bigrams assemble map-side (`_doc_bigrams`; the
-    r07-era tokenize-position self-join is gone), so the bigram stream is
+    map-side combine. Bigrams assemble map-side (`_doc_bigrams`; no
+    tokenize-position self-join), so the bigram stream is
     map-only lineage its two consumers re-derive from the scan instead of
     checkpointing corpus-sized bytes. The vocab²-sized bg table stays
     materialized (referenced by all four LM aggregates and the term table:
-    the r06 plan audit measured 12 scans / 14 exchanges from the
-    compounded replays)."""
+    a plan audit measured 12 scans / 14 exchanges from the compounded
+    replays without it)."""
     docs = load_table(spark, sf_dir, "documents")
     bigrams = _doc_bigrams(docs)
     bg = bigrams.groupBy("w1", "w2").agg(F.count("*").alias("c12")).transform(materialize)
     # context total and fan-out share the w1 grouping: ONE aggregation (one
     # exchange over bg, one join in the scoring plan) computes both — the
     # values are identical to the former separate ctx/fanout aggregates, so
-    # every downstream number (and the oracle hash) is unchanged (r12;
-    # guide §2.4: operations keyed the same way share one exchange).
+    # every downstream number (and the oracle hash) is unchanged (guide
+    # §2.4: operations keyed the same way share one exchange).
     ctx_nf = bg.groupBy("w1").agg(
         F.sum("c12").alias("c1"), F.count("*").alias("nf")
     )
     cont = bg.groupBy("w2").agg(F.count("*").alias("np"))
     types = bg.agg(F.count("*").alias("tt"))
-    # r13: the whole LM folds into one vocab²-bounded per-bigram term table;
+    # The whole LM folds into one vocab²-bounded per-bigram term table;
     # the corpus-sized pass is then a single join + one doc_id fold. The
     # former doc_bg aggregate shuffled the corpus-sized (doc_id, w1, w2)
     # STRING stream just to weight the same per-bigram term by tf — but
@@ -1700,7 +1702,7 @@ def text_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         6,
     ).cast("decimal(20,6)")
-    # r13: score each TEST bigram occurrence directly instead of first
+    # Score each TEST bigram occurrence directly instead of first
     # aggregating a (doc_id, w1, w2, tf) frame — the term is a pure function
     # of (c12, c1, v) so it is identical for every occurrence of a bigram,
     # and sum(tf·term) == sum(term per occurrence) exactly (DECIMAL),
@@ -1827,7 +1829,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint the two shared frames: content feeds the island
     # aggregate and both scoring joins, phr feeds the word stats and the
     # phrase scoring — un-checkpointed, each reference replays the
-    # tokenize + stopword-island window (4 scans in the r06 audit).
+    # tokenize + stopword-island window (4 scans in a plan audit).
     content = (
         toks.filter(~F.col("tok").isin(*STOPWORDS))
         .withColumn(

@@ -125,6 +125,29 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def read_small_table(
+    spark: SparkSession, path: str, columns: list[str]
+) -> dict[str, list]:
+    """The named columns of a small Parquet table (index stats, per-dimension
+    ranges) as Python lists, in file order — a bounded driver-side readout.
+
+    A local path is read with pyarrow and runs no Spark job. Anything else
+    (an ``s3a://`` root), or a pyarrow ``ImportError``/``OSError``/
+    ``ValueError``, falls back to one ``read_parquet(...).collect()``. The
+    path is gated rather than the exception guessed: pyarrow raises
+    ``ArrowInvalid`` (a ``ValueError``) on an ``s3a://`` path, not
+    ``OSError``. Doubles come back exactly as stored either way."""
+    if "://" not in path or path.startswith("file:"):
+        try:
+            import pyarrow.parquet as papq
+
+            return papq.read_table(path, columns=columns).to_pydict()
+        except (ImportError, OSError, ValueError):
+            pass
+    rows = read_parquet(spark, path).select(*columns).collect()
+    return {c: [r[c] for r in rows] for c in columns}
+
+
 # Size gate for broadcast hints on SF-scaling tables (supplier/part/customer
 # and frames derived from them). A Spark broadcast *hint* is honored
 # unconditionally — there is no AQE size fallback once the hint is attached —

@@ -120,7 +120,7 @@ def segment_hourly_rollup(
     slowly-refreshed dim table" pipeline stage. The static side re-plans per
     micro-batch (Spark re-reads it each trigger, picking up dim refreshes).
 
-    Broadcast policy (r12 verdict #2): customer is an SF-SCALING table, so
+    Broadcast policy: customer is an SF-SCALING table, so
     the hint goes through the ``broadcast_if_small`` size gate when the
     caller passes ``sf_dir`` — under the gate the join stays shuffle-free;
     above it (or with no ``sf_dir`` to measure against) the strategy is

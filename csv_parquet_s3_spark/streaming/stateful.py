@@ -49,7 +49,7 @@ def user_lifetime_totals(
     ``idle_timeout_ms`` bounds state for unbounded-key streams: a key idle
     for that long is evicted from the state store (ProcessingTimeTimeout;
     re-verified working on this Spark build — an earlier build crashed the
-    Python state worker on the timeout handshake, see NOTES history). With
+    Python state worker on the timeout handshake). With
     ``None``, state is unbounded and eviction belongs to restart-time
     compaction.
 

@@ -9,7 +9,7 @@ import os
 import pytest
 
 # slow tier: regenerating all 253 audit rows takes ~7 min — the single
-# heaviest test in the suite (r13 tiering; tools/pytest_durations_r13.txt).
+# heaviest test in the suite (`git show 4bf9f4e:tools/pytest_durations_r13.txt`).
 # Plan-shape regressions on the pinned properties still fail FAST via
 # tests/test_plan_properties.py; this full-registry freshness gate runs
 # with SPARK_GRAFT_SLOW_TESTS=1 (round close, and whenever plans change).

@@ -9,8 +9,9 @@ from tests.conftest import SF_CORRECTNESS
 from tests.oracle_compare import compare
 
 
-# Queries whose sf0.001 differential runs >5 s each (measured r13 full run,
-# tools/pytest_durations_r13.txt): together ~680 s of the suite's 36 min.
+# Queries whose sf0.001 differential runs >5 s each (measured on a full
+# run, `git show 4bf9f4e:tools/pytest_durations_r13.txt`): together ~680 s
+# of the suite's 36 min.
 # They run in the slow tier (SPARK_GRAFT_SLOW_TESTS=1); the fast default
 # still differentials the other ~215 queries, and the driver's own window
 # hash-check plus tools/verify_local.py cover every query end-to-end.

@@ -1,5 +1,6 @@
 """The package's one Parquet reader infers each dataset's schema once per
-file version (``sources.tables.read_parquet``).
+file version (``sources.tables.read_parquet``), and its small-table readout
+(``sources.tables.read_small_table``) reads a local table with no Spark job.
 
 A hit must submit no Spark job; anything that can change the inferred schema
 (a rewrite of the files, an inference conf) must miss; a miss must behave
@@ -16,7 +17,7 @@ from pyspark.sql import types as T
 
 from csv_parquet_s3_spark.maintenance import _staged_overwrite
 from csv_parquet_s3_spark.sources import tables
-from csv_parquet_s3_spark.sources.tables import read_parquet
+from csv_parquet_s3_spark.sources.tables import read_parquet, read_small_table
 from tests.test_job_counts import _jobs
 
 
@@ -83,6 +84,18 @@ def test_empty_directory_raises_like_spark(spark, tmp_path):
             read_parquet(spark, str(path))
         assert got.value.getCondition() == want.value.getCondition()
         assert str(got.value) == str(want.value)
+
+
+def test_small_table_readout_runs_no_job_and_reads_doubles_exactly(spark, tmp_path):
+    path = str(tmp_path / "stats")
+    values = [1 / 3, 0.1 + 0.2, 2.0**-40, 12345.678901234567]
+    spark.createDataFrame(list(enumerate(values)), "dim int, mn double").write.parquet(path)
+    want = {r.dim: r.mn for r in spark.read.parquet(path).collect()}
+    got = {}
+    jobs = _jobs(spark, lambda: got.update(read_small_table(spark, path, ["dim", "mn"])))
+    assert jobs == 0
+    assert sorted(got) == ["dim", "mn"]
+    assert dict(zip(got["dim"], got["mn"])) == want == dict(enumerate(values))
 
 
 class _RecordingSession:

@@ -65,12 +65,10 @@ class TestBM25FromIndex:
             assert json.load(fh)["mtime_ns"] != 0, "stale fingerprint not rebuilt"
 
     @pytest.mark.slow
-    def test_incremental_equals_full_build(self, spark):
+    def test_incremental_equals_full_build(self, spark, tmp_path):
         """update_bm25_index merging the odd half into an even-half index
         must serve exactly the full-corpus ranking (and exercise both the
         insert path and the collection-statistics refresh)."""
-        import tempfile
-
         from csv_parquet_s3_spark.operators.retrieval import (
             retrieval_bm25_incremental,
             retrieval_bm25_topk,
@@ -92,7 +90,7 @@ class TestBM25FromIndex:
         from csv_parquet_s3_spark.sources.tables import load_table
 
         docs = load_table(spark, SF_SMOKE, "documents")
-        idx = tempfile.mkdtemp(prefix="bm25_reingest_")
+        idx = str(tmp_path / "bm25_reingest")
         build_bm25_index(spark, docs, idx)
         baseline = _rows(_bm25_serve_from(spark, idx))
         n_upd, n_ins = update_bm25_index(

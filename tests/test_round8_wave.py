@@ -18,7 +18,6 @@ OPERATIONAL properties the r07 verdict/advice demanded:
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -53,24 +52,24 @@ def _doc_id_file_ranges(doc_tf_dir: str) -> list[tuple[int, int]]:
     return sorted(ranges)
 
 
-def _build_half_update_half(spark):
+def _build_half_update_half(spark, tmp_path):
     from csv_parquet_s3_spark.operators.retrieval import (
         build_bm25_index,
         update_bm25_index,
     )
 
     docs = _docs(spark)
-    idx = tempfile.mkdtemp(prefix="bm25_r8_")
+    idx = str(tmp_path / "bm25_half")
     build_bm25_index(spark, docs.filter(F.col("doc_id") % 2 == 0), idx)
     update_bm25_index(spark, docs.filter(F.col("doc_id") % 2 == 1), idx)
     return idx
 
 
 class TestCompaction:
-    def test_compaction_restores_disjoint_doc_id_files(self, spark):
+    def test_compaction_restores_disjoint_doc_id_files(self, spark, tmp_path):
         from csv_parquet_s3_spark.operators.retrieval import compact_bm25_index
 
-        idx = _build_half_update_half(spark)
+        idx = _build_half_update_half(spark, tmp_path)
         compact_bm25_index(spark, idx)
         ranges = _doc_id_file_ranges(f"{idx}/doc_tf")
         assert ranges, "no parquet files after compaction"
@@ -78,25 +77,25 @@ class TestCompaction:
             assert hi_prev <= lo_next, f"overlapping doc_id ranges: {ranges}"
 
     @pytest.mark.slow
-    def test_compaction_preserves_served_ranking(self, spark):
+    def test_compaction_preserves_served_ranking(self, spark, tmp_path):
         from csv_parquet_s3_spark.operators.retrieval import (
             _bm25_serve_from,
             compact_bm25_index,
         )
 
-        idx = _build_half_update_half(spark)
+        idx = _build_half_update_half(spark, tmp_path)
         before = _rows(_bm25_serve_from(spark, idx))
         compact_bm25_index(spark, idx)
         assert _rows(_bm25_serve_from(spark, idx)) == before
 
     @pytest.mark.slow
-    def test_compaction_exact_stats_equal_monoidal_stats(self, spark):
+    def test_compaction_exact_stats_equal_monoidal_stats(self, spark, tmp_path):
         """The per-batch monoidal df/stats deltas must land exactly what the
         compaction-time full re-aggregate computes — if these ever diverge,
         either the delta math or the exact refresh is wrong."""
         from csv_parquet_s3_spark.operators.retrieval import compact_bm25_index
 
-        idx = _build_half_update_half(spark)
+        idx = _build_half_update_half(spark, tmp_path)
         df_before = _rows(spark.read.parquet(f"{idx}/df"))
         stats_before = _rows(spark.read.parquet(f"{idx}/stats"))
         compact_bm25_index(spark, idx)
@@ -105,14 +104,14 @@ class TestCompaction:
 
 
 class TestCrashDetectability:
-    def test_pending_marker_flags_inconsistency(self, spark):
+    def test_pending_marker_flags_inconsistency(self, spark, tmp_path):
         from csv_parquet_s3_spark.operators.retrieval import (
             _BM25_PENDING,
             bm25_index_consistent,
             compact_bm25_index,
         )
 
-        idx = _build_half_update_half(spark)
+        idx = _build_half_update_half(spark, tmp_path)
         assert bm25_index_consistent(idx)
         # simulate a crash between the doc_tf merge and the stats refresh
         with open(os.path.join(idx, _BM25_PENDING), "w") as fh:
@@ -139,12 +138,12 @@ class TestCrashDetectability:
         assert os.path.exists(root), "previous generation vacuumed too early"
         assert not os.path.exists(os.path.join(root2, _BM25_PENDING))
 
-    def test_update_requires_layout3_stats(self, spark):
+    def test_update_requires_layout3_stats(self, spark, tmp_path):
         from csv_parquet_s3_spark.operators.retrieval import update_bm25_index
 
         import shutil
 
-        idx = _build_half_update_half(spark)
+        idx = _build_half_update_half(spark, tmp_path)
         # a layout-2 index has no sum_dl column
         legacy = spark.read.parquet(f"{idx}/stats").select("n_docs", "avgdl")
         tmp = idx + ".legacy"
@@ -157,7 +156,9 @@ class TestCrashDetectability:
 
 
 class TestStagedSwaps:
-    def test_small_table_refresh_never_removes_target_first(self, spark, monkeypatch):
+    def test_small_table_refresh_never_removes_target_first(
+        self, spark, monkeypatch, tmp_path
+    ):
         """_staged_overwrite must build the replacement BESIDE the live
         table: at the moment the swap begins, both staging and target
         exist (rename-aside), so a reader never sees the directory gone."""
@@ -171,7 +172,7 @@ class TestStagedSwaps:
             real_swap(staging, final)
 
         monkeypatch.setattr(maintenance, "_atomic_swap", spying_swap)
-        idx = _build_half_update_half(spark)
+        idx = _build_half_update_half(spark, tmp_path)
         assert observed, "update path did not route through _atomic_swap"
         assert all(s and f for s, f in observed)
 
@@ -225,10 +226,10 @@ class TestMapOnlyBigrams:
 
 class TestIndexDelete:
     @pytest.mark.slow
-    def test_delete_absent_ids_is_noop(self, spark):
+    def test_delete_absent_ids_is_noop(self, spark, tmp_path):
         from csv_parquet_s3_spark.operators.retrieval import delete_from_bm25_index
 
-        idx = _build_half_update_half(spark)
+        idx = _build_half_update_half(spark, tmp_path)
         before = {
             t: _rows(spark.read.parquet(f"{idx}/{t}"))
             for t in ("doc_tf", "dl", "df", "stats")
@@ -240,7 +241,7 @@ class TestIndexDelete:
         for t, rows in before.items():
             assert _rows(spark.read.parquet(f"{idx}/{t}")) == rows
 
-    def test_delete_then_serve_equals_rebuild(self, spark):
+    def test_delete_then_serve_equals_rebuild(self, spark, tmp_path):
         from csv_parquet_s3_spark.operators.retrieval import (
             _bm25_serve_from,
             build_bm25_index,
@@ -248,13 +249,13 @@ class TestIndexDelete:
         )
 
         docs = _docs(spark)
-        full = tempfile.mkdtemp(prefix="bm25_del_")
+        full = str(tmp_path / "bm25_del")
         build_bm25_index(spark, docs, full)
         n = delete_from_bm25_index(
             spark, docs.filter(F.col("doc_id") % 3 == 0).select("doc_id"), full
         )
         assert n == docs.filter(F.col("doc_id") % 3 == 0).count()
-        survivors = tempfile.mkdtemp(prefix="bm25_del_ref_")
+        survivors = str(tmp_path / "bm25_del_ref")
         build_bm25_index(spark, docs.filter(F.col("doc_id") % 3 != 0), survivors)
         assert _rows(_bm25_serve_from(spark, full)) == _rows(
             _bm25_serve_from(spark, survivors)

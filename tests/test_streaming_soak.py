@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import DataFrame
@@ -31,6 +30,14 @@ from tests.conftest import SF_SMOKE
 pytestmark = pytest.mark.slow
 
 N_BATCHES = 10
+
+
+def _mkdirs(tmp_path, *names: str) -> list[str]:
+    """Empty directories under pytest's per-test ``tmp_path``."""
+    dirs = [tmp_path / n for n in names]
+    for d in dirs:
+        d.mkdir()
+    return [str(d) for d in dirs]
 
 
 def _stage_files(staging: str, parts: list[DataFrame]) -> None:
@@ -94,36 +101,31 @@ def test_ivf_maintenance_ten_batches_bounded_storage(spark, tmp_path):
     full_idx = str(tmp_path / "ivf_full")
     build_ivf_index(spark, emb, _SEEDS, full_idx)
 
-    staging = tempfile.mkdtemp(prefix="ivf_soak_src_")
-    ckpt = tempfile.mkdtemp(prefix="ivf_soak_ckpt_")
-    try:
-        late = emb.filter(tail)
-        _stage_files(
-            staging,
-            [
-                late.filter((F.col("vec_id") % 20) == (2 * i + 1))
-                for i in range(N_BATCHES)
-            ],
-        )
+    staging, ckpt = _mkdirs(tmp_path, "src", "ckpt")
+    late = emb.filter(tail)
+    _stage_files(
+        staging,
+        [
+            late.filter((F.col("vec_id") % 20) == (2 * i + 1))
+            for i in range(N_BATCHES)
+        ],
+    )
 
-        release_persistents(spark)  # drain other tests' leftovers
-        before = persistent_rdd_ids(spark)
-        n = _drain_in_batches(
-            spark, staging, ckpt,
-            lambda s: stream_update_ivf_index(s, idx, ckpt),
-        )
-        assert n == N_BATCHES, f"expected {N_BATCHES} micro-batches, saw {n}"
-        leaked = persistent_rdd_ids(spark) - before
-        assert not leaked, (
-            f"{len(leaked)} RDDs left persisted after {n} maintenance "
-            f"batches — unbounded storage growth under soak: {leaked}"
-        )
-        assert _rows(_serve_plain_ivf(spark, emb, idx)) == _rows(
-            _serve_plain_ivf(spark, emb, full_idx)
-        ), "ten-batch streamed maintenance diverged from a full build"
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    release_persistents(spark)  # drain other tests' leftovers
+    before = persistent_rdd_ids(spark)
+    n = _drain_in_batches(
+        spark, staging, ckpt,
+        lambda s: stream_update_ivf_index(s, idx, ckpt),
+    )
+    assert n == N_BATCHES, f"expected {N_BATCHES} micro-batches, saw {n}"
+    leaked = persistent_rdd_ids(spark) - before
+    assert not leaked, (
+        f"{len(leaked)} RDDs left persisted after {n} maintenance "
+        f"batches — unbounded storage growth under soak: {leaked}"
+    )
+    assert _rows(_serve_plain_ivf(spark, emb, idx)) == _rows(
+        _serve_plain_ivf(spark, emb, full_idx)
+    ), "ten-batch streamed maintenance diverged from a full build"
 
 
 def test_bm25_maintenance_ten_batches_bounded_storage(spark, tmp_path):
@@ -148,36 +150,31 @@ def test_bm25_maintenance_ten_batches_bounded_storage(spark, tmp_path):
     full_idx = str(tmp_path / "bm25_full")
     build_bm25_index(spark, docs, full_idx)
 
-    staging = tempfile.mkdtemp(prefix="bm25_soak_src_")
-    ckpt = tempfile.mkdtemp(prefix="bm25_soak_ckpt_")
-    try:
-        odd = docs.filter(F.col("doc_id") % 2 == 1)
-        _stage_files(
-            staging,
-            [
-                odd.filter((F.col("doc_id") % 20) == (2 * i + 1))
-                for i in range(N_BATCHES)
-            ],
-        )
+    staging, ckpt = _mkdirs(tmp_path, "src", "ckpt")
+    odd = docs.filter(F.col("doc_id") % 2 == 1)
+    _stage_files(
+        staging,
+        [
+            odd.filter((F.col("doc_id") % 20) == (2 * i + 1))
+            for i in range(N_BATCHES)
+        ],
+    )
 
-        release_persistents(spark)
-        before = persistent_rdd_ids(spark)
-        n = _drain_in_batches(
-            spark, staging, ckpt,
-            lambda s: stream_update_bm25_index(s, idx, ckpt),
-        )
-        assert n == N_BATCHES, f"expected {N_BATCHES} micro-batches, saw {n}"
-        leaked = persistent_rdd_ids(spark) - before
-        assert not leaked, (
-            f"{len(leaked)} RDDs left persisted after {n} maintenance "
-            f"batches — unbounded storage growth under soak: {leaked}"
-        )
-        assert _rows(_bm25_serve_from(spark, idx)) == _rows(
-            _bm25_serve_from(spark, full_idx)
-        ), "ten-batch streamed maintenance diverged from a full build"
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    release_persistents(spark)
+    before = persistent_rdd_ids(spark)
+    n = _drain_in_batches(
+        spark, staging, ckpt,
+        lambda s: stream_update_bm25_index(s, idx, ckpt),
+    )
+    assert n == N_BATCHES, f"expected {N_BATCHES} micro-batches, saw {n}"
+    leaked = persistent_rdd_ids(spark) - before
+    assert not leaked, (
+        f"{len(leaked)} RDDs left persisted after {n} maintenance "
+        f"batches — unbounded storage growth under soak: {leaked}"
+    )
+    assert _rows(_bm25_serve_from(spark, idx)) == _rows(
+        _bm25_serve_from(spark, full_idx)
+    ), "ten-batch streamed maintenance diverged from a full build"
 
 
 def test_concurrent_maintenance_streams_do_not_release_each_other(
@@ -228,66 +225,61 @@ def test_concurrent_maintenance_streams_do_not_release_each_other(
     bm25_full = str(tmp_path / "bm25_full")
     build_bm25_index(spark, docs, bm25_full)
 
-    ivf_src = tempfile.mkdtemp(prefix="ivf_conc_src_")
-    ivf_ckpt = tempfile.mkdtemp(prefix="ivf_conc_ckpt_")
-    bm25_src = tempfile.mkdtemp(prefix="bm25_conc_src_")
-    bm25_ckpt = tempfile.mkdtemp(prefix="bm25_conc_ckpt_")
-    try:
-        late = emb.filter(tail)
-        _stage_files(
-            ivf_src,
-            [
-                late.filter((F.col("vec_id") % 12) == (2 * i + 1))
-                for i in range(n_batches)
-            ],
-        )
-        odd = docs.filter(F.col("doc_id") % 2 == 1)
-        _stage_files(
-            bm25_src,
-            [
-                odd.filter((F.col("doc_id") % 12) == (2 * i + 1))
-                for i in range(n_batches)
-            ],
+    ivf_src, ivf_ckpt, bm25_src, bm25_ckpt = _mkdirs(
+        tmp_path, "ivf_src", "ivf_ckpt", "bm25_src", "bm25_ckpt"
+    )
+    late = emb.filter(tail)
+    _stage_files(
+        ivf_src,
+        [
+            late.filter((F.col("vec_id") % 12) == (2 * i + 1))
+            for i in range(n_batches)
+        ],
+    )
+    odd = docs.filter(F.col("doc_id") % 2 == 1)
+    _stage_files(
+        bm25_src,
+        [
+            odd.filter((F.col("doc_id") % 12) == (2 * i + 1))
+            for i in range(n_batches)
+        ],
+    )
+
+    release_persistents(spark)
+    before = persistent_rdd_ids(spark)
+
+    def file_stream(staging: str):
+        schema = spark.read.parquet(
+            os.path.join(staging, "00_batch.parquet")
+        ).schema
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .option("pathGlobFilter", "*.parquet")
+            .parquet(staging)
         )
 
-        release_persistents(spark)
-        before = persistent_rdd_ids(spark)
+    # start BOTH, then await both — the drains interleave
+    q_ivf = stream_update_ivf_index(
+        file_stream(ivf_src), ivf_idx, ivf_ckpt
+    )
+    q_bm25 = stream_update_bm25_index(
+        file_stream(bm25_src), bm25_idx, bm25_ckpt
+    )
+    assert q_ivf.awaitTermination(900), "ivf stream did not finish"
+    assert q_bm25.awaitTermination(900), "bm25 stream did not finish"
+    for q, want in ((q_ivf, n_batches), (q_bm25, n_batches)):
+        n = sum(1 for pr in q.recentProgress if pr["numInputRows"] > 0)
+        assert n == want, f"expected {want} micro-batches, saw {n}"
 
-        def file_stream(staging: str):
-            schema = spark.read.parquet(
-                os.path.join(staging, "00_batch.parquet")
-            ).schema
-            return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(staging)
-            )
-
-        # start BOTH, then await both — the drains interleave
-        q_ivf = stream_update_ivf_index(
-            file_stream(ivf_src), ivf_idx, ivf_ckpt
-        )
-        q_bm25 = stream_update_bm25_index(
-            file_stream(bm25_src), bm25_idx, bm25_ckpt
-        )
-        assert q_ivf.awaitTermination(900), "ivf stream did not finish"
-        assert q_bm25.awaitTermination(900), "bm25 stream did not finish"
-        for q, want in ((q_ivf, n_batches), (q_bm25, n_batches)):
-            n = sum(1 for pr in q.recentProgress if pr["numInputRows"] > 0)
-            assert n == want, f"expected {want} micro-batches, saw {n}"
-
-        leaked = persistent_rdd_ids(spark) - before
-        assert not leaked, (
-            f"{len(leaked)} RDDs left persisted after the concurrent "
-            f"drains: {leaked}"
-        )
-        assert _rows(_serve_plain_ivf(spark, emb, ivf_idx)) == _rows(
-            _serve_plain_ivf(spark, emb, ivf_full)
-        ), "concurrent ivf maintenance diverged from a full build"
-        assert _rows(_bm25_serve_from(spark, bm25_idx)) == _rows(
-            _bm25_serve_from(spark, bm25_full)
-        ), "concurrent bm25 maintenance diverged from a full build"
-    finally:
-        for d in (ivf_src, ivf_ckpt, bm25_src, bm25_ckpt):
-            shutil.rmtree(d, ignore_errors=True)
+    leaked = persistent_rdd_ids(spark) - before
+    assert not leaked, (
+        f"{len(leaked)} RDDs left persisted after the concurrent "
+        f"drains: {leaked}"
+    )
+    assert _rows(_serve_plain_ivf(spark, emb, ivf_idx)) == _rows(
+        _serve_plain_ivf(spark, emb, ivf_full)
+    ), "concurrent ivf maintenance diverged from a full build"
+    assert _rows(_bm25_serve_from(spark, bm25_idx)) == _rows(
+        _bm25_serve_from(spark, bm25_full)
+    ), "concurrent bm25 maintenance diverged from a full build"

@@ -1,11 +1,25 @@
-"""Driver-equivalent local verification: run every registered query under a
+"""Driver-equivalent local verification: run registered queries under a
 VANILLA SparkSession (none of our get_spark confs — exactly what the round
 driver builds) and hash-compare against the DuckDB oracles.
 
-Usage:  python tools/verify_local.py [sf_dir]      (default sf0.01)
+Usage:  python tools/verify_local.py [sf_dir [name ...]]   (default sf0.01)
 
-Prints one line per failure plus a final summary; exit code 0 iff every
-oracle query hash-matches with >0 rows and every rows-only query executes.
+With no names: ``entry()`` plus every registered query, one line per
+failure and a final summary that includes the driver window (the first 50
+entries of ``queries()``). With names: only those queries, one
+``OK`` / ``MISMATCH`` / ``ROWS-ONLY`` line each — the spot-check loop while
+changing an operator.
+
+Tables may be single parquet files (the test-data layout) or Spark-written
+directories of part files. Each query runs inside ``released_after`` so a
+long sweep in one session does not accumulate checkpoint blocks. Exit code
+0 iff every oracle query hash-matches with >0 rows and every rows-only
+query executes; an unknown name exits 2 before any Spark work.
+
+The session is deliberately vanilla, so it has the default 1 GiB driver
+heap: at 10×-sf0.1 and up, queries that pin estimators against exact ground
+truth (q_approx_sketches) can run out of it — run with
+PYSPARK_SUBMIT_ARGS="--driver-memory 8g pyspark-shell" there.
 """
 
 from __future__ import annotations
@@ -35,14 +49,22 @@ def row_hash(pdf: pd.DataFrame) -> str:
     return hashlib.md5(body.encode()).hexdigest()
 
 
-def main() -> int:
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-
-    from pyspark.sql import SparkSession
+def main(argv: list[str]) -> int:
+    sf = argv[0] if argv else "/root/testdata/sf0.01"
+    names = argv[1:]
 
     spec = importlib.util.spec_from_file_location("e", f"{REPO}/__spark_entry__.py")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    queries, oracles = mod.queries(), mod.oracle_sql()
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        print(f"unknown query name(s): {' '.join(unknown)}", file=sys.stderr)
+        return 2
+
+    from pyspark.sql import SparkSession
+
+    from csv_parquet_s3_spark.plans.materialize import released_after
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -54,47 +76,52 @@ def main() -> int:
 
     duck = duckdb.connect()
     for t in TABLES:
-        duck.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+        path = f"{sf}/{t}.parquet"
+        src = f"{path}/*.parquet" if os.path.isdir(path) else path
+        duck.sql(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
 
-    assert len(mod.entry(spark).collect()) >= 1, "entry() returned no rows"
+    sweep = not names
+    if sweep and not mod.entry(spark).collect():
+        print("ERROR entry(): returned no rows")
+        return 1
 
-    queries, oracles = mod.queries(), mod.oracle_sql()
-    window = set(list(queries)[:50])  # the driver checks exactly this subset
-    n_match = n_rows_only = 0
-    window_ok: set = set()
-    failures: list[tuple] = []
-    # 236 queries in one standing session: release each invocation's
-    # localCheckpoint blocks after its toPandas completes, like bench.py
-    # (plans/materialize.py — RDD-level persists the CacheManager never
-    # frees; without this the sweep's block manager grows monotonically).
-    sys.path.insert(0, REPO)
-    from csv_parquet_s3_spark.plans.materialize import released_after
-
-    for name in sorted(queries):
+    checked = names or sorted(queries)
+    passed: set = set()
+    n_match = 0
+    for name in checked:
         try:
             with released_after(spark):
                 got = queries[name](spark, sf).toPandas()
-            if name in oracles:
-                want = duck.sql(oracles[name]).df()
-                if row_hash(got) == row_hash(want) and len(want) > 0:
-                    n_match += 1
-                    window_ok.add(name)
-                else:
-                    failures.append((name, len(got), len(want)))
-                    print(f"MISMATCH {name}: spark={len(got)} duck={len(want)}")
-            else:
-                n_rows_only += 1
-                window_ok.add(name)  # rows-only entries pass the weaker check
+            if name not in oracles:
+                passed.add(name)  # rows-only entries pass the weaker check
+                if not sweep:
+                    print(f"ROWS-ONLY {name}: {len(got)} rows")
+                continue
+            want = duck.sql(oracles[name]).df()
+            ok = row_hash(got) == row_hash(want) and len(want) > 0
+            if ok:
+                passed.add(name)
+                n_match += 1
+            if not (ok and sweep):
+                verdict = "OK" if ok else "MISMATCH"
+                print(f"{verdict} {name}: spark={len(got)} duck={len(want)}")
+            if not ok:
+                print("  spark cols:", sorted(got.columns))
+                print("  duck  cols:", sorted(want.columns))
+                print(got.head(8).to_string())
+                print(want.head(8).to_string())
         except Exception as exc:  # pragma: no cover - failure path
-            failures.append((name, "EXC", str(exc)[:200]))
             print(f"ERROR {name}: {exc}")
-    print(
-        f"entry OK; hash-match {n_match}/{len(oracles)}; "
-        f"rows-only OK {n_rows_only}; failures: {len(failures)}; "
-        f"driver window (first 50): {len(window & window_ok)}/50 green"
-    )
+    failures = len(set(checked) - passed)
+    if sweep:
+        window = set(list(queries)[:50])  # the driver checks exactly this subset
+        print(
+            f"entry OK; hash-match {n_match}/{len(oracles)}; "
+            f"rows-only OK {len(passed) - n_match}; failures: {failures}; "
+            f"driver window (first 50): {len(window & passed)}/50 green"
+        )
     return 1 if failures else 0
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))
