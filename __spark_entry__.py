@@ -45,25 +45,24 @@ def entry(spark: SparkSession) -> DataFrame:
 # listed first: the rotation output PLUS re-pins at the head for the
 # queries the latest change touched.
 VERIFY_PRIORITY: list[str] = [
-    # RE-PINS FIRST — the BM25 and SQ8 stored-index serves, whose stats
-    # readout now goes through sources.tables.read_small_table; then the
-    # seven queries that read a path again after rewriting it in the same
-    # call (BM25 and IVF index update, delete and compaction, the MinHash
-    # incremental index, the streaming SCD1 state), so they exercise
-    # read_parquet's schema-memo invalidation. Then the verbatim
-    # tools/rotate_window.py output against CORRECTNESS_r13 in its printed
-    # order. The seven displaced tail entries (q_table_content_digest
-    # through dedup_sorted_neighborhood_pairs, then
-    # sketch_countmin_user_counts and q_open_orders_daily) are hash-green.
-    "retrieval_bm25_from_index",
-    "sim_cosine_topk_ivf_sq8_from_index",
-    "retrieval_bm25_incremental",
-    "retrieval_bm25_after_delete",
-    "retrieval_bm25_compacted",
-    "sim_cosine_topk_ivf_incremental",
-    "sim_cosine_topk_ivf_after_delete",
-    "dedup_minhash_incremental",
+    # RE-PINS FIRST — the seven stream_* queries whose micro-batch
+    # sequencing now runs through the one staged source, foreachBatch
+    # runner and await (operators/streaming_batch.py, streaming/microbatch.py),
+    # and retrieval_bm25_compacted, whose sorted compaction now goes through
+    # maintenance._clustered_rewrite. Then the verbatim tools/rotate_window.py
+    # output against CORRECTNESS_r13 in its printed order. The seven
+    # displaced tail entries (sketch_countmin_user_counts, q_open_orders_daily,
+    # q_table_content_digest, q_fk_orphan_audit, q_segment_user_bitmap_distinct,
+    # q_segment_bitmap_overlap, dedup_sorted_neighborhood_pairs) are hash-green.
+    "stream_bm25_index_maintenance",
+    "stream_ivf_index_maintenance",
+    "stream_click_purchase_left_outer",
+    "stream_click_purchase_right_outer",
+    "stream_click_purchase_full_outer",
+    "stream_events_late_data_drop",
     "stream_scd1_upsert_priority",
+    "retrieval_bm25_compacted",
+    "dedup_minhash_incremental",
     "mm_byte_histogram_features",
     "q_events_sessionize",
     "q_events_user_daily_activity",
@@ -101,7 +100,7 @@ VERIFY_PRIORITY: list[str] = [
     "sim_cosine_topk_ivf_trained",
     "sim_cosine_topk_ivf_pq_from_index",
     "sim_cosine_topk_ivf_pq_refine",
-    "stream_ivf_index_maintenance",
+    "sim_cosine_topk_ivf_incremental",
     "pii_redact_customers",
     "text_bpe_token_stats",
     "q_approx_sketches",

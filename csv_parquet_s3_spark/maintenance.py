@@ -355,15 +355,44 @@ def compact(
     those columns, so every output file covers a narrow key range and parquet
     footer min/max stats prune file scans for key predicates.
     """
-    n_files = max(1, -(-dataset_bytes(path) // target_file_bytes))
     df: DataFrame = read_parquet(spark, path)
     if sort_by:
-        df = df.repartitionByRange(n_files, *[F.col(c) for c in sort_by])
-        df = df.sortWithinPartitions(*sort_by)
-    else:
-        df = df.coalesce(n_files) if n_files < df.rdd.getNumPartitions() else df.repartition(n_files)
+        return _clustered_rewrite(df, path, sort_by, target_file_bytes, "._compact-")
+    n_files = _file_target(path, target_file_bytes)
+    df = df.coalesce(n_files) if n_files < df.rdd.getNumPartitions() else df.repartition(n_files)
     _staged_overwrite(df, path, "._compact-")
     return parquet_file_count(path)
+
+
+def _file_target(path: str, target_file_bytes: int) -> int:
+    """``ceil(bytes/target)`` output files for the dataset at ``path``."""
+    return max(1, -(-dataset_bytes(path) // target_file_bytes))
+
+
+def _clustered_rewrite(
+    df: DataFrame,
+    path: str,
+    by: list[str],
+    target_file_bytes: int,
+    marker: str,
+    drop: tuple[str, ...] = (),
+) -> int:
+    """Swap ``df`` in at ``path`` range-partitioned on ``by`` into
+    :func:`_file_target` files, each sorted on ``by``, without the helper
+    columns ``drop``. Every output file then covers a narrow range of
+    ``by``, so footer min/max stats prune scans. Returns the new file
+    count."""
+    n_files = _file_target(path, target_file_bytes)
+    df = df.repartitionByRange(n_files, *[F.col(c) for c in by])
+    _staged_overwrite(df.sortWithinPartitions(*by).drop(*drop), path, marker)
+    return parquet_file_count(path)
+
+
+def _rank_bucket(col: str, bits: int) -> F.Column:
+    """``col``'s global ``percent_rank`` scaled to a ``bits``-bit integer."""
+    return F.expr(
+        f"CAST(percent_rank() OVER (ORDER BY {col}) * {(1 << bits) - 1} AS BIGINT)"
+    )
 
 
 def upsert(
@@ -403,12 +432,7 @@ def _zorder_col(cols: list[str], bits: int = 16) -> F.Column:
     Pure JVM bit arithmetic (shiftleft/and/or over each column's 16-bit
     percent_rank bucket) — no UDF, codegen-friendly.
     """
-    ranked = [
-        F.expr(
-            f"CAST(percent_rank() OVER (ORDER BY {c}) * {(1 << bits) - 1} AS BIGINT)"
-        )
-        for c in cols
-    ]
+    ranked = [_rank_bucket(c, bits) for c in cols]
     z = F.lit(0)
     for bit in range(bits):
         for i, r in enumerate(ranked):
@@ -429,11 +453,10 @@ def compact_zorder(
     ``percent_rank`` ranking is a single total sort at layout time — the
     one-off cost that buys stats-based pruning on every subsequent scan
     (same trade as any Z-order OPTIMIZE). Returns the new file count."""
-    n_files = max(1, -(-dataset_bytes(path) // target_file_bytes))
     df = read_parquet(spark, path).withColumn("_z", _zorder_col(zorder_by))
-    df = df.repartitionByRange(n_files, F.col("_z")).sortWithinPartitions("_z").drop("_z")
-    _staged_overwrite(df, path, "._zorder-")
-    return parquet_file_count(path)
+    return _clustered_rewrite(
+        df, path, ["_z"], target_file_bytes, "._zorder-", drop=("_z",)
+    )
 
 
 def vacuum(path: str) -> list[str]:
@@ -541,18 +564,11 @@ def compact_hilbert(
     global ranking cost, same staged-swap atomicity. Returns the new file
     count."""
     bits = min(bits, 63 // max(1, len(hilbert_by)))
-    n_files = max(1, -(-dataset_bytes(path) // target_file_bytes))
     df = read_parquet(spark, path)
-    buckets = []
-    for j, c in enumerate(hilbert_by):
-        df = df.withColumn(
-            f"_hb{j}",
-            F.expr(
-                f"CAST(percent_rank() OVER (ORDER BY {c}) * {(1 << bits) - 1} AS BIGINT)"
-            ),
-        )
-        buckets.append(f"_hb{j}")
+    buckets = [f"_hb{j}" for j in range(len(hilbert_by))]
+    for b, c in zip(buckets, hilbert_by):
+        df = df.withColumn(b, _rank_bucket(c, bits))
     df = with_hilbert_index(df, buckets, bits).drop(*buckets)
-    df = df.repartitionByRange(n_files, F.col("_h")).sortWithinPartitions("_h").drop("_h")
-    _staged_overwrite(df, path, "._hilbert-")
-    return parquet_file_count(path)
+    return _clustered_rewrite(
+        df, path, ["_h"], target_file_bytes, "._hilbert-", drop=("_h",)
+    )

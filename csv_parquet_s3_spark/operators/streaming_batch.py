@@ -1,5 +1,5 @@
 """Driver-checkable Structured Streaming: registered queries that REALLY run
-a streaming query (readStream → watermarked aggregation → availableNow →
+a streaming query (file source → watermarked aggregation → availableNow →
 memory sink) and return the drained result as a batch DataFrame.
 
 This closes the "streaming is only test-pinned" gap: on a bounded input
@@ -20,18 +20,26 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from csv_parquet_s3_spark.maintenance import _staged_overwrite, scratch_dir
 from csv_parquet_s3_spark.operators.registry import register
-from csv_parquet_s3_spark.sources.tables import load_table, read_parquet, table_path
+from csv_parquet_s3_spark.sources.tables import (
+    events_with_ltz_ts,
+    load_table,
+    read_parquet,
+    table_path,
+)
 from csv_parquet_s3_spark.streaming.events_stream import (
     hourly_event_rollup,
     session_window_counts,
     sliding_event_rollup,
 )
+from csv_parquet_s3_spark.streaming.microbatch import await_stream, run_each_batch
 
 
 def _stage_file(df: DataFrame, directory: str, name: str, mtime: int) -> None:
@@ -49,27 +57,42 @@ def _stage_file(df: DataFrame, directory: str, name: str, mtime: int) -> None:
     os.utime(dst, (mtime, mtime))
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A streaming view of the events table with the same ts normalization
-    as the batch loader (nanos-int64 and timestamp_ntz vintages both → LTZ)."""
-    path = table_path(sf_dir, "events")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = read_parquet(spark, path).schema
-    # FileStreamSource wants a DIRECTORY; select just the events file from
-    # the shared sf dir with a glob filter.
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("CAST(ts DIV 1000 AS BIGINT)"))
+@contextmanager
+def staged_stream(
+    spark: SparkSession, frames: list[DataFrame]
+) -> Iterator[Callable[[], DataFrame]]:
+    """Stage each of ``frames`` as one parquet file, in list order, and yield
+    a factory of stream sources over them that read one file per
+    micro-batch: frame ``i`` is micro-batch ``i + 1``. Call the factory
+    twice for two sources over one directory (a stream-stream join). The
+    staging directory is removed on exit, so the streams must drain inside
+    the ``with`` block."""
+    staging = scratch_dir("spark_graft_staged_")
+    try:
+        for i, df in enumerate(frames):
+            _stage_file(df, staging, f"{i:02d}.parquet", 1_000_000_000 + 100 * i)
+        schema = read_parquet(spark, os.path.join(staging, "00.parquet")).schema
+        yield lambda: (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .option("pathGlobFilter", "*.parquet")
+            .parquet(staging)
         )
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+
+
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A streaming view of the events table with the batch loader's ts
+    normalization. FileStreamSource wants a DIRECTORY, so a glob filter
+    selects just the events file from the shared sf dir."""
+    path = table_path(sf_dir, "events")
+    return events_with_ltz_ts(
+        spark,
+        lambda: spark.readStream.schema(read_parquet(spark, path).schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir),
+    )
 
 
 def _drain(
@@ -85,13 +108,9 @@ def _drain(
     closed); stream-stream INNER joins drain in ``append`` (their only
     supported mode — matches emit eagerly, so a bounded drain is lossless).
 
-    ``expect_input_batches`` asserts how many micro-batches CONSUMED rows —
-    for operators whose semantics depend on a specific batch sequencing
-    (the late-data probe needs its rows in 3 separate batches so the
-    SPARK-40925 one-batch-lag watermark filter engages). If a future Spark
-    build reorders files or stops honoring maxFilesPerTrigger under
-    availableNow, this fails as a clear sequencing error instead of a
-    confusing downstream hash mismatch."""
+    ``expect_input_batches`` is checked by :func:`await_stream` (the
+    late-data probe needs its rows in 3 separate batches so the SPARK-40925
+    one-batch-lag watermark filter engages)."""
     name = "stream_drain_" + uuid.uuid4().hex
     q = (
         df.writeStream.format("memory")
@@ -100,7 +119,7 @@ def _drain(
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(timeout_s), "streaming drain did not finish"
+    await_stream(q, name, timeout_s, expect_input_batches)
     # streaming plans live inside the engine, invisible to the returned
     # (memory-sink) frame — when the plan audit is recording, capture the
     # last executed micro-batch's physical plan so stream_* rows show
@@ -115,14 +134,6 @@ def _drain(
             rec.append(analyze_simple(q._jsq.explainInternal(False)))
         except Exception:  # audit-only telemetry; never fail the drain
             pass
-    if expect_input_batches is not None:
-        got = sum(1 for pr in q.recentProgress if pr["numInputRows"] > 0)
-        if got != expect_input_batches:
-            raise RuntimeError(
-                f"micro-batch sequencing broke: {got} batches consumed rows, "
-                f"expected {expect_input_batches} — FileStreamSource ordering "
-                "or maxFilesPerTrigger semantics changed on this Spark build"
-            )
     return spark.table(name)
 
 
@@ -246,8 +257,8 @@ def stream_click_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataF
 )
 def stream_bm25_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 served from an index maintained BY A STREAM: build the stored
-    doc-term index on the even-doc_id half, then readStream the odd half
-    (two staged files → two micro-batches via maxFilesPerTrigger=1) through
+    doc-term index on the even-doc_id half, then stream the odd half
+    (two staged files → two micro-batches via :func:`staged_stream`) through
     ``foreachBatch`` → ``update_bm25_index`` — each batch tokenized at
     batch cost and MERGE-d by doc_id, statistics refreshed index-sized —
     and answer the top-k query from the stored index only. Hash-equality
@@ -270,35 +281,13 @@ def stream_bm25_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     idx = scratch_dir("bm25_stream_idx_")
     build_bm25_index(spark, docs.filter(F.col("doc_id") % 2 == 0), idx)
 
-    staging = scratch_dir("bm25_stream_src_")
-    ckpt = scratch_dir("bm25_stream_ckpt_")
-    try:
-        odd = docs.filter(F.col("doc_id") % 2 == 1)
-        _stage_file(
-            odd.filter(F.col("doc_id") % 4 == 1), staging, "00_batch.parquet", 1_000_000_000
-        )
-        _stage_file(
-            odd.filter(F.col("doc_id") % 4 == 3), staging, "01_batch.parquet", 1_000_000_100
-        )
-
-        schema = read_parquet(spark, os.path.join(staging, "00_batch.parquet")).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(staging)
-        )
-        q = stream_update_bm25_index(stream, idx, ckpt)
-        assert q.awaitTermination(420), "index-maintenance stream did not finish"
-        n_batches = sum(1 for pr in q.recentProgress if pr["numInputRows"] > 0)
-        if n_batches != 2:
-            raise RuntimeError(
-                f"expected the odd half in 2 micro-batches, saw {n_batches}"
-            )
-        return _bm25_serve_from(spark, idx)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    odd = docs.filter(F.col("doc_id") % 2 == 1)
+    halves = [odd.filter(F.col("doc_id") % 4 == r) for r in (1, 3)]
+    with staged_stream(spark, halves) as source:
+        ckpt = scratch_dir("bm25_stream_ckpt_")
+        q = stream_update_bm25_index(source(), idx, ckpt)
+        await_stream(q, "stream_bm25_index_maintenance", expect_input_batches=2)
+    return _bm25_serve_from(spark, idx)
 
 
 # oracle registration for the entry above: force retrieval's registrations
@@ -321,8 +310,8 @@ _ORACLES["stream_bm25_index_maintenance"] = _ORACLES["retrieval_bm25_topk"]
 def stream_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN search served from an IVF index maintained BY A STREAM: build
     the stored inverted lists on the corpus minus the odd-vec_id tail,
-    readStream the tail (two staged files → two micro-batches via
-    maxFilesPerTrigger=1) through ``foreachBatch`` →
+    stream the tail (two staged files → two micro-batches via
+    :func:`staged_stream`) through ``foreachBatch`` →
     ``update_ivf_index`` — each batch assigned against the STORED
     quantizer and MERGE-d by vec_id — then answer nprobe top-k from the
     stored index only. Hash-equality with the full-corpus oracle pins
@@ -345,35 +334,13 @@ def stream_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = scratch_dir("ivf_stream_idx_")
     build_ivf_index(spark, emb.filter(~tail), _SEEDS, idx)
 
-    staging = scratch_dir("ivf_stream_src_")
-    ckpt = scratch_dir("ivf_stream_ckpt_")
-    try:
-        late = emb.filter(tail)
-        _stage_file(
-            late.filter(F.col("vec_id") % 4 == 1), staging, "00_batch.parquet", 1_000_000_000
-        )
-        _stage_file(
-            late.filter(F.col("vec_id") % 4 == 3), staging, "01_batch.parquet", 1_000_000_100
-        )
-
-        schema = read_parquet(spark, os.path.join(staging, "00_batch.parquet")).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(staging)
-        )
-        q = stream_update_ivf_index(stream, idx, ckpt)
-        assert q.awaitTermination(420), "index-maintenance stream did not finish"
-        n_batches = sum(1 for pr in q.recentProgress if pr["numInputRows"] > 0)
-        if n_batches != 2:
-            raise RuntimeError(
-                f"expected the vector tail in 2 micro-batches, saw {n_batches}"
-            )
-        return _serve_plain_ivf(spark, emb, idx)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    late = emb.filter(tail)
+    halves = [late.filter(F.col("vec_id") % 4 == r) for r in (1, 3)]
+    with staged_stream(spark, halves) as source:
+        ckpt = scratch_dir("ivf_stream_ckpt_")
+        q = stream_update_ivf_index(source(), idx, ckpt)
+        await_stream(q, "stream_ivf_index_maintenance", expect_input_batches=2)
+    return _serve_plain_ivf(spark, emb, idx)
 
 
 from csv_parquet_s3_spark.operators import similarity_index as _simidx  # noqa: E402,F401
@@ -468,52 +435,26 @@ def _staged_outer_join_drain(spark: SparkSession, sf_dir: str, join_fn) -> DataF
             f"events table at {sf_dir} is empty — the outer-join drain needs "
             "a real corpus to anchor its watermark carriers"
         )
-    staging = scratch_dir("spark_graft_outer_")
-    try:
-        _stage_file(ev, staging, "00_main.parquet", 1_000_000_000)
-        _stage_file(
-            spark.createDataFrame(
-                [(-2, hi, -2, "click", 0.0), (-3, hi, -3, "purchase", 0.0)],
-                schema=ev.schema,
-            ),
-            staging,
-            "01_carrier.parquet",
-            1_000_000_100,
+    carriers = [
+        spark.createDataFrame(
+            [(-i, hi, -i, "click", 0.0), (-i - 1, hi, -i - 1, "purchase", 0.0)],
+            schema=ev.schema,
         )
-        _stage_file(
-            spark.createDataFrame(
-                [(-4, hi, -4, "click", 0.0), (-5, hi, -5, "purchase", 0.0)],
-                schema=ev.schema,
-            ),
-            staging,
-            "02_kick.parquet",
-            1_000_000_200,
-        )
-
-        schema = read_parquet(spark, os.path.join(staging, "00_main.parquet")).schema
-
-        def _src() -> DataFrame:
-            return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(staging)
-            )
-
-        clicks = _src().filter(F.col("event_type") == "click")
-        purchases = _src().filter(F.col("event_type") == "purchase")
+        for i in (2, 4)
+    ]
+    with staged_stream(spark, [ev, *carriers]) as source:
+        clicks = source().filter(F.col("event_type") == "click")
+        purchases = source().filter(F.col("event_type") == "purchase")
         drained = _drain(
             spark,
             join_fn(clicks, purchases),
             mode="append",
             expect_input_batches=3,
         )
-        # the sentinel carrier/kick clicks are harness artifacts; their
-        # bounds sit above the final watermark so they never emit, but the
-        # filter keeps the contract explicit
-        return drained.filter(F.col("user_id") >= 0)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    # the sentinel carrier/kick clicks are harness artifacts; their bounds
+    # sit above the final watermark so they never emit, but the filter keeps
+    # the contract explicit
+    return drained.filter(F.col("user_id") >= 0)
 
 
 @register(
@@ -756,14 +697,8 @@ def stream_scd1_upsert_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window as W
 
-    path = table_path(sf_dir, "orders")
-    schema = read_parquet(spark, path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-        .select("o_custkey", "o_orderpriority", "o_orderdate", "o_orderkey")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_custkey", "o_orderpriority", "o_orderdate", "o_orderkey"
     )
     target = os.path.join(scratch_dir("scd1_stream_"), "current")
 
@@ -777,9 +712,7 @@ def stream_scd1_upsert_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("rn")
         )
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _merge(batch_df: DataFrame) -> None:
         s = batch_df.sparkSession
         latest = _latest(batch_df)
         if os.path.exists(target):
@@ -788,16 +721,9 @@ def stream_scd1_upsert_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         # half-written or missing state
         _staged_overwrite(latest, target, "._upsert-")
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option(
-            "checkpointLocation",
-            os.path.join(scratch_dir("scd1_stream_ck_"), "ck"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(420), "streaming upsert did not finish"
+    with staged_stream(spark, [orders]) as source:
+        q = run_each_batch(source(), _merge, scratch_dir("scd1_stream_ck_"))
+        await_stream(q, "stream_scd1_upsert_priority")
     return read_parquet(spark, target).select(
         "o_custkey",
         F.col("o_orderpriority").alias("current_priority"),
@@ -1018,31 +944,19 @@ def stream_events_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"events table at {sf_dir} is empty — the late-data probe needs "
             "a real corpus to anchor its watermark carrier and probe rows"
         )
-    staging = scratch_dir("spark_graft_late_")
-    try:
-        _stage_file(ev, staging, "00_main.parquet", 1_000_000_000)
-        # Watermark carrier: event time = corpus max, so it advances nothing
-        # and its window (end > final watermark by construction) is never
-        # emitted in append mode — sink content is unaffected.
-        carrier = spark.createDataFrame(
-            [(-2, max_ts, -2, "wm_carrier", 0.0)], schema=ev.schema
-        )
-        _stage_file(carrier, staging, "01_carrier.parquet", 1_000_000_100)
-        late = spark.createDataFrame(
-            [(-1, min_ts, -1, "late_probe", 0.0)],
-            schema=ev.schema,
-        )
-        _stage_file(late, staging, "02_late.parquet", 1_000_000_200)
-
-        schema = read_parquet(spark, os.path.join(staging, "00_main.parquet")).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(staging)
-        )
+    # Watermark carrier: event time = corpus max, so it advances nothing and
+    # its window (end > final watermark by construction) is never emitted
+    # in append mode — sink content is unaffected.
+    carrier = spark.createDataFrame(
+        [(-2, max_ts, -2, "wm_carrier", 0.0)], schema=ev.schema
+    )
+    late = spark.createDataFrame(
+        [(-1, min_ts, -1, "late_probe", 0.0)], schema=ev.schema
+    )
+    with staged_stream(spark, [ev, carrier, late]) as source:
         agg = (
-            stream.withWatermark("ts", LATE_DELAY)
+            source()
+            .withWatermark("ts", LATE_DELAY)
             .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
             .agg(F.count("*").alias("n_events"))
             .select(
@@ -1050,5 +964,3 @@ def stream_events_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return _drain(spark, agg, mode="append", expect_input_batches=3)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)

@@ -21,6 +21,7 @@ import os
 import stat
 import threading
 from collections import OrderedDict
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -224,6 +225,30 @@ def clear_bucketed_overrides() -> None:
     _BUCKETED_OVERRIDES.clear()
 
 
+def events_with_ltz_ts(
+    spark: SparkSession, open_events: Callable[[], DataFrame]
+) -> DataFrame:
+    """Open the events table with ``open_events`` (a batch or a streaming
+    read) and normalize its ``ts`` to TIMESTAMP (LTZ).
+
+    events.ts has shipped as parquet TIMESTAMP(NANOS) (no Spark type — read
+    raw int64 nanos via the legacy conf, set before ``open_events`` runs, and
+    divide to micros) and, since the 2026-08 regeneration, as plain
+    timestamp[us] with no timezone (reads as TIMESTAMP_NTZ). With the session
+    timezone pinned to UTC the NTZ→LTZ cast is wall-clock-identity and
+    matches DuckDB's naive read exactly."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = open_events()
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn(
+            "ts", F.timestamp_micros(F.expr("CAST(ts DIV 1000 AS BIGINT)"))
+        )
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
@@ -231,22 +256,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if override is not None:
         return spark.table(override)
     if name == "events":
-        # events.ts has shipped as parquet TIMESTAMP(NANOS) (no Spark type —
-        # read raw int64 nanos via the legacy conf and divide to micros) and,
-        # since the 2026-08 regeneration, as plain timestamp[us] with no
-        # timezone (reads as TIMESTAMP_NTZ). Normalize both to TIMESTAMP
-        # (LTZ): with the session timezone pinned to UTC the NTZ→LTZ cast is
-        # wall-clock-identity and matches DuckDB's naive read exactly.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = read_parquet(spark, table_path(sf_dir, name))
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("CAST(ts DIV 1000 AS BIGINT)"))
-            )
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        return events_with_ltz_ts(
+            spark, lambda: read_parquet(spark, table_path(sf_dir, name))
+        )
     return read_parquet(spark, table_path(sf_dir, name))
 
 

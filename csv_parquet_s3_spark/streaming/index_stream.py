@@ -1,15 +1,16 @@
-"""Streaming maintenance of the materialized ANN index.
+"""Streaming maintenance of the materialized ANN and BM25 indexes.
 
-At 100 TB embeddings arrive continuously (new documents → new vectors); the
-IVF index must absorb them at batch cost without a rebuild. This wires the
-incremental path (:mod:`..operators.similarity_index`) to Structured
-Streaming via ``foreachBatch``: each micro-batch is assigned against the
-STORED quantizer and MERGE-d into the inverted lists — the same
-upsert-by-key idempotence discipline as :func:`..streaming.ingest_stream.
-stream_upsert_parquet`, so checkpoint replays cannot duplicate vectors.
+At 100 TB embeddings and documents arrive continuously; each index must
+absorb them at batch cost without a rebuild. Both entries run the
+incremental path (:mod:`..operators.similarity_index`,
+:mod:`..operators.retrieval`) per micro-batch through
+:func:`..streaming.microbatch.run_each_batch`: each batch is MERGE-d into the
+stored index by key — the same upsert-by-key idempotence discipline as
+:func:`..streaming.ingest_stream.stream_upsert_parquet`, so checkpoint
+replays cannot duplicate rows.
 
-Search (`topk_from_index`) sees every drained batch immediately; quantizer
-retraining remains an offline rebuild, as in any IVF system.
+Search sees every drained batch immediately; IVF quantizer retraining
+remains an offline rebuild, as in any IVF system.
 """
 
 from __future__ import annotations
@@ -17,33 +18,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from csv_parquet_s3_spark.operators.similarity_index import update_ivf_index
-from csv_parquet_s3_spark.plans.materialize import released_after
+from csv_parquet_s3_spark.streaming.microbatch import run_each_batch
 
 
 def stream_update_ivf_index(vectors: DataFrame, index_path: str, checkpoint: str):
     """Start a streaming query that MERGEs each micro-batch of vectors
-    (vec_id, embedding, ...) into the stored IVF index. Returns the
-    StreamingQuery; callers pick the trigger via ``.trigger`` upstream or
-    drain with availableNow semantics from the returned query.
-
-    Each batch's merge is bracketed by ``released_after``: the update path
-    localCheckpoints its batch-bounded pre-reads (RDD-level persists the
-    SQL CacheManager never frees), and a STANDING maintenance stream runs
-    for weeks — without per-batch release, block-manager storage grows by
-    one batch's pins per trigger, forever (soak-pinned in
-    tests/test_streaming_soak.py)."""
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with released_after(batch_df.sparkSession):
-            update_ivf_index(batch_df.sparkSession, batch_df, index_path)
-
-    return (
-        vectors.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    (vec_id, embedding, ...) into the stored IVF index, assigned against the
+    STORED quantizer. Returns the StreamingQuery (availableNow)."""
+    return run_each_batch(
+        vectors,
+        lambda batch: update_ivf_index(batch.sparkSession, batch, index_path),
+        checkpoint,
     )
 
 
@@ -52,21 +37,13 @@ def stream_update_bm25_index(docs: DataFrame, index_path: str, checkpoint: str):
     of documents (doc_id, text, ...) is tokenized at batch cost and
     MERGE-d into the stored index (`operators.retrieval.update_bm25_index`
     — upsert keyed by doc_id, so checkpoint replays cannot duplicate a
-    document's tf rows; the idempotence discipline shared with the IVF
-    twin above). Collection statistics (df, avgdl) refresh per batch from
-    the merged index — index-sized work, deferrable to a compaction
+    document's tf rows). Collection statistics (df, avgdl) refresh per batch
+    from the merged index — index-sized work, deferrable to a compaction
     cadence at a real deployment. Returns the StreamingQuery."""
     from csv_parquet_s3_spark.operators.retrieval import update_bm25_index
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with released_after(batch_df.sparkSession):
-            update_bm25_index(batch_df.sparkSession, batch_df, index_path)
-
-    return (
-        docs.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return run_each_batch(
+        docs,
+        lambda batch: update_bm25_index(batch.sparkSession, batch, index_path),
+        checkpoint,
     )

@@ -18,6 +18,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from csv_parquet_s3_spark.ingest import parse_column
 from csv_parquet_s3_spark.schema import FieldSpec, raw_struct_type
+from csv_parquet_s3_spark.streaming.microbatch import run_each_batch
 
 
 def stream_parse_csv(
@@ -82,15 +83,13 @@ def stream_upsert_parquet(
     at-least-once delivery. The target must exist (bootstrap with an empty
     write) because plain parquet has no create-on-merge.
     """
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
     from csv_parquet_s3_spark.maintenance import upsert
 
-    def merge_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def merge_batch(batch_df) -> None:
         # within one batch, last-write-wins per key before merging
-        from pyspark.sql import Window as W
-        from pyspark.sql import functions as F
-
         deduped = (
             batch_df.withColumn(
                 "_rn",
@@ -103,9 +102,4 @@ def stream_upsert_parquet(
         )
         upsert(batch_df.sparkSession, target_path, deduped, key=key)
 
-    return (
-        source_df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_each_batch(source_df, merge_batch, checkpoint)

@@ -103,93 +103,3 @@ def user_lifetime_totals(
         )
     )
 
-
-def user_lifetime_totals_tws(
-    events: DataFrame, ttl_ms: int | None = None
-) -> DataFrame:
-    """The same per-user spend monitor on Spark 4's modern stateful API
-    (``transformWithStateInPandas`` + ``StatefulProcessor``): typed
-    ``ValueState`` with an optional declarative TTL instead of hand-rolled
-    timeout handling, and a state schema that can evolve independently of
-    the output schema. Requires the RocksDB state store provider (set by
-    the caller's session; tests set it per-query).
-
-    GATED: the API's Python state server speaks protobuf, and this container
-    ships no ``protobuf`` package (and installs are pinned), so the
-    streaming path raises a clear error here; on a real cluster (protobuf is
-    a standard pyspark extra) it runs as written. The batch fallback and the
-    ``applyInPandasWithState`` twin (:func:`user_lifetime_totals`) cover the
-    semantics in tests either way.
-
-    Output is identical to :func:`user_lifetime_totals` — the test suite
-    pins the two APIs equal on the same input stream when protobuf exists.
-    """
-    if not events.isStreaming:
-        from pyspark.sql import functions as F
-
-        return events.groupBy("user_id").agg(
-            F.count("*").alias("lifetime_events"),
-            F.round(F.sum("value"), 2).alias("lifetime_value"),
-        )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - container has no protobuf
-        raise RuntimeError(
-            "transformWithStateInPandas needs the protobuf package for its "
-            "Python state server; install pyspark's protobuf dependency on "
-            "the cluster (this container pins installs, so use "
-            "user_lifetime_totals, the applyInPandasWithState twin)"
-        ) from exc
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    ttl = ttl_ms
-
-    class SpendMonitor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            import pyspark.sql.types as T
-
-            schema = T.StructType(
-                [
-                    T.StructField("n", T.LongType(), False),
-                    T.StructField("total", T.DoubleType(), False),
-                ]
-            )
-            self._totals = handle.getValueState("totals", schema, ttl)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            (user_id,) = key
-            n, total = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, round(total, 2)))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "lifetime_events": [n],
-                    "lifetime_value": [round(total, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            SpendMonitor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            # Spark only honours state TTL in ProcessingTime mode; with
-            # timeMode="None" a non-None ttl raises at runtime.
-            timeMode="ProcessingTime" if ttl_ms is not None else "None",
-        )
-    )

@@ -121,85 +121,3 @@ def test_idle_timeout_evicts_state(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-
-def test_transform_with_state_matches_apply_in_pandas_with_state(spark, tmp_path):
-    """Spark 4 modern stateful API (transformWithStateInPandas) must produce
-    the same lifetime totals as the applyInPandasWithState formulation.
-    Skipped where protobuf (the API's state-server dependency) is absent —
-    the batch-fallback equivalence below still runs everywhere."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from csv_parquet_s3_spark.streaming.stateful import user_lifetime_totals_tws
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = str(tmp_path / "tws_src")
-        _write_batch(spark, src, [(1, 10.0), (1, 5.0), (2, 1.0)])
-        _write_batch(spark, src, [(1, 2.5), (3, 7.0)])
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            user_lifetime_totals_tws(stream)
-            .writeStream.format("memory")
-            .queryName("tws")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = spark.sql(
-            "SELECT * FROM tws QUALIFY ROW_NUMBER() OVER "
-            "(PARTITION BY user_id ORDER BY lifetime_events DESC) = 1"
-        ).collect()
-        got = {r.user_id: (r.lifetime_events, r.lifetime_value) for r in rows}
-        assert got == {1: (3, 17.5), 2: (1, 1.0), 3: (1, 7.0)}
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-
-
-@pytest.mark.slow
-def test_tws_batch_fallback_and_gating(spark, tmp_path):
-    """Runs everywhere: the batch fallback of the modern-API operator equals
-    the applyInPandasWithState operator's batch fallback, and the streaming
-    path fails with a clear dependency error when protobuf is absent."""
-    from csv_parquet_s3_spark.streaming.stateful import user_lifetime_totals_tws
-
-    batch = spark.createDataFrame(
-        [(1, 10.0), (1, 5.0), (2, 1.0)], "user_id bigint, value double"
-    )
-    a = {(r.user_id, r.lifetime_events, r.lifetime_value)
-         for r in user_lifetime_totals(batch).collect()}
-    b = {(r.user_id, r.lifetime_events, r.lifetime_value)
-         for r in user_lifetime_totals_tws(batch).collect()}
-    assert a == b == {(1, 2, 15.0), (2, 1, 1.0)}
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        import pytest
-
-        src = str(tmp_path / "gate_src")
-        _write_batch(spark, src, [(1, 1.0)])
-        schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(schema).parquet(src)
-        with pytest.raises(RuntimeError, match="protobuf"):
-            user_lifetime_totals_tws(stream)

@@ -9,16 +9,13 @@ under soak. These tests drive TEN micro-batches through each maintenance
 stream and assert BOTH:
 
 1. bounded storage — the persisted-RDD set after the drain equals the set
-   before it (the ``released_after`` bracket in streaming/index_stream.py
+   before it (the ``released_after`` bracket in streaming/microbatch.py
    releases each batch's pins as its merge completes);
 2. maintenance ≡ full build — the index that absorbed ten batches serves
    exactly what a fresh full-corpus build serves.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 import pytest
 from pyspark.sql import DataFrame
@@ -32,43 +29,15 @@ pytestmark = pytest.mark.slow
 N_BATCHES = 10
 
 
-def _mkdirs(tmp_path, *names: str) -> list[str]:
-    """Empty directories under pytest's per-test ``tmp_path``."""
-    dirs = [tmp_path / n for n in names]
-    for d in dirs:
-        d.mkdir()
-    return [str(d) for d in dirs]
+def _drain_in_batches(spark, parts: list[DataFrame], start_stream) -> int:
+    """Stream ``parts`` one file per micro-batch (``staged_stream``) into
+    ``start_stream`` and return how many micro-batches consumed rows."""
+    from csv_parquet_s3_spark.operators.streaming_batch import staged_stream
+    from csv_parquet_s3_spark.streaming.microbatch import await_stream
 
-
-def _stage_files(staging: str, parts: list[DataFrame]) -> None:
-    """Write each frame as one parquet file with increasing mtimes so
-    maxFilesPerTrigger=1 yields one deterministic micro-batch per file."""
-    for i, df in enumerate(parts):
-        tmp = os.path.join(staging, f"_{i:02d}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dst = os.path.join(staging, f"{i:02d}_batch.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        shutil.rmtree(tmp)
-        mtime = 1_000_000_000 + i * 100
-        os.utime(dst, (mtime, mtime))
-
-
-def _drain_in_batches(spark, staging: str, ckpt: str, start_stream) -> int:
-    schema = spark.read.parquet(
-        os.path.join(staging, "00_batch.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(staging)
-    )
-    q = start_stream(stream)
-    assert q.awaitTermination(600), "maintenance stream did not finish"
+    with staged_stream(spark, parts) as source:
+        q = start_stream(source())
+        await_stream(q, "maintenance", timeout_s=600)
     return sum(1 for pr in q.recentProgress if pr["numInputRows"] > 0)
 
 
@@ -101,21 +70,17 @@ def test_ivf_maintenance_ten_batches_bounded_storage(spark, tmp_path):
     full_idx = str(tmp_path / "ivf_full")
     build_ivf_index(spark, emb, _SEEDS, full_idx)
 
-    staging, ckpt = _mkdirs(tmp_path, "src", "ckpt")
+    ckpt = str(tmp_path / "ckpt")
     late = emb.filter(tail)
-    _stage_files(
-        staging,
-        [
-            late.filter((F.col("vec_id") % 20) == (2 * i + 1))
-            for i in range(N_BATCHES)
-        ],
-    )
+    parts = [
+        late.filter((F.col("vec_id") % 20) == (2 * i + 1))
+        for i in range(N_BATCHES)
+    ]
 
     release_persistents(spark)  # drain other tests' leftovers
     before = persistent_rdd_ids(spark)
     n = _drain_in_batches(
-        spark, staging, ckpt,
-        lambda s: stream_update_ivf_index(s, idx, ckpt),
+        spark, parts, lambda s: stream_update_ivf_index(s, idx, ckpt)
     )
     assert n == N_BATCHES, f"expected {N_BATCHES} micro-batches, saw {n}"
     leaked = persistent_rdd_ids(spark) - before
@@ -150,21 +115,17 @@ def test_bm25_maintenance_ten_batches_bounded_storage(spark, tmp_path):
     full_idx = str(tmp_path / "bm25_full")
     build_bm25_index(spark, docs, full_idx)
 
-    staging, ckpt = _mkdirs(tmp_path, "src", "ckpt")
+    ckpt = str(tmp_path / "ckpt")
     odd = docs.filter(F.col("doc_id") % 2 == 1)
-    _stage_files(
-        staging,
-        [
-            odd.filter((F.col("doc_id") % 20) == (2 * i + 1))
-            for i in range(N_BATCHES)
-        ],
-    )
+    parts = [
+        odd.filter((F.col("doc_id") % 20) == (2 * i + 1))
+        for i in range(N_BATCHES)
+    ]
 
     release_persistents(spark)
     before = persistent_rdd_ids(spark)
     n = _drain_in_batches(
-        spark, staging, ckpt,
-        lambda s: stream_update_bm25_index(s, idx, ckpt),
+        spark, parts, lambda s: stream_update_bm25_index(s, idx, ckpt)
     )
     assert n == N_BATCHES, f"expected {N_BATCHES} micro-batches, saw {n}"
     leaked = persistent_rdd_ids(spark) - before
@@ -200,6 +161,7 @@ def test_concurrent_maintenance_streams_do_not_release_each_other(
         _serve_plain_ivf,
         build_ivf_index,
     )
+    from csv_parquet_s3_spark.operators.streaming_batch import staged_stream
     from csv_parquet_s3_spark.plans.materialize import (
         persistent_rdd_ids,
         release_persistents,
@@ -209,6 +171,7 @@ def test_concurrent_maintenance_streams_do_not_release_each_other(
         stream_update_bm25_index,
         stream_update_ivf_index,
     )
+    from csv_parquet_s3_spark.streaming.microbatch import await_stream
 
     n_batches = 6
     emb = load_table(spark, SF_SMOKE, "embeddings")
@@ -225,49 +188,28 @@ def test_concurrent_maintenance_streams_do_not_release_each_other(
     bm25_full = str(tmp_path / "bm25_full")
     build_bm25_index(spark, docs, bm25_full)
 
-    ivf_src, ivf_ckpt, bm25_src, bm25_ckpt = _mkdirs(
-        tmp_path, "ivf_src", "ivf_ckpt", "bm25_src", "bm25_ckpt"
-    )
     late = emb.filter(tail)
-    _stage_files(
-        ivf_src,
-        [
-            late.filter((F.col("vec_id") % 12) == (2 * i + 1))
-            for i in range(n_batches)
-        ],
-    )
     odd = docs.filter(F.col("doc_id") % 2 == 1)
-    _stage_files(
-        bm25_src,
-        [
-            odd.filter((F.col("doc_id") % 12) == (2 * i + 1))
-            for i in range(n_batches)
-        ],
-    )
 
     release_persistents(spark)
     before = persistent_rdd_ids(spark)
 
-    def file_stream(staging: str):
-        schema = spark.read.parquet(
-            os.path.join(staging, "00_batch.parquet")
-        ).schema
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(staging)
-        )
-
     # start BOTH, then await both — the drains interleave
-    q_ivf = stream_update_ivf_index(
-        file_stream(ivf_src), ivf_idx, ivf_ckpt
-    )
-    q_bm25 = stream_update_bm25_index(
-        file_stream(bm25_src), bm25_idx, bm25_ckpt
-    )
-    assert q_ivf.awaitTermination(900), "ivf stream did not finish"
-    assert q_bm25.awaitTermination(900), "bm25 stream did not finish"
+    with staged_stream(
+        spark,
+        [late.filter((F.col("vec_id") % 12) == (2 * i + 1)) for i in range(n_batches)],
+    ) as ivf_src, staged_stream(
+        spark,
+        [odd.filter((F.col("doc_id") % 12) == (2 * i + 1)) for i in range(n_batches)],
+    ) as bm25_src:
+        q_ivf = stream_update_ivf_index(
+            ivf_src(), ivf_idx, str(tmp_path / "ivf_ckpt")
+        )
+        q_bm25 = stream_update_bm25_index(
+            bm25_src(), bm25_idx, str(tmp_path / "bm25_ckpt")
+        )
+        await_stream(q_ivf, "ivf", timeout_s=900)
+        await_stream(q_bm25, "bm25", timeout_s=900)
     for q, want in ((q_ivf, n_batches), (q_bm25, n_batches)):
         n = sum(1 for pr in q.recentProgress if pr["numInputRows"] > 0)
         assert n == want, f"expected {want} micro-batches, saw {n}"

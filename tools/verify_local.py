@@ -70,6 +70,8 @@ def main(argv: list[str]) -> int:
         SparkSession.builder.master("local[8]")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # console-only: keeps [Stage N] bars out of the OK/MISMATCH lines
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
