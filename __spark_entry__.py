@@ -45,15 +45,24 @@ def entry(spark: SparkSession) -> DataFrame:
 # listed first: the rotation output PLUS re-pins at the head for the
 # queries the latest change touched.
 VERIFY_PRIORITY: list[str] = [
-    # RE-PINS FIRST — the seven stream_* queries whose micro-batch
-    # sequencing now runs through the one staged source, foreachBatch
-    # runner and await (operators/streaming_batch.py, streaming/microbatch.py),
-    # and retrieval_bm25_compacted, whose sorted compaction now goes through
-    # maintenance._clustered_rewrite. Then the verbatim tools/rotate_window.py
-    # output against CORRECTNESS_r13 in its printed order. The seven
-    # displaced tail entries (sketch_countmin_user_counts, q_open_orders_daily,
-    # q_table_content_digest, q_fk_orphan_audit, q_segment_user_bitmap_distinct,
-    # q_segment_bitmap_overlap, dedup_sorted_neighborhood_pairs) are hash-green.
+    # RE-PINS FIRST — the two BPE queries (merges now learned by one fold
+    # over a one-row word table), the kn LM (type count read off the
+    # continuation counts), the four stored-index BM25 queries and the
+    # streamed index maintenance (doc_tf written one file per core, layout
+    # 5). Then the previous window in its order: the other stream_*
+    # re-pins of the one micro-batch harness (whose drain now drops its
+    # sink view) and the tools/rotate_window.py output against
+    # CORRECTNESS_r13. The six displaced tail entries
+    # (sim_cosine_topk_ivf_pq_from_index, sim_cosine_topk_ivf_pq_refine,
+    # sim_cosine_topk_ivf_incremental, pii_redact_customers,
+    # text_bpe_token_stats, q_approx_sketches) are hash-green.
+    "text_bpe_learn_merges",
+    "text_bpe_apply_merges",
+    "text_bigram_kn_perplexity",
+    "retrieval_bm25_from_index",
+    "retrieval_bm25_incremental",
+    "retrieval_bm25_after_delete",
+    "retrieval_bm25_compacted",
     "stream_bm25_index_maintenance",
     "stream_ivf_index_maintenance",
     "stream_click_purchase_left_outer",
@@ -61,7 +70,6 @@ VERIFY_PRIORITY: list[str] = [
     "stream_click_purchase_full_outer",
     "stream_events_late_data_drop",
     "stream_scd1_upsert_priority",
-    "retrieval_bm25_compacted",
     "dedup_minhash_incremental",
     "mm_byte_histogram_features",
     "q_events_sessionize",
@@ -98,12 +106,6 @@ VERIFY_PRIORITY: list[str] = [
     "q_events_error_spikes",
     "q_snapshot_diff_orders",
     "sim_cosine_topk_ivf_trained",
-    "sim_cosine_topk_ivf_pq_from_index",
-    "sim_cosine_topk_ivf_pq_refine",
-    "sim_cosine_topk_ivf_incremental",
-    "pii_redact_customers",
-    "text_bpe_token_stats",
-    "q_approx_sketches",
 ]
 
 

@@ -28,6 +28,7 @@ import tempfile
 import threading
 import uuid
 from collections.abc import Iterator
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,6 +48,16 @@ def dataset_bytes(path: str) -> int:
             if f.endswith(".parquet") and not f.startswith("."):
                 total += os.path.getsize(os.path.join(root, f))
     return total
+
+
+def input_bytes(df: DataFrame) -> int:
+    """Total bytes of the local files ``df`` reads (``DataFrame.inputFiles``,
+    no Spark job). Files on other filesystems count 0, as in
+    :func:`dataset_bytes`."""
+    paths = [urlparse(f) for f in df.inputFiles()]
+    return sum(
+        os.path.getsize(unquote(u.path)) for u in paths if u.scheme in ("", "file")
+    )
 
 
 def parquet_file_count(path: str) -> int:
@@ -358,15 +369,15 @@ def compact(
     df: DataFrame = read_parquet(spark, path)
     if sort_by:
         return _clustered_rewrite(df, path, sort_by, target_file_bytes, "._compact-")
-    n_files = _file_target(path, target_file_bytes)
+    n_files = _file_target(dataset_bytes(path), target_file_bytes)
     df = df.coalesce(n_files) if n_files < df.rdd.getNumPartitions() else df.repartition(n_files)
     _staged_overwrite(df, path, "._compact-")
     return parquet_file_count(path)
 
 
-def _file_target(path: str, target_file_bytes: int) -> int:
-    """``ceil(bytes/target)`` output files for the dataset at ``path``."""
-    return max(1, -(-dataset_bytes(path) // target_file_bytes))
+def _file_target(nbytes: int, target_file_bytes: int, min_files: int = 1) -> int:
+    """``ceil(nbytes/target)`` output files, and at least ``min_files``."""
+    return max(min_files, -(-nbytes // target_file_bytes))
 
 
 def _clustered_rewrite(
@@ -382,7 +393,7 @@ def _clustered_rewrite(
     columns ``drop``. Every output file then covers a narrow range of
     ``by``, so footer min/max stats prune scans. Returns the new file
     count."""
-    n_files = _file_target(path, target_file_bytes)
+    n_files = _file_target(dataset_bytes(path), target_file_bytes)
     df = df.repartitionByRange(n_files, *[F.col(c) for c in by])
     _staged_overwrite(df.sortWithinPartitions(*by).drop(*drop), path, marker)
     return parquet_file_count(path)

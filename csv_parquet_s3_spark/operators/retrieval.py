@@ -22,9 +22,13 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from csv_parquet_s3_spark.maintenance import (
+    DEFAULT_TARGET_FILE_BYTES,
+    _file_target,
     _staged_overwrite,
     compact,
+    dataset_bytes,
     ensure_published,
+    input_bytes,
     scratch_dir,
     upsert,
 )
@@ -469,30 +473,47 @@ def _bm25_stats(dl: DataFrame) -> DataFrame:
     )
 
 
+def _doc_tf_clustered(
+    spark: SparkSession, doc_tf: DataFrame, nbytes: int
+) -> DataFrame:
+    """``doc_tf`` (about ``nbytes``) as layout 5 stores it: range-partitioned
+    on doc_id into one file per 128 MiB and at least one per core, each
+    sorted on (doc_id, token). Every file covers a disjoint doc_id range,
+    so the serving probe is pruned by footer min/max stats, and the scoring
+    scan runs ``defaultParallelism`` tasks however small the index is.
+    Build and compaction share it."""
+    n_files = _file_target(
+        nbytes, DEFAULT_TARGET_FILE_BYTES, spark.sparkContext.defaultParallelism
+    )
+    return doc_tf.repartitionByRange(n_files, "doc_id").sortWithinPartitions(
+        "doc_id", "token"
+    )
+
+
 def build_bm25_index(spark: SparkSession, docs: DataFrame, index_path: str) -> None:
     """Full build: the four BM25 tables as parquet under ``index_path``.
 
-    ``doc_tf`` is the big one (distinct (doc,token) pairs); it is written
-    RANGE-SORTED BY doc_id so the serving plan's bounded query-doc probe
+    ``doc_tf`` is the big one (distinct (doc,token) pairs). Layout 5 writes
+    it RANGE-PARTITIONED BY doc_id (:func:`_doc_tf_clustered`, files sized
+    from the bytes ``docs`` reads): each file covers a disjoint doc_id
+    range, so the serving plan's bounded query-doc probe
     (``doc_id < N_QUERIES``) is file/row-group-pruned by parquet min/max
-    stats instead of re-scanning the whole index — the scoring pass is the
-    only full read. Layout 4 DENORMALIZES the document length onto every
-    ``doc_tf`` row (one extra int column in the big table, paid once at
-    build): at 100 TB the per-doc ``dl`` table is corpus-sized, so joining
-    it at serve time was the one non-broadcast shuffle left in the serving
-    plan — storing dl in place removes it entirely. The normalized ``dl``
-    table (|docs| rows) is still written: maintenance pre-reads and the
-    stats re-aggregate want the per-doc view. ``df`` is vocabulary-sized,
-    ``stats`` is one row."""
+    stats, and the scoring pass — the only full read — runs one task per
+    file, at least one per core, instead of one task over the whole index.
+    Layout 4 DENORMALIZED the document length onto every ``doc_tf`` row
+    (one extra int column in the big table, paid once at build): at 100 TB
+    the per-doc ``dl`` table is corpus-sized, so joining it at serve time
+    was the one non-broadcast shuffle left in the serving plan — storing dl
+    in place removes it entirely. The normalized ``dl`` table (|docs| rows)
+    is still written: maintenance pre-reads and the stats re-aggregate want
+    the per-doc view. ``df`` is vocabulary-sized, ``stats`` is one row."""
     doc_tf = _bm25_doc_tf(docs).transform(materialize)
     dl = doc_tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).transform(materialize)
-    (
-        doc_tf.join(dl, "doc_id")  # build-time cost; serve never joins dl
-        .repartitionByRange("doc_id")
-        .sortWithinPartitions("doc_id", "token")
-        .write.mode("overwrite")
-        .parquet(f"{index_path}/doc_tf")
-    )
+    _doc_tf_clustered(
+        spark,
+        doc_tf.join(dl, "doc_id"),  # build-time cost; serve never joins dl
+        input_bytes(docs),
+    ).write.mode("overwrite").parquet(f"{index_path}/doc_tf")
     dl.write.mode("overwrite").parquet(f"{index_path}/dl")
     doc_tf.groupBy("token").agg(F.count("*").alias("df")).write.mode(
         "overwrite"
@@ -528,11 +549,13 @@ def ensure_bm25_index(spark: SparkSession, sf_dir: str) -> str:
     gap)."""
     from csv_parquet_s3_spark.operators.minhash_index import _documents_fingerprint
 
-    # layout version 4: doc_tf carries a denormalized dl column (serving
-    # drops the per-doc join — the plan's one corpus-sized shuffle at
-    # scale); 3 added the doc_id range sort (probe pruning) and exact
-    # sum_dl stats — a bump forces older-layout indexes to rebuild
-    fp = {**_documents_fingerprint(sf_dir), "bm25_layout": 4}
+    # layout version 5: doc_tf is range-partitioned on doc_id into at
+    # least one file per core (the scoring scan runs one task per core);
+    # 4 denormalized dl onto doc_tf (serving drops the per-doc join — the
+    # plan's one corpus-sized shuffle at scale); 3 added the doc_id range
+    # sort (probe pruning) and exact sum_dl stats — a bump forces
+    # older-layout indexes to rebuild
+    fp = {**_documents_fingerprint(sf_dir), "bm25_layout": 5}
     return ensure_published(
         _bm25_index_root(sf_dir),
         fp,
@@ -556,12 +579,12 @@ def _bm25_stats_scalars(spark: SparkSession, index_path: str) -> tuple[int, floa
 
 def _bm25_serve_from(spark: SparkSession, index_path: str) -> DataFrame:
     """The serving plan over a stored index root: probe the stored tables,
-    never the corpus. Layout 4 shape: ``doc_tf`` rows carry their doc's
+    never the corpus. Layout 5 shape: ``doc_tf`` rows carry their doc's
     ``dl`` (no per-doc join — at 100 TB that join was the plan's one
     corpus-sized shuffle) and the collection statistics fold in as
     literals (no stats scan, no cross-join) — the scoring pass reads
-    doc_tf once, probes it once for query terms, and broadcast-joins the
-    vocabulary-sized df table."""
+    doc_tf once, one task per file, probes it once for query terms, and
+    broadcast-joins the vocabulary-sized df table."""
     doc_tf = read_parquet(spark, f"{index_path}/doc_tf")
     if "dl" not in doc_tf.columns:
         raise ValueError(
@@ -863,10 +886,11 @@ def compact_bm25_index(spark: SparkSession, index_path: str) -> None:
     """Post-merge compaction: restore the build-time physical layout and
     the exactly-recomputed statistics that incremental merges chip away at.
 
-    - ``doc_tf`` / ``dl`` rewrite range-sorted by doc_id
-      (`maintenance.compact`), so every output file covers a disjoint
-      doc_id range and the serving probe (``doc_id < N_QUERIES``) is
-      file/row-group-pruned again;
+    - ``doc_tf`` / ``dl`` rewrite range-sorted by doc_id, so every output
+      file covers a disjoint doc_id range and the serving probe
+      (``doc_id < N_QUERIES``) is file/row-group-pruned again; ``doc_tf``
+      gets the build's :func:`_doc_tf_clustered` layout back, one scoring
+      task per core at least;
     - ``df`` / ``stats`` are refreshed by a FULL exact re-aggregate of the
       compacted index — the compaction cadence is where the exact rebuild
       belongs; per-batch updates stay monoidal deltas;
@@ -877,7 +901,12 @@ def compact_bm25_index(spark: SparkSession, index_path: str) -> None:
     update path; readers of a served index never see a partial table."""
     import os
 
-    compact(spark, f"{index_path}/doc_tf", sort_by=["doc_id", "token"])
+    path = f"{index_path}/doc_tf"
+    _staged_overwrite(
+        _doc_tf_clustered(spark, read_parquet(spark, path), dataset_bytes(path)),
+        path,
+        "._compact-",
+    )
     compact(spark, f"{index_path}/dl", sort_by=["doc_id"])
     doc_tf = read_parquet(spark, f"{index_path}/doc_tf")
     _staged_overwrite(

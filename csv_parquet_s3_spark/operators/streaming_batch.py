@@ -110,7 +110,11 @@ def _drain(
 
     ``expect_input_batches`` is checked by :func:`await_stream` (the
     late-data probe needs its rows in 3 separate batches so the SPARK-40925
-    one-batch-lag watermark filter engages)."""
+    one-batch-lag watermark filter engages).
+
+    The sink's temp view is dropped once the frame is resolved: the frame
+    keeps the sink's rows, the session's catalog does not, so a session
+    that drains many streams holds only the rows its live frames use."""
     name = "stream_drain_" + uuid.uuid4().hex
     q = (
         df.writeStream.format("memory")
@@ -134,7 +138,9 @@ def _drain(
             rec.append(analyze_simple(q._jsq.explainInternal(False)))
         except Exception:  # audit-only telemetry; never fail the drain
             pass
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 @register(

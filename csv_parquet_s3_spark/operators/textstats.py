@@ -1551,8 +1551,15 @@ def text_bigram_kn_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ctx_nf = bg.groupBy("w1").agg(
         F.sum("c12").alias("c1"), F.count("*").alias("nf")
     )
-    cont = bg.groupBy("w2").agg(F.count("*").alias("np"))
-    types = bg.agg(F.count("*").alias("tt"))
+    # bigram words are never null; the filter states the one the join below
+    # infers, so the join's cont and the type count share one exchange
+    cont = bg.filter(F.col("w2").isNotNull()).groupBy("w2").agg(
+        F.count("*").alias("np")
+    )
+    # every bigram type is counted once in its w2's np, so sum(np) is the
+    # type count: an exact bigint, read off the vocabulary-sized cont
+    # instead of another aggregate pass over bg
+    types = cont.agg(F.sum("np").alias("tt"))
     # The whole LM folds into one vocab²-bounded per-bigram term table;
     # the corpus-sized pass is then a single join + one doc_id fold. The
     # former doc_bg aggregate shuffled the corpus-sized (doc_id, w1, w2)

@@ -23,22 +23,24 @@ a = b an island is a run of a's and both take every other pair from its
 left end. No UDF, no collect; the oracle replays K unrolled rounds of
 identical SQL.
 
-Scale shape: pair counting is the only corpus-proportional step (one keyed
-aggregate per round, map-side combined; at real scale the word-frequency
-table is Zipf-truncated exactly as here). The merge rewrite is a projection
-over the word table, one row per word; the top pair attaches via a one-row
-broadcast, never a collect. Lineage is localCheckpoint-truncated per round
-(house discipline for iterative plans, cf. components.connected_components).
+Scale shape: word counting is the only corpus-proportional step (one keyed
+aggregate, map-side combined; at real scale the word-frequency table is
+Zipf-truncated exactly as here). The top-W words then fit in one row: they
+are collected into one array of (wn, syms), and all K rounds run as one
+`aggregate` fold over `sequence(1, K)` inside that row. Each round sorts the
+frequency-weighted pairs, finds the top pair with one run-length fold, and
+rewrites the word array with the greedy merge fold. No round runs a Spark
+job of its own and none checkpoints; the merge list attaches downstream via
+a one-row broadcast, never a collect.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from csv_parquet_s3_spark.operators.registry import register
 from csv_parquet_s3_spark.sources.tables import load_table
-from csv_parquet_s3_spark.plans.materialize import materialize
 
 BPE_TOP_WORDS = 128  # train on the top-W vocabulary (Zipf truncation)
 BPE_MERGES = 5       # merge rounds to learn
@@ -127,54 +129,107 @@ def _bpe_oracle() -> str:
     return "WITH" + ",".join(blocks) + "\n    " + finals
 
 
-def _chars(word: str) -> Column:
-    """The word column as an array of one-character symbols."""
-    return F.expr(
-        f"transform(sequence(1, length({word})), i -> substr({word}, i, 1))"
+def _chars(word: str) -> str:
+    """SQL: the word column as an array of one-character symbols."""
+    return f"transform(sequence(1, length({word})), i -> substr({word}, i, 1))"
+
+
+# The folds below are SQL text, parsed once by F.expr: built with the Column
+# API, every sub-expression is a driver-to-JVM round trip, about 2,800 of
+# them per text_bpe_apply_merges build (0.6 s of its 0.8 s on 4 cores). Each
+# fold names its lambda variables apart from the others', so nested folds
+# never shadow a variable their bodies read.
+
+
+def _merge_pair(syms: str, a: str, b: str) -> str:
+    """SQL: ``syms`` with every (a, b) pair merged greedily, left to right,
+    without overlap: a fold whose state is the output so far plus the one
+    pending symbol ``prev``; a pending ``a`` followed by ``b`` emits
+    ``a||b``."""
+    flush = "IF(mp.prev IS NULL, mp.out, concat(mp.out, array(mp.prev)))"
+    return f"""aggregate({syms},
+        named_struct('out', CAST(array() AS array<string>),
+                     'prev', CAST(NULL AS string)),
+        (mp, mx) -> IF(mp.prev = {a} AND mx = {b},
+            named_struct('out', concat(mp.out, array(concat({a}, {b}))),
+                         'prev', CAST(NULL AS string)),
+            named_struct('out', {flush}, 'prev', mx)),
+        mp -> {flush})"""
+
+
+def _top_pair(tbl: str) -> str:
+    """SQL: the most frequent adjacent symbol pair over the word table
+    ``tbl`` (an array of (wn, syms)), weighted by word frequency: a struct
+    (a, b, cnt), ties broken on (a, b); ``a`` is null when no word has two
+    symbols. The flattened pairs are sorted, so equal pairs form runs and
+    come in (a, b) order: one fold sums each run and keeps a run only if it
+    beats the best so far, so the first of equal counts wins."""
+    pairs = f"""flatten(transform({tbl}, tw -> filter(
+        zip_with(tw.syms, slice(tw.syms, 2, size(tw.syms)),
+                 (pa, pb) -> named_struct('a', pa, 'b', pb, 'wn', tw.wn)),
+        tp -> tp.b IS NOT NULL)))"""
+    none = (
+        "named_struct('a', CAST(NULL AS string), 'b', CAST(NULL AS string),"
+        " 'cnt', CAST(0 AS bigint))"
     )
+    best = "IF(tr.run.cnt > tr.top.cnt, tr.run, tr.top)"
+    return f"""aggregate(array_sort({pairs}),
+        named_struct('top', {none}, 'run', {none}),
+        (tr, tq) -> IF(tr.run.a = tq.a AND tr.run.b = tq.b,
+            named_struct('top', tr.top, 'run', named_struct(
+                'a', tq.a, 'b', tq.b, 'cnt', tr.run.cnt + tq.wn)),
+            named_struct('top', {best}, 'run', named_struct(
+                'a', tq.a, 'b', tq.b, 'cnt', tq.wn))),
+        tr -> {best})"""
 
 
-def _top_pair(s: DataFrame) -> DataFrame:
-    """The most frequent adjacent symbol pair (a, b, cnt) over the word table
-    (wn, syms), weighted by word frequency: a 1-row frame, ties broken on
-    (a, b)."""
-    pairs = F.zip_with(
-        "syms",
-        F.slice("syms", 2, F.size("syms")),
-        lambda x, y: F.struct(x.alias("a"), y.alias("b")),
+_MERGES_TYPE = (
+    "array<struct<merge_rank: int, left_sym: string, right_sym: string,"
+    " pair_count: bigint>>"
+)
+
+
+def _learn(tbl: str) -> str:
+    """SQL: the ranked merge list learned from the word table ``tbl``: all
+    ``BPE_MERGES`` rounds as one fold whose state is the rewritten table and
+    the merges so far. Each round's top pair is computed once, bound to a
+    lambda variable by ``transform(array(top), lt -> ...)[0]``: written
+    inline, the pair expression would be copied into every later round. A
+    round with no pair empties the table, so no later round learns one."""
+    merged = f"""transform(ls.tbl, lw -> named_struct(
+        'wn', lw.wn, 'syms', {_merge_pair("lw.syms", "lt.a", "lt.b")}))"""
+    ranked = (
+        "named_struct('merge_rank', lr, 'left_sym', lt.a, 'right_sym', lt.b,"
+        " 'pair_count', lt.cnt)"
     )
-    return (
-        s.select("wn", F.explode(pairs).alias("p"))
-        .filter(F.col("p.b").isNotNull())
-        .groupBy("p.a", "p.b")
-        .agg(F.sum("wn").alias("cnt"))
-        .orderBy(F.desc("cnt"), "a", "b")
-        .limit(1)
-    )
+    return f"""aggregate(sequence(1, {BPE_MERGES}),
+        named_struct('tbl', {tbl}, 'ms', CAST(array() AS {_MERGES_TYPE})),
+        (ls, lr) -> transform(array({_top_pair("ls.tbl")}), lt -> IF(lt.a IS NULL,
+            named_struct('tbl', filter(ls.tbl, lw -> false), 'ms', ls.ms),
+            named_struct('tbl', {merged}, 'ms', concat(ls.ms, array({ranked})))
+        ))[0],
+        ls -> ls.ms)"""
 
 
-def _merge_pair(syms: Column, a: Column, b: Column) -> Column:
-    """`syms` with every (a, b) pair merged greedily, left to right, without
-    overlap: a fold whose state is the output so far plus the one pending
-    symbol `prev`; a pending `a` followed by `b` emits `a||b`."""
-    none = F.lit(None).cast("string")
-
-    def flush(st: Column) -> Column:
-        return F.when(st["prev"].isNull(), st["out"]).otherwise(
-            F.concat(st["out"], F.array(st["prev"]))
+def _learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row, one column ``ms``: the ranked merges learned from the top
+    ``BPE_TOP_WORDS`` words of the corpus vocabulary."""
+    docs = load_table(spark, sf_dir, "documents")
+    words = (
+        docs.select(
+            F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias(
+                "word"
+            )
         )
-
-    def step(st: Column, x: Column) -> Column:
-        return F.when(
-            (st["prev"] == a) & (x == b),
-            F.struct(
-                F.concat(st["out"], F.array(F.concat(a, b))).alias("out"),
-                none.alias("prev"),
-            ),
-        ).otherwise(F.struct(flush(st).alias("out"), x.alias("prev")))
-
-    start = F.struct(F.array().cast("array<string>").alias("out"), none.alias("prev"))
-    return F.aggregate(syms, start, step, flush)
+        .groupBy("word")
+        .agg(F.count("*").alias("wn"))
+        .orderBy(F.desc("wn"), "word")
+        .limit(BPE_TOP_WORDS)
+    )
+    return words.agg(
+        F.expr(f"collect_list(named_struct('wn', wn, 'syms', {_chars('word')}))")
+        .alias("tbl")
+    ).select(F.expr(_learn("tbl")).alias("ms"))
 
 
 @register("text_bpe_learn_merges", oracle=_bpe_oracle())
@@ -188,37 +243,7 @@ def text_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic on both engines; the oracle unrolls the same {BPE_MERGES}
     rounds as chained CTEs, stating the same greedy merge as island parity.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    words = (
-        docs.select(
-            F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias(
-                "word"
-            )
-        )
-        .groupBy("word")
-        .agg(F.count("*").alias("wn"))
-        .orderBy(F.desc("wn"), "word")
-        .limit(BPE_TOP_WORDS)
-    )
-    s = words.select("wn", _chars("word").alias("syms")).transform(materialize)
-    merges = None
-    for r in range(1, BPE_MERGES + 1):
-        top = _top_pair(s)
-        row = top.select(
-            F.lit(r).alias("merge_rank"),
-            F.col("a").alias("left_sym"),
-            F.col("b").alias("right_sym"),
-            F.col("cnt").cast("bigint").alias("pair_count"),
-        )
-        merges = row if merges is None else merges.unionByName(row)
-        if r < BPE_MERGES:  # the last round's rewrite would have no reader
-            merged = _merge_pair(F.col("syms"), F.col("a"), F.col("b"))
-            s = (
-                s.crossJoin(F.broadcast(top))
-                .select("wn", merged.alias("syms"))
-                .transform(materialize)
-            )
-    return merges
+    return _learned_merges(spark, sf_dir).select(F.inline("ms"))
 
 
 # ---------------------------------------------------------------------------
@@ -323,19 +348,14 @@ def text_bpe_apply_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fewer than {BPE_MERGES} learned merges give no rows, as in the oracle.
     """
     docs = load_table(spark, sf_dir, "documents")
-    ms = text_bpe_learn_merges(spark, sf_dir).agg(
-        F.sort_array(
-            F.collect_list(F.struct("merge_rank", "left_sym", "right_sym"))
-        ).alias("ms")
-    )
+    ms = _learned_merges(spark, sf_dir)
     doc_toks = docs.select(
         "doc_id",
         F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("word"),
     )
-    encoded = F.aggregate(
-        "ms",
-        _chars("word"),
-        lambda syms, m: _merge_pair(syms, m["left_sym"], m["right_sym"]),
+    encoded = F.expr(
+        f"aggregate(ms, {_chars('word')}, (es, em) -> "
+        f"{_merge_pair('es', 'em.left_sym', 'em.right_sym')})"
     )
     wlen = (
         doc_toks.select("word")

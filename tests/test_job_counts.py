@@ -83,9 +83,8 @@ SECOND_BUILD_JOBS = {
     "sim_cosine_topk_ivf_pq_from_index": 3,
     # the bigram-count checkpoint: its aggregation stage and the checkpoint
     "text_bigram_kn_perplexity": 2,
-    # learning the merges: the word table's stage and checkpoint, then per
-    # rewriting round the top-pair stage, its broadcast and the checkpoint
-    "text_bpe_apply_merges": 14,
+    # the merges are learned by one fold inside the broadcast one-row frame
+    "text_bpe_apply_merges": 0,
 }
 
 

@@ -10,7 +10,13 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
-from csv_parquet_s3_spark.maintenance import _STAGING_MARKERS, compact, parquet_file_count
+from csv_parquet_s3_spark.maintenance import (
+    _STAGING_MARKERS,
+    compact,
+    dataset_bytes,
+    input_bytes,
+    parquet_file_count,
+)
 
 
 def _fragmented_dataset(spark, path, n_files=24, rows=6000):
@@ -25,6 +31,14 @@ def _fragmented_dataset(spark, path, n_files=24, rows=6000):
         .write.mode("overwrite")
         .parquet(path)
     )
+
+
+def test_input_bytes_sums_the_files_a_frame_reads(spark, tmp_path):
+    path = str(tmp_path / "ds")
+    _fragmented_dataset(spark, path, n_files=3, rows=300)
+    read = spark.read.parquet(path).filter(F.col("k") < 5)
+    assert input_bytes(read) == dataset_bytes(path) > 0
+    assert input_bytes(spark.range(3)) == 0
 
 
 def test_compact_reduces_files_preserves_rows(spark, tmp_path):

@@ -48,3 +48,13 @@ def test_staged_stream_reads_one_frame_per_micro_batch_in_order(
         rows = [r.i for r in drained.collect()]
     assert rows == [0, 1, 2]
     assert len(made) == 1 and not os.path.exists(made[0])
+
+
+def test_drain_leaves_no_sink_view_and_its_frames_keep_their_rows(spark):
+    from tests.conftest import SF_SMOKE
+
+    hourly = streaming_batch.stream_events_hourly_rollup(spark, SF_SMOKE)
+    sliding = streaming_batch.stream_events_sliding_rollup(spark, SF_SMOKE)
+    views = [t.name for t in spark.catalog.listTables()]
+    assert not [v for v in views if v.startswith("stream_drain_")], views
+    assert hourly.collect() and sliding.collect()

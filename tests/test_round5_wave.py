@@ -163,11 +163,15 @@ def test_bpe_greedy_merge_semantics(spark):
         [(w, 1, list(w)) for w in words[:2]] + [("z", 9, ["z"])],
         "word: string, wn: long, syms: array<string>",
     )
-    t = _top_pair(s).collect()
+    tbl = s.agg(F.collect_list(F.struct("wn", "syms")).alias("tbl"))
+    t = tbl.select(F.expr(_top_pair("tbl")).alias("t")).select("t.*").collect()
     # pair counts: (a,a)=2 from 'aaa'; (a,b)=2 from 'abab'; (b,a)=1; the
     # one-symbol word 'z' (wn 9) has no pair despite outweighing the rest.
     # tie (a,a) vs (a,b) breaks lexicographically on b: 'a' < 'b'.
     assert [(r["a"], r["b"], r["cnt"]) for r in t] == [("a", "a", 2)]
+    # no word with two symbols: no pair, so learning stops
+    no_pair = F.expr(_top_pair("filter(tbl, w -> size(w.syms) = 1)"))
+    assert tbl.select(no_pair.alias("t")).first()["t"]["a"] is None
 
     w = spark.createDataFrame(
         [(x, list(x)) for x in words], "word: string, syms: array<string>"
@@ -177,7 +181,7 @@ def test_bpe_greedy_merge_semantics(spark):
         return {
             r["word"]: r["m"]
             for r in w.select(
-                "word", _merge_pair(F.col("syms"), F.lit(a), F.lit(b)).alias("m")
+                "word", F.expr(_merge_pair("syms", f"'{a}'", f"'{b}'")).alias("m")
             ).collect()
         }
 

@@ -76,6 +76,26 @@ class TestCompaction:
         for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
             assert hi_prev <= lo_next, f"overlapping doc_id ranges: {ranges}"
 
+    def test_build_and_compaction_write_one_doc_tf_file_per_core(self, spark, tmp_path):
+        """A fresh build spreads doc_tf over one file per core, each on a
+        disjoint doc_id range, so the serving scan runs one task per core;
+        an update's merge rewrite loses that count and compaction restores
+        it."""
+        from csv_parquet_s3_spark.operators.retrieval import (
+            build_bm25_index,
+            compact_bm25_index,
+        )
+
+        full = str(tmp_path / "bm25_full")
+        build_bm25_index(spark, _docs(spark), full)
+        half = _build_half_update_half(spark, tmp_path)
+        compact_bm25_index(spark, half)
+        for idx in (full, half):
+            ranges = _doc_id_file_ranges(f"{idx}/doc_tf")
+            assert len(ranges) == spark.sparkContext.defaultParallelism, ranges
+            for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
+                assert hi_prev < lo_next, f"overlapping doc_id ranges: {ranges}"
+
     @pytest.mark.slow
     def test_compaction_preserves_served_ranking(self, spark, tmp_path):
         from csv_parquet_s3_spark.operators.retrieval import (

@@ -19,6 +19,7 @@ from csv_parquet_s3_spark.operators.similarity_index import (
     update_ivf_index,
 )
 from csv_parquet_s3_spark.sources.tables import load_table
+from csv_parquet_s3_spark.streaming.microbatch import await_stream
 
 SF = "/root/testdata/sf0.001"
 SEEDS = list(range(N_QUERIES, N_QUERIES + K_LISTS))
@@ -166,7 +167,7 @@ def test_streaming_index_updates_match_full_build(spark, tmp_path):
         .parquet(src)
     )
     q = stream_update_ivf_index(stream, inc_idx, str(tmp_path / "ck"))
-    q.awaitTermination(180)
+    await_stream(q, "ivf_index_update", 180)
 
     assert _key(topk_from_index(spark, queries, inc_idx, N_PROBE)) == want
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from csv_parquet_s3_spark.streaming.microbatch import await_stream
 from csv_parquet_s3_spark.streaming.stateful import user_lifetime_totals
 
 
@@ -40,7 +41,7 @@ def _run_stateful_scenario(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, "lifetime", 120)
     got = {r.user_id: (r.lifetime_events, r.lifetime_value)
            for r in spark.sql("SELECT * FROM lifetime").collect()}
     assert got == {1: (2, 15.0), 2: (1, 1.0)}
@@ -58,7 +59,7 @@ def _run_stateful_scenario(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q2.awaitTermination(120)
+    await_stream(q2, "lifetime2", 120)
     got2 = {r.user_id: (r.lifetime_events, r.lifetime_value)
             for r in spark.sql("SELECT * FROM lifetime2").collect()}
     # fresh checkpoint replays all files: totals include both batches

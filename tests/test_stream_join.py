@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from csv_parquet_s3_spark.sources.tables import load_table
+from csv_parquet_s3_spark.streaming.microbatch import await_stream
 from csv_parquet_s3_spark.streaming.stream_join import click_purchase_attribution
 
 SF = "/root/testdata/sf0.001"
@@ -40,7 +41,7 @@ def test_stream_stream_join_equals_batch(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
+        await_stream(q, "attrib", 180)
         got = _key(spark.sql("SELECT * FROM attrib").collect())
 
         clicks_b = ev.filter(F.col("event_type") == "click")

@@ -13,6 +13,7 @@ from csv_parquet_s3_spark.streaming.events_stream import (
     session_window_counts,
 )
 from csv_parquet_s3_spark.streaming.ingest_stream import stream_csv_to_parquet
+from csv_parquet_s3_spark.streaming.microbatch import await_stream
 
 SF = "/root/testdata/sf0.001"
 
@@ -35,7 +36,7 @@ def test_stream_csv_to_parquet_drains_and_types(spark, tmp_path):
     q = stream_csv_to_parquet(
         spark, str(csv_dir), str(tmp_path / "out"), str(tmp_path / "ckpt"), MINI
     )
-    q.awaitTermination(120)
+    await_stream(q, "csv_to_parquet", 120)
     df = spark.read.parquet(str(tmp_path / "out"))
     rows = {r.id: r for r in df.collect()}
     assert len(rows) == 3
@@ -45,7 +46,7 @@ def test_stream_csv_to_parquet_drains_and_types(spark, tmp_path):
     q2 = stream_csv_to_parquet(
         spark, str(csv_dir), str(tmp_path / "out"), str(tmp_path / "ckpt"), MINI
     )
-    q2.awaitTermination(120)
+    await_stream(q2, "csv_to_parquet", 120)
     assert spark.read.parquet(str(tmp_path / "out")).count() == 3
 
     # a newly arriving file IS picked up incrementally
@@ -53,7 +54,7 @@ def test_stream_csv_to_parquet_drains_and_types(spark, tmp_path):
     q3 = stream_csv_to_parquet(
         spark, str(csv_dir), str(tmp_path / "out"), str(tmp_path / "ckpt"), MINI
     )
-    q3.awaitTermination(120)
+    await_stream(q3, "csv_to_parquet", 120)
     assert spark.read.parquet(str(tmp_path / "out")).count() == 4
 
 
@@ -65,7 +66,7 @@ def _drain_to_memory(df, name: str):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, name, 120)
     return q
 
 
@@ -148,7 +149,7 @@ def test_watermark_bounds_streaming_state(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, "wm_state", 120)
 
     progress = q.recentProgress
     final_state = progress[-1]["stateOperators"][0]
@@ -180,7 +181,7 @@ def test_stream_upsert_sink(spark, tmp_path):
 
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
     q = stream_upsert_parquet(spark, stream, target, str(tmp_path / "ck"), key="k")
-    q.awaitTermination(120)
+    await_stream(q, "upsert_sink", 120)
 
     got = {r.k: (r.tag, r.v) for r in spark.read.parquet(target).collect()}
     assert got == {1: ("a", 1.0), 2: ("b2", 9.0), 3: ("c", 5.0)}
@@ -208,7 +209,7 @@ def test_streaming_dedup_drops_replayed_events(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, "dedup_out", 120)
     got = sorted(r.event_id for r in spark.sql("SELECT * FROM dedup_out").collect())
     want = sorted(
         r.event_id for r in dedup_event_stream(spark.read.parquet(staged)).collect()
